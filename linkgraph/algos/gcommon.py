@@ -34,3 +34,23 @@ def norm_edges(
     elif materialize == "checkpoint":
         e = e.localCheckpoint(eager=True)
     return e
+
+
+def pin_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` that keeps ``df``'s hash partitioning.
+
+    Under AQE the checkpoint records ``UnknownPartitioning(0)``, so every
+    later join against it re-shuffles it.  With AQE off for this one call
+    the checkpoint keeps e.g. ``hashpartitioning(id, P)``: co-partitioned
+    joins against it need no exchange, and the result is a plan leaf with
+    no lineage.  The query that materializes ``df`` runs as one Spark job.
+    The session's AQE setting is restored afterwards, also on error.
+    """
+    conf = df.sparkSession.conf
+    key = "spark.sql.adaptive.enabled"
+    old = conf.get(key)
+    conf.set(key, "false")
+    try:
+        return df.localCheckpoint(eager=True)
+    finally:
+        conf.set(key, old)

@@ -21,24 +21,28 @@ partitions ... pinned shuffle partitioning per superstep"):
     hub's adjacency spreads across num_salts shuffle partitions.  The static
     ``salt_map`` (src -> distinct salts) replicates a hub's rank row to
     exactly the salts its blocks live in; non-hubs stay single-copy.
-  * **Pinned partitioning**: blocks are persisted repartition(P, src, salt);
-    every superstep's join reuses it (no exchange, no sort — the SHUFFLE_HASH
-    hint keeps Spark from sort-merge-joining the big side).  Only the V-row
-    rank state shuffles per superstep, plus the map-side-combined
-    contribution aggregation.
+  * **Pinned partitioning**: the vertex table, the blocks (hash-partitioned
+    on (src, salt), or on src when hub-free), the salt map and every
+    superstep's rank state are eager local checkpoints taken with AQE off
+    (gcommon.pin_checkpoint).  Each is a lineage-free plan leaf that keeps
+    its hashpartitioning(key, P), so the joins between them need no
+    exchange and no sort (the SHUFFLE_HASH hint keeps Spark from
+    sort-merge-joining the big side).  Per superstep only the
+    map-side-combined contribution aggregation shuffles, plus the salted
+    rank copies on a graph with hubs.  A checkpoint taken under AQE would
+    record UnknownPartitioning and re-shuffle the state every superstep.
   * **Dangling mass needs no join**: with ranks summing to 1, the uniform
     dangling redistribution is a per-vertex constant recoverable from the
     raw update's total mass — S = sum(raw') = 1 - d*dm, so the correction
-    corr = (1-S)/V folds lazily into the next superstep.  The correction
-    enters through a broadcast 1-row LocalRelation (not a literal), keeping
-    generated code byte-identical across supersteps (codegen cache hits).
-  * **One job per superstep — tol mode included**: the mass sum, the
+    corr = (1-S)/V folds lazily into the next superstep as a literal.
+  * **One Spark job per superstep — tol mode included**: the mass sum, the
     dangling raw mass, and the L1 convergence delta all piggy-back on the
-    eager localCheckpoint via the Observation API (the delta's dependence
-    on the not-yet-observed total mass is broken by predicting S from the
-    previous superstep's observed dangling mass: S = 1 - d*dm exactly);
-    the checkpoint truncates lineage (the reference's "plain arrays"
-    model, by other means).
+    eager checkpoint via the Observation API (the delta's dependence on
+    the not-yet-observed total mass is broken by predicting S from the
+    previous superstep's observed dangling mass: S = 1 - d*dm exactly).
+    The checkpoint runs with AQE off, so its query is one job rather than
+    one job per query stage, and it truncates lineage (the reference's
+    "plain arrays" model, by other means).
   * Optional durable checkpoint (parquet + metrics.json) for mid-algorithm
     resume (ckpt.CheckpointManager).
 
@@ -57,6 +61,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..ckpt import CheckpointManager
+from .gcommon import pin_checkpoint
 
 DEFAULT_BLOCK_SIZE = 4096
 
@@ -208,7 +213,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     hub_degree_threshold: int | None = None,
     num_salts: int = 8,
-    lineage_truncate_every: int = 1,
     block_size: int | None = None,
     dst_buckets: int | None = None,
     initial_ranks: DataFrame | None = None,
@@ -229,7 +233,8 @@ def pagerank(
     the 2-D grid layout (bucketed_adjacency_blocks): per-task aggregation
     state bounded by V/K and a <=V-row contribution shuffle, at the cost of
     replicating each rank to min(out_degree, K) buckets — the layout that
-    survives V ~ 1e10.  Set it to ~the shuffle partition count.
+    survives V ~ 1e10.  Set it to ~the shuffle partition count.  An empty
+    vertex set gives an empty (id, rank) frame and no metrics.
     """
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
@@ -257,12 +262,13 @@ def pagerank(
                 "left",
             )
             .select("id", F.col("_s").isNull().alias("dang"))
-            .repartition(P, "id")
-            .persist()
         )
     else:
-        v = vertices.select("id").repartition(P, "id").persist()
+        v = vertices.select("id")
+    v = pin_checkpoint(v.repartition(P, "id"))
     V = v.count()
+    if V == 0:
+        return v.select("id", F.lit(0.0).alias("rank")), []
     E = edges.count()
 
     if dst_buckets:
@@ -271,6 +277,11 @@ def pagerank(
     else:
         blocks, salt_map = adjacency_blocks(edges, P, bs, num_salts)
         bucket_map = None
+    # swap the cached layout for pinned lineage-free leaves: the superstep
+    # joins then neither re-shuffle them nor re-analyze the build lineage
+    blocks, salt_map, bucket_map = (
+        _pin_cached(df) for df in (blocks, salt_map, bucket_map)
+    )
 
     ckpt = CheckpointManager(checkpoint_dir) if checkpoint_dir else None
     metrics: list[dict] = []
@@ -278,7 +289,7 @@ def pagerank(
     corr = 0.0  # lazy per-vertex additive correction (dangling mass)
     if ckpt is not None and (last := ckpt.latest()) is not None:
         ranks_raw, _ = ckpt.load(spark, last)
-        ranks_raw = ranks_raw.repartition(P, "id").localCheckpoint(eager=True)
+        ranks_raw = pin_checkpoint(ranks_raw.repartition(P, "id"))
         metrics = ckpt.history()
         start_iter = last + 1
     elif initial_ranks is not None:
@@ -288,15 +299,12 @@ def pagerank(
             initial_ranks.select("id", F.col("rank").alias("_r0")), "id", "left"
         ).select("id", F.coalesce("_r0", F.lit(1.0 / V)).alias("rank"))
         total = float(warm.agg(F.sum("rank").alias("s")).collect()[0]["s"]) or 1.0
-        ranks_raw = (
+        ranks_raw = pin_checkpoint(
             warm.select("id", (F.col("rank") / total).alias("rank"))
             .repartition(P, "id")
-            .localCheckpoint(eager=True)
         )
     else:
-        ranks_raw = v.select("id", (F.lit(1.0) / V).alias("rank")).localCheckpoint(
-            eager=True
-        )
+        ranks_raw = pin_checkpoint(v.select("id", (F.lit(1.0) / V).alias("rank")))
 
     total_iters = num_iters if num_iters is not None else max_iter
     conv_mode = num_iters is None
@@ -318,10 +326,8 @@ def pagerank(
     it = start_iter
     while it < total_iters:
         t0 = time.time()
-        # correction via broadcast 1-row LocalRelation: codegen-stable
-        corr_df = spark.createDataFrame([(float(corr),)], "corr double")
-        src_ranks = ranks_raw.crossJoin(F.broadcast(corr_df)).select(
-            F.col("id").alias("src"), (F.col("rank") + F.col("corr")).alias("rank")
+        src_ranks = ranks_raw.select(
+            F.col("id").alias("src"), (F.col("rank") + F.lit(corr)).alias("rank")
         )
         # replicate each src's rank to exactly the salts/buckets its blocks
         # occupy (hub-free 1-D graphs skip the join: every block has salt 0)
@@ -336,7 +342,7 @@ def pagerank(
             joined = blocks.join(ranks_repl.hint("shuffle_hash"), ["src", "dstb"])
         elif salt_map is None:
             # hub-free: blocks have no salt column and are partitioned on
-            # src — only the V-row rank state shuffles
+            # src, like the state — the join needs no exchange
             joined = blocks.join(src_ranks.hint("shuffle_hash"), "src")
         else:
             ranks_salted = (
@@ -358,9 +364,10 @@ def pagerank(
             F.lit((1.0 - damping) / V)
             + F.lit(damping) * F.coalesce(F.col("contrib"), F.lit(0.0))
         ).alias("rank")
-        truncate = (it + 1) % lineage_truncate_every == 0
-        delta = None
-        if conv_mode and truncate:
+        # co-partitioned V-row join (both sides hash(id, P)): no exchange
+        upd = v.join(contribs.hint("shuffle_hash"), "id", "left")
+        obs = Observation(f"mass_{it}")
+        if conv_mode:
             # ONE job per superstep, convergence check included: the mass
             # sum, the dangling raw mass, AND the L1 delta all ride the
             # checkpoint job as Observation columns.  The delta needs the
@@ -369,86 +376,44 @@ def pagerank(
             # dm = (dangling raw mass observed LAST superstep) + corr *
             # n_dang — exact up to FP summation noise (~1e-16), far inside
             # the already run-to-run-nondeterministic FP envelope of the
-            # observed sums; the ranks themselves still use the OBSERVED S,
-            # bit-identical to the two-job formulation.
+            # observed sums; the ranks themselves still use the OBSERVED S.
             S_pred = 1.0 - damping * (sd + corr * n_dang)
             corr_pred = (1.0 - S_pred) / V
             upd = (
-                v.join(contribs.hint("shuffle_hash"), "id", "left")
-                .select("id", "dang", new_rank)
-                # co-partitioned V-row join (both sides hash(id, P)): no
-                # exchange, just the zip that the old delta job re-did
+                upd.select("id", "dang", new_rank)
                 .join(
                     ranks_raw.select("id", F.col("rank").alias("_old")).hint(
                         "shuffle_hash"
                     ),
                     "id",
                 )
-            )
-            obs = Observation(f"mass_{it}")
-            upd = upd.observe(
-                obs,
-                F.sum("rank").alias("s"),
-                F.sum(
-                    F.when(F.col("dang"), F.col("rank")).otherwise(F.lit(0.0))
-                ).alias("sd"),
-                F.sum(
-                    F.abs(
-                        F.col("rank") + F.lit(corr_pred)
-                        - F.col("_old") - F.lit(corr)
-                    )
-                ).alias("delta"),
-            )
-            raw_new = upd.select("id", "rank")
-            if P != int(spark.conf.get("spark.sql.shuffle.partitions")):
-                raw_new = raw_new.repartition(P, "id")
-            raw_new = raw_new.localCheckpoint(eager=True)
-            got = obs.get
-            S = float(got["s"])
-            sd = float(got["sd"])
-            delta = float(got["delta"])
-        else:
-            raw_new = v.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id", new_rank
-            )
-            if P != int(spark.conf.get("spark.sql.shuffle.partitions")):
-                # groupBy/join above already leave hash(id, partitions);
-                # an explicit exchange is only needed when the caller
-                # pinned a different P than the session default
-                raw_new = raw_new.repartition(P, "id")
-            if truncate:
-                # piggy-back the mass sum on the checkpoint job
-                obs = Observation(f"mass_{it}")
-                raw_new = raw_new.observe(obs, F.sum("rank").alias("s"))
-                raw_new = raw_new.localCheckpoint(eager=True)
-                S = float(obs.get["s"])
-            else:
-                S = float(raw_new.agg(F.sum("rank").alias("s")).collect()[0]["s"])
-        # dangling correction from total mass: S = 1 - damping * dm
-        corr_new = (1.0 - S) / V
-
-        if conv_mode and delta is None:
-            # non-truncating superstep (lineage_truncate_every > 1):
-            # legacy separate delta job
-            delta_row = (
-                raw_new.withColumnRenamed("rank", "new_rank")
-                .join(ranks_raw, "id")
-                .agg(
+                .observe(
+                    obs,
+                    F.sum("rank").alias("s"),
+                    F.sum(
+                        F.when(F.col("dang"), F.col("rank")).otherwise(F.lit(0.0))
+                    ).alias("sd"),
                     F.sum(
                         F.abs(
-                            F.col("new_rank") + F.lit(corr_new)
-                            - F.col("rank") - F.lit(corr)
+                            F.col("rank") + F.lit(corr_pred)
+                            - F.col("_old") - F.lit(corr)
                         )
-                    ).alias("d")
+                    ).alias("delta"),
                 )
-                .collect()[0]
             )
-            delta = float(delta_row["d"])
-            sd = float(
-                raw_new.join(v.filter(F.col("dang")), "id", "left_semi")
-                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("s"))
-                .collect()[0]["s"]
-            )
+        else:
+            upd = upd.select("id", new_rank).observe(obs, F.sum("rank").alias("s"))
+        # the join already leaves hash(id, P) when P is the session default
+        # (the planner then drops this repartition); otherwise it re-pins P
+        raw_new = pin_checkpoint(upd.select("id", "rank").repartition(P, "id"))
+        got = obs.get
+        S = float(got["s"])
+        delta = None
+        if conv_mode:
+            sd = float(got["sd"])
+            delta = float(got["delta"])
+        # dangling correction from total mass: S = 1 - damping * dm
+        corr_new = (1.0 - S) / V
         secs = time.time() - t0
         m = {
             "iteration": it,
@@ -478,10 +443,16 @@ def pagerank(
             break
 
     ranks = ranks_raw.select("id", (F.col("rank") + F.lit(corr)).alias("rank"))
-    for df in (v, blocks, salt_map, bucket_map):
-        if df is not None:
-            df.unpersist()
     return ranks, metrics
+
+
+def _pin_cached(df: DataFrame | None) -> DataFrame | None:
+    """Pin a persisted frame (``pin_checkpoint``) and free its cached copy."""
+    if df is None:
+        return None
+    pinned = pin_checkpoint(df)
+    df.unpersist()
+    return pinned
 
 
 def personalized_pagerank(
@@ -498,7 +469,8 @@ def personalized_pagerank(
 
     Shares the CSR-block superstep with :func:`pagerank`; runs a fixed
     iteration count (the suite-parity mode).  The reset vector joins as a
-    broadcast (source sets are tiny relative to V).
+    broadcast (source sets are tiny relative to V).  An empty ``sources``
+    raises ``ValueError``.
     """
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
@@ -512,6 +484,9 @@ def personalized_pagerank(
     v = vertices.select("id").repartition(P, "id").persist()
     S = sources.select("id").distinct().persist()
     nS = S.count()
+    if nS == 0:
+        S.unpersist()
+        raise ValueError("personalized_pagerank: sources is empty (no id rows)")
     reset = F.broadcast(S.withColumn("_p", F.lit(1.0 / nS)))
 
     blocks, salt_map = adjacency_blocks(edges, P)
@@ -581,14 +556,15 @@ def pagerank_weighted(
     """Edge-weighted PageRank: contribution ∝ rank(src) * w(src,dst) / Σw(src,·).
 
     Weighted-adjacency blocks ``(src, dsts array, ws array, w_out)`` packed
-    once (one E-row grouping shuffle), pinned on src; per superstep only the
-    V-row rank state shuffles + one map-side-combined grouped sum, with the
+    once (one E-row grouping shuffle), pinned on src like the rank state;
+    per superstep only the map-side-combined grouped sum shuffles, with the
     mass sum fused into the checkpoint job (Observation) and the dangling
     correction folded lazily into the next superstep — the same single-job
     superstep shape as :func:`pagerank`.  Vertices whose outgoing weights
     sum to 0 (including all-zero-weight edges) are DANGLING: their blocks
     are dropped and their mass redistributes uniformly, so ranks always sum
-    to 1.  Returns ranks(id, rank) after exactly ``num_iters`` supersteps.
+    to 1.  Returns ranks(id, rank) after exactly ``num_iters`` supersteps,
+    or an empty frame for an empty vertex set.
     """
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
@@ -599,8 +575,10 @@ def pagerank_weighted(
             .union(edges.select(F.col("dst").alias("id")))
             .distinct()
         )
-    v = vertices.select("id").repartition(P, "id").persist()
+    v = pin_checkpoint(vertices.select("id").repartition(P, "id"))
     V = v.count()
+    if V == 0:
+        return v.select("id", F.lit(0.0).alias("rank"))
 
     blocks = (
         edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
@@ -612,16 +590,14 @@ def pagerank_weighted(
         )
         .filter(F.col("w_out") > 0)  # Σw == 0 → dangling, not a NaN factory
         .repartition(P, "src")
-        .persist()
     )
-    blocks.count()
+    blocks = pin_checkpoint(blocks)
 
-    ranks = v.select("id", (F.lit(1.0) / V).alias("rank")).localCheckpoint(eager=True)
+    ranks = pin_checkpoint(v.select("id", (F.lit(1.0) / V).alias("rank")))
     corr = 0.0  # lazy uniform dangling correction, folded in next superstep
     for it in range(num_iters):
-        corr_df = spark.createDataFrame([(float(corr),)], "corr double")
-        src_ranks = ranks.crossJoin(F.broadcast(corr_df)).select(
-            F.col("id").alias("src"), (F.col("rank") + F.col("corr")).alias("rank")
+        src_ranks = ranks.select(
+            F.col("id").alias("src"), (F.col("rank") + F.lit(corr)).alias("rank")
         )
         contribs = (
             blocks.join(src_ranks.hint("shuffle_hash"), "src")
@@ -644,13 +620,9 @@ def pagerank_weighted(
             ).alias("rank"),
         ).repartition(P, "id")
         obs = Observation(f"wmass_{it}")
-        raw_new = raw_new.observe(obs, F.sum("rank").alias("s"))
-        ranks = raw_new.localCheckpoint(eager=True)
+        ranks = pin_checkpoint(raw_new.observe(obs, F.sum("rank").alias("s")))
         S = float(obs.get["s"])
         # Σ raw' = 1 - damping * dangling_mass  =>  per-vertex share:
         corr = (1.0 - S) / V
 
-    out = ranks.select("id", (F.col("rank") + F.lit(corr)).alias("rank"))
-    v.unpersist()
-    blocks.unpersist()
-    return out
+    return ranks.select("id", (F.col("rank") + F.lit(corr)).alias("rank"))
