@@ -10,7 +10,6 @@ Layout:
   datagen    — deterministic synthetic Common-Crawl-style pages fixture
   ingest     — html -> outlinks (vectorized pandas UDFs), url densification
   graph      — LinkGraph: edge table + degrees/adjacency/sample/filter
-  skew       — hub detection + salted join helpers
   ckpt       — per-iteration checkpoint/resume with metrics lineage
   algos      — pagerank, components, labelprop, triangles, motifs
   textops    — lang-id, quality, tokens, fingerprints over documents

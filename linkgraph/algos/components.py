@@ -1,28 +1,34 @@
 """Connected components via iterative min-label propagation (north rule).
 
-Undirected view of the edge table; every vertex starts labeled with its own
-id; each superstep takes the min over {own label} ∪ {neighbor labels};
-terminates when no label changes.  Converges in O(diameter) supersteps;
-each superstep joins the V-row label state against pinned CSR-style
-adjacency blocks (pagerank.adjacency_blocks: hubs split/salted, join keys
-~V rows not E) and takes one map-side-combined grouped min.
+Undirected view of the edge table (gcommon.norm_edges); every vertex
+starts labeled with its own id; each superstep takes the min over
+{own label} ∪ {neighbor labels}; terminates when no label changes.
+Converges in O(diameter) supersteps.  The superstep is this update rule on
+the gcommon kernel: the V-row label state ``propagate``s to pinned
+CSR-style adjacency blocks (``adjacency_blocks``: hubs split/salted, join
+keys ~V rows not E), one map-side-combined grouped min, and the pinned
+``iterate`` loop — one Spark job per superstep.
 
 Exactness gate: labels equal the BFS oracle exactly (label = min vertex id
 in the component) — the analogue of the reference's exact counters in
-/root/reference/naive_implementation/.
+its naive_implementation/.
 """
 
 from __future__ import annotations
 
-import gc
-import time
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import CheckpointManager
-from .gcommon import norm_edges
-from .pagerank import adjacency_blocks
+from .gcommon import (
+    build_blocks,
+    iterate,
+    labels_changed,
+    norm_edges,
+    pin_checkpoint,
+    pin_vertices,
+    propagate,
+    vertex_set,
+)
 
 
 def connected_components(
@@ -41,72 +47,42 @@ def connected_components(
     neighbor)``), so any start with component <= id per vertex converges
     to the same fixpoint (the component-min vertex id) in as many rounds
     as the delta moved the frontier, not the full graph diameter.
-    Checkpoint resume takes precedence over ``initial_labels``."""
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    Checkpoint resume takes precedence over ``initial_labels``.  An empty
+    vertex set gives an empty frame and no metrics."""
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    v = vertex_set(edges) if vertices is None else vertices.select("id")
+    v, V = pin_vertices(v, P, "connected_components")
+    if V == 0:
+        return v.select("id", F.col("id").alias("component")), []
+    # the symmetric view is pinned once: the hub probe and the block build
+    # then read it without re-running its dedup and partitioning shuffles
+    sym = pin_checkpoint(norm_edges(edges, P, materialize="none"))
+    blocks, rep, E = build_blocks(sym, P)
+    del sym  # only the block build reads it; let the cleaner free it
 
-    if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    v = vertices.select("id").repartition(P, "id").persist()
-
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    # CSR-style adjacency blocks (see pagerank.adjacency_blocks): the
-    # per-superstep join touches ~V block rows instead of E edge rows;
-    # hub vertices split/salted across blocks
-    blocks, salt_map = adjacency_blocks(sym, P)
-    E = int(blocks.agg(F.sum(F.size("dsts"))).collect()[0][0] or 0)
-
-    ckpt = CheckpointManager(checkpoint_dir) if checkpoint_dir else None
-    metrics: list[dict] = []
-    start_iter = 0
-    if ckpt is not None and (last := ckpt.latest()) is not None:
-        labels, _ = ckpt.load(spark, last)
-        labels = labels.repartition(P, "id").localCheckpoint(eager=True)
-        metrics = ckpt.history()
-        start_iter = last + 1
-    elif initial_labels is not None:
+    def init(resumed: DataFrame | None) -> DataFrame:
+        if resumed is not None:
+            return resumed
+        if initial_labels is None:
+            return pin_checkpoint(v.select("id", F.col("id").alias("component")))
         # vertices absent from the warm labels (new pages in the delta)
         # start from their own id, same as a cold start
-        labels = (
+        return pin_checkpoint(
             v.join(initial_labels.select("id", F.col("component").alias("_w")),
                    "id", "left")
             .select("id", F.coalesce(F.least(F.col("_w"), F.col("id")),
                                      F.col("id")).alias("component"))
             .repartition(P, "id")
-            .localCheckpoint(eager=True)
         )
-    else:
-        labels = v.select("id", F.col("id").alias("component")).localCheckpoint(eager=True)
 
-    for it in range(start_iter, max_iter):
-        t0 = time.time()
-        # blocks keep their pinned (src, salt) partitioning; only the V-row
-        # label state shuffles, then one map-side-combined grouped min
-        lab_src = labels.select(F.col("id").alias("src"), "component")
-        if salt_map is None:
-            # hub-free: blocks carry no salt column (src-partitioned)
-            j = blocks.join(lab_src.hint("shuffle_hash"), "src")
-        else:
-            lab_salted = lab_src.join(
-                salt_map.hint("shuffle_hash"), "src"
-            ).select("src", "component", F.explode("salts").alias("salt"))
-            j = blocks.join(lab_salted.hint("shuffle_hash"), ["src", "salt"])
+    def step(labels: DataFrame, obs) -> DataFrame:
         nb_min = (
-            j.select(F.explode("dsts").alias("id"), "component")
+            propagate(blocks, rep, labels.select(F.col("id").alias("src"), "component"))
+            .select(F.explode("dsts").alias("id"), "component")
             .groupBy("id")
             .agg(F.min("component").alias("nb_component"))
         )
-        obs = Observation(f"cc_changes_{it}")
-        updated = (
+        return (
             labels.join(nb_min.hint("shuffle_hash"), "id", "left")
             .select(
                 "id",
@@ -115,36 +91,14 @@ def connected_components(
                 ).alias("component"),
                 (F.col("nb_component") < F.col("component")).alias("_changed"),
             )
-            .repartition(P, "id")
-            # change count piggy-backs on the checkpoint job (one job/superstep)
             .observe(obs, F.coalesce(
                 F.sum(F.col("_changed").cast("long")), F.lit(0)).alias("c"))
-            .localCheckpoint(eager=True)
+            .select("id", "component")
+            .repartition(P, "id")
         )
-        changes = int(obs.get["c"])
-        new_labels = updated.select("id", "component")
-        secs = time.time() - t0
-        m = {
-            "iteration": it,
-            "labels_changed": int(changes),
-            "seconds": secs,
-            "edges_processed": E,
-            "edges_per_sec": E / secs if secs > 0 else None,
-            "num_partitions": P,
-        }
-        metrics.append(m)
-        if ckpt is not None:
-            ckpt.save(it, new_labels, m)
-        labels = new_labels
-        gc.collect()  # release prior superstep's checkpoint RDD + shuffles
-        if changes == 0:
-            break
 
-    v.unpersist()
-    blocks.unpersist()
-    if salt_map is not None:
-        salt_map.unpersist()
-    return labels, metrics
+    return iterate(edges, init, step, labels_changed, "cc_changes", P, E, max_iter,
+                   checkpoint_dir=checkpoint_dir)
 
 
 def connected_components_star(
@@ -179,11 +133,7 @@ def connected_components_star(
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
     if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+        vertices = vertex_set(edges)
     v = vertices.select("id").repartition(P, "id").persist()
 
     e = norm_edges(edges, P, materialize="checkpoint")
@@ -294,13 +244,7 @@ def bowtie_regions(
         .repartition(P, "src")
         .persist()
     )
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(P, "id")
-        .persist()
-    )
+    verts = vertex_set(e).repartition(P, "id").persist()
 
     labels, _ = strongly_connected_components(e, vertices=verts, partitions=P)
     top = (

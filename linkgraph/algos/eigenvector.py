@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import vertex_set
+
 SCALE = 1_000_000
 
 
@@ -45,13 +47,7 @@ def eigenvector_centrality(
     if not directed:
         e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     e = e.dropDuplicates(["src", "dst"]).repartition(P, "src").persist()
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(P, "id")
-        .persist()
-    )
+    verts = vertex_set(e).repartition(P, "id").persist()
 
     x = (
         verts.select("id", F.lit(SCALE).cast("long").alias("x"))

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import vertex_set
+
 
 def hits(
     edges: DataFrame,
@@ -27,11 +29,7 @@ def hits(
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
     if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+        vertices = vertex_set(edges)
     v = vertices.select("id").repartition(P, "id").persist()
     e = edges.select("src", "dst").repartition(P, "src").persist()
     e.count()

@@ -32,7 +32,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import norm_edges
+from .gcommon import norm_edges, vertex_set
 
 NUM_REGISTERS = 16
 HASH_A, HASH_B, HASH_MOD = 7919, 104729, 1 << 20  # shared with the SQL twin
@@ -75,11 +75,7 @@ def hyperball(
     e = e0.repartition(P, "dst").persist()
     e.count()
     if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+        vertices = vertex_set(edges)
 
     m = (F.col("id") * HASH_A + HASH_B) % HASH_MOD
     j = (m % B).cast("int")

@@ -1,28 +1,35 @@
 """Label propagation clustering — synchronous, deterministic tie-breaking.
 
 Each superstep every vertex adopts the most frequent label among its
-neighbors (undirected view); ties broken by the smallest label; vertices
-with no neighbors keep their label.  Runs a fixed cap of supersteps (default
-20) with early stop when a round changes nothing — fully deterministic so
-the pytest oracle check is exact (north rule: label assignments exact).
+neighbors (undirected view, gcommon.norm_edges); ties broken by the
+smallest label; vertices with no neighbors keep their label.  Runs a fixed
+cap of supersteps (default 20) with early stop when a round changes
+nothing — fully deterministic so the pytest oracle check is exact (north
+rule: label assignments exact).
 
-Per superstep: the V-row label state joins pinned CSR-style adjacency
-blocks (pagerank.adjacency_blocks: hubs split/salted, join keys ~V rows
-not E), then one (id, label) grouped count (partial agg) and a per-id
-argmax via max(struct(cnt, -label)) — no window shuffle beyond the grouped
-agg, no Python in the loop.
+The superstep is this update rule on the gcommon kernel: the V-row label
+state ``propagate``s to pinned CSR-style adjacency blocks
+(``adjacency_blocks``: hubs split/salted, join keys ~V rows not E), then
+one (id, label) grouped count (partial agg) and a per-id argmax via
+max(struct(cnt, -label)) — no window shuffle beyond the grouped agg, no
+Python in the loop, one Spark job per superstep (``iterate``).
 """
 
 from __future__ import annotations
 
-import gc
-import time
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ckpt import CheckpointManager
-from .pagerank import adjacency_blocks
+from .gcommon import (
+    build_blocks,
+    iterate,
+    labels_changed,
+    norm_edges,
+    pin_checkpoint,
+    pin_vertices,
+    propagate,
+    vertex_set,
+)
 
 
 def label_propagation(
@@ -32,51 +39,25 @@ def label_propagation(
     partitions: int | None = None,
     checkpoint_dir: str | None = None,
 ) -> tuple[DataFrame, list[dict]]:
-    """Returns (labels(id, label), per-iteration metrics)."""
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    """Returns (labels(id, label), per-iteration metrics); an empty vertex
+    set gives an empty frame and no metrics."""
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    v = vertex_set(edges) if vertices is None else vertices.select("id")
+    v, V = pin_vertices(v, P, "label_propagation")
+    if V == 0:
+        return v.select("id", F.col("id").alias("label")), []
+    # the symmetric view is pinned once: the hub probe and the block build
+    # then read it without re-running its dedup and partitioning shuffles
+    sym = pin_checkpoint(norm_edges(edges, P, materialize="none"))
+    blocks, rep, E = build_blocks(sym, P)
+    del sym  # only the block build reads it; let the cleaner free it
 
-    if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id"))).distinct()
-        )
-    v = vertices.select("id").repartition(P, "id").persist()
-
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    blocks, salt_map = adjacency_blocks(sym, P)
-    E = int(blocks.agg(F.sum(F.size("dsts"))).collect()[0][0] or 0)
-
-    ckpt = CheckpointManager(checkpoint_dir) if checkpoint_dir else None
-    metrics: list[dict] = []
-    start_iter = 0
-    if ckpt is not None and (last := ckpt.latest()) is not None:
-        labels, _ = ckpt.load(spark, last)
-        labels = labels.repartition(P, "id").localCheckpoint(eager=True)
-        metrics = ckpt.history()
-        start_iter = last + 1
-    else:
-        labels = v.select("id", F.col("id").alias("label")).localCheckpoint(eager=True)
-
-    for it in range(start_iter, max_iter):
-        t0 = time.time()
-        # each vertex receives every neighbor's label: join the V-row state
-        # against the pinned blocks (src carries the label, dsts receive it)
-        lab_src = labels.select(F.col("id").alias("src"), "label")
-        if salt_map is None:
-            # hub-free: blocks carry no salt column (src-partitioned)
-            j = blocks.join(lab_src.hint("shuffle_hash"), "src")
-        else:
-            lab_salted = lab_src.join(
-                salt_map.hint("shuffle_hash"), "src"
-            ).select("src", "label", F.explode("salts").alias("salt"))
-            j = blocks.join(lab_salted.hint("shuffle_hash"), ["src", "salt"])
-        nb = j.select(F.explode("dsts").alias("id"), "label")
+    def step(labels: DataFrame, obs) -> DataFrame:
+        # each vertex receives every neighbor's label: src carries the
+        # label, dsts receive it
+        nb = propagate(
+            blocks, rep, labels.select(F.col("id").alias("src"), "label")
+        ).select(F.explode("dsts").alias("id"), "label")
         # mode with min-label tie-break: argmax of (count, -label)
         best = (
             nb.groupBy("id", "label")
@@ -85,40 +66,19 @@ def label_propagation(
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m"))
             .select("id", (-F.col("m.neg")).alias("nb_label"))
         )
-        obs = Observation(f"lp_changes_{it}")
-        updated = (
+        new = F.coalesce("nb_label", F.col("label"))
+        return (
             labels.join(best.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                F.coalesce("nb_label", F.col("label")).alias("new_label"),
-                (F.coalesce("nb_label", F.col("label")) != F.col("label")).alias("_chg"),
-            )
-            .repartition(P, "id")
+            .select("id", new.alias("label"), (new != F.col("label")).alias("_chg"))
             .observe(obs, F.coalesce(
                 F.sum(F.col("_chg").cast("long")), F.lit(0)).alias("c"))
-            .localCheckpoint(eager=True)
+            .select("id", "label")
+            .repartition(P, "id")
         )
-        changes = int(obs.get["c"])
-        new_labels = updated.select("id", F.col("new_label").alias("label"))
-        secs = time.time() - t0
-        m = {
-            "iteration": it,
-            "labels_changed": changes,
-            "seconds": secs,
-            "edges_processed": E,
-            "edges_per_sec": E / secs if secs > 0 else None,
-            "num_partitions": P,
-        }
-        metrics.append(m)
-        if ckpt is not None:
-            ckpt.save(it, new_labels, m)
-        labels = new_labels
-        gc.collect()  # release prior superstep's checkpoint RDD + shuffles
-        if changes == 0:
-            break
 
-    v.unpersist()
-    blocks.unpersist()
-    if salt_map is not None:
-        salt_map.unpersist()
-    return labels, metrics
+    return iterate(
+        edges,
+        lambda resumed: resumed if resumed is not None
+        else pin_checkpoint(v.select("id", F.col("id").alias("label"))),
+        step, labels_changed, "lp_changes", P, E, max_iter, checkpoint_dir=checkpoint_dir,
+    )

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import vertex_set
+
 SCALE = 1_000_000
 
 
@@ -57,13 +59,7 @@ def salsa(
         .persist()
     )
     ed.count()
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition(P, "id")
-        .persist()
-    )
+    verts = vertex_set(e).repartition(P, "id").persist()
 
     state = verts.select(
         "id",

@@ -35,6 +35,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import vertex_set
+
 
 def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
     return df.repartition(P, *keys).localCheckpoint(eager=True)
@@ -52,11 +54,7 @@ def strongly_connected_components(
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
     if vertices is None:
-        vertices = (
-            edges.select(F.col("src").alias("id"))
-            .union(edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+        vertices = vertex_set(edges)
     active_v = _ckpt(vertices.select("id").distinct(), P, "id")
     active_e = _ckpt(
         edges.select("src", "dst").filter(F.col("src") != F.col("dst"))

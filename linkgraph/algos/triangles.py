@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import DEFAULT_BLOCK_SIZE, hub_split
+
 _U_DENOM = float(1 << 40)
 
 
@@ -194,62 +196,30 @@ def _rank_lt(d1: Column, v1: Column, d2: Column, v2: Column) -> Column:
     return (d1 < d2) | ((d1 == d2) & (v1 < v2))
 
 
-DEFAULT_ADJ_BLOCK = 4096
-
-
 def _blocked_sym_adjacency(
-    sym: DataFrame, elem: Column, block_size: int = DEFAULT_ADJ_BLOCK
+    sym: DataFrame, elem: Column, block_size: int = DEFAULT_BLOCK_SIZE
 ) -> DataFrame:
     """Hub-split blocked adjacency over a prepared symmetric view ``sym``
     (columns ``x`` = anchor vertex, ``w`` = neighbor id, plus any payload
     columns ``elem`` reads): returns ``(x, bi, nbrs sorted array)`` rows
-    with per-row arrays bounded by ~``block_size`` — the estimator-side
-    twin of ``pagerank.adjacency_blocks`` hub splitting.
+    with per-row arrays bounded by ~``block_size`` — ``gcommon.hub_split``,
+    the core ``adjacency_blocks`` is built on.
 
     ``elem`` is the per-neighbor element expression collected into the
     arrays — ``F.col("w")`` for plain neighbor lists,
     ``F.struct("eid", "w")`` for the multiplan sampler's edge-id-carrying
     variant; ONE implementation serves both.
 
-    A vertex with degree <= block_size gets ONE block (bi = 0); a hub is
-    split into ceil(d / block_size) blocks by ``pmod(xxhash64(w), nb)``,
-    so no task ever materializes a mega-hub's full adjacency in one array
-    (a 10^8-degree hub would otherwise be a multi-GB single row in one
-    collect_list group).  The hub set is tiny by definition (degree >
-    block_size) and is broadcast, so the build costs one count-only degree
-    shuffle plus one grouping shuffle — no E-row joins.
-
     Determinism: arrays are sorted within a block and blocks are keyed by
     the deterministic ``bi``, so a two-level pick (global index ->
     bi-ordered block offsets, see _two_level_pick) is a pure function of
     the data at any partition layout.
     """
-    deg = sym.groupBy("x").agg(F.count(F.lit(1)).alias("_d"))
-    hubs = deg.filter(F.col("_d") > block_size)
-    if hubs.limit(1).count() == 0:
-        return sym.groupBy("x").agg(
-            F.sort_array(F.collect_list(elem)).alias("nbrs")
-        ).select("x", F.lit(0).cast("int").alias("bi"), "nbrs")
-    hub_b = F.broadcast(hubs)
-    nonhub = (
-        sym.join(hub_b.select("x"), "x", "left_anti")
-        .groupBy("x")
-        .agg(F.sort_array(F.collect_list(elem)).alias("nbrs"))
-        .select("x", F.lit(0).cast("int").alias("bi"), "nbrs")
-    )
-    nb = F.ceil(F.col("_d") / block_size).cast("int")
-    hub = (
-        sym.join(hub_b, "x")
-        .withColumn("bi", F.pmod(F.xxhash64("w"), nb).cast("int"))
-        .groupBy("x", "bi")
-        .agg(F.sort_array(F.collect_list(elem)).alias("nbrs"))
-        .select("x", "bi", "nbrs")
-    )
-    return nonhub.union(hub)
+    return hub_split(sym, "x", "w", elem, block_size)[0].select("x", "bi", "nbrs")
 
 
 def _blocked_adjacency(
-    o: DataFrame, block_size: int = DEFAULT_ADJ_BLOCK
+    o: DataFrame, block_size: int = DEFAULT_BLOCK_SIZE
 ) -> DataFrame:
     """Plain-neighbor blocked adjacency of the canonical edge list ``o``
     (a, b): symmetric view + _blocked_sym_adjacency with ``elem = w``."""

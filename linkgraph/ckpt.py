@@ -9,6 +9,8 @@ convergence metrics so a killed job resumes mid-algorithm.  Protocol:
 The state parquet is written to a ``.tmp`` directory and atomically
 renamed; ``metrics.json`` is written last and is the completeness marker —
 a checkpoint without it is ignored on resume (so a kill mid-write is safe).
+``<dir>/identity.json`` binds the directory to the graph and parameters
+that wrote it (see :meth:`CheckpointManager.bind`).
 Reloading from parquet also truncates Spark lineage (the reference's
 "plain arrays, no lineage" model, by other means).
 """
@@ -30,6 +32,36 @@ class CheckpointManager:
 
     def _iter_dir(self, iteration: int) -> str:
         return os.path.join(self.dir, f"iter_{iteration:05d}")
+
+    def bind(self, identity: dict) -> None:
+        """Bind the directory to one graph and parameter set.
+
+        Without a complete checkpoint, ``identity`` is stored (replacing any
+        left by an earlier graph); otherwise it must equal the stored one,
+        or ``ValueError`` names the first field that differs.  Complete
+        checkpoints without ``identity.json`` are refused too: nothing then
+        tells which graph wrote them.  Resuming against another graph or
+        other parameters would silently continue someone else's state.
+        """
+        path = os.path.join(self.dir, "identity.json")
+        if self.latest() is None:
+            with open(path + ".tmp", "w") as f:
+                json.dump(identity, f)
+            os.rename(path + ".tmp", path)
+            return
+        if not os.path.exists(path):
+            raise ValueError(
+                f"checkpoint {self.dir}: identity.json is missing beside its "
+                "checkpoints; resume needs the same graph and parameters"
+            )
+        with open(path) as f:
+            saved = json.load(f)
+        for k, v in identity.items():
+            if saved.get(k) != v:
+                raise ValueError(
+                    f"checkpoint {self.dir}: {k} differs (saved {saved.get(k)!r}, "
+                    f"now {v!r}); resume needs the same graph and parameters"
+                )
 
     def save(self, iteration: int, state: DataFrame, metrics: dict) -> None:
         d = self._iter_dir(iteration)

@@ -706,25 +706,6 @@ def embedding_near_dup(
     )
 
 
-def embedding_near_dup_sql(
-    table: str = "embeddings",
-    vec_expr: str = "embedding",
-    id_expr: str = "vec_id",
-    threshold: float = 0.45,
-) -> str:
-    return f"""
-WITH e AS (SELECT {id_expr} AS id, CAST({vec_expr} AS DOUBLE[]) AS v FROM {table})
-SELECT a.id AS id_a, b.id AS id_b,
-       CAST(round(list_dot_product(a.v, b.v)
-            / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-            * 1e6) AS BIGINT) AS cos_e6
-FROM e a JOIN e b ON a.id < b.id
-WHERE list_dot_product(a.v, b.v)
-      / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-      >= {threshold}
-"""
-
-
 def embedding_near_dup_banded(
     emb: DataFrame,
     vec_col: str = "embedding",

@@ -121,15 +121,6 @@ def triangle_count_oracle(edges: list[tuple[int, int]]) -> int:
     return count
 
 
-def degree_oracle(num_vertices: int, edges: list[tuple[int, int]]):
-    out_deg = np.zeros(num_vertices, dtype=np.int64)
-    in_deg = np.zeros(num_vertices, dtype=np.int64)
-    for s, d in edges:
-        out_deg[s] += 1
-        in_deg[d] += 1
-    return out_deg, in_deg
-
-
 def three_chain_count_oracle(num_vertices: int, edges: list[tuple[int, int]]) -> int:
     """Unordered 3-chains (paths on 3 distinct vertices) = sum_v C(deg_v, 2).
 

@@ -351,18 +351,14 @@ def q_dedup_clusters(spark, sf_dir):
     generation feeding a graph algorithm); cluster id = min doc_id."""
     from .. import dedup
     from ..algos import connected_components
+    from ..algos.gcommon import vertex_set
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pairs = dedup.minhash_lsh_pairs(
         docs, num_hashes=16, bands=8, jaccard_threshold=0.5
     )
     e = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    vs = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    labels, _ = connected_components(e, vertices=vs, partitions=8)
+    labels, _ = connected_components(e, vertices=vertex_set(e), partitions=8)
     return labels.select(
         F.col("id").alias("doc_id"), F.col("component").cast("long").alias("cluster")
     )
@@ -1527,14 +1523,11 @@ def q_effective_diameter(spark, sf_dir):
     of the HyperBall/HyperANF sketch; integer-exact percentile rule
     10·cum ≥ 9·total).  Guarded: refuses > EXACT_DIAG_MAX_SOURCES sources
     (the scale path is the HyperBall sketch)."""
+    from ..algos.gcommon import vertex_set
     from ..algos.paths import distance_histogram
 
     eb = edges_b(spark, sf_dir)
-    vb = (
-        eb.select(F.col("src").alias("id"))
-        .union(eb.select(F.col("dst").alias("id")))
-        .distinct()
-    )
+    vb = vertex_set(eb)
     _guard_exact_all_sources(vb.count(), "effective_diameter")
     hist = distance_histogram(eb, sources=vb, directed=False, partitions=8)
     w_cum = Window.orderBy("dist").rowsBetween(Window.unboundedPreceding, 0)

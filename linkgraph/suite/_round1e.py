@@ -713,14 +713,11 @@ def q_seed_voronoi(spark, sf_dir):
     struct-min) on the undirected derived graph B; seeds = vertices with
     id%37==1.  Crawl-shard assignment: every host labeled by its closest
     anchor; 8-round unrolled SQL twin (measured fixpoint ≤5 rounds)."""
+    from ..algos.gcommon import vertex_set
     from ..algos.voronoi import nearest_seed_partition
 
     eb = edges_b(spark, sf_dir)
-    seeds = (
-        eb.select(F.col("src").alias("id"))
-        .union(eb.select(F.col("dst").alias("id")))
-        .distinct().filter(F.col("id") % 37 == 1)
-    )
+    seeds = vertex_set(eb).filter(F.col("id") % 37 == 1)
     res, _ = nearest_seed_partition(eb, seeds, max_rounds=8, partitions=8)
     return res.select(
         F.col("id").cast("long").alias("id"),
@@ -1021,12 +1018,9 @@ REGISTRY["hourly_retention"] = (q_hourly_retention, HOURLY_RETENTION_SQL)
 
 def _urls_a(spark, sf_dir):
     """Deterministic url table for graph A vertices (host = id mod 40)."""
-    ids = (
-        edges_a(spark, sf_dir).select(F.col("src").alias("id"))
-        .union(edges_a(spark, sf_dir).select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    return ids.select(
+    from ..algos.gcommon import vertex_set
+
+    return vertex_set(edges_a(spark, sf_dir)).select(
         F.concat(F.lit("https://host"), (F.col("id") % 40).cast("string"),
                  F.lit(".example/p"), F.col("id").cast("string")).alias("url"),
         F.concat(F.lit("host"), (F.col("id") % 40).cast("string"),
@@ -2063,13 +2057,11 @@ def q_graph_center(spark, sf_dir):
     giant component (max reached count), output the vertices whose
     eccentricity equals the radius — "the most central hosts".  Guarded:
     refuses > EXACT_DIAG_MAX_SOURCES sources (scale path: HyperBall)."""
+    from ..algos.gcommon import vertex_set
     from ..algos.paths import closeness_centrality
 
     eb = edges_b(spark, sf_dir)
-    verts_all = (
-        eb.select(F.col("src").alias("id"))
-        .union(eb.select(F.col("dst").alias("id"))).distinct()
-    )
+    verts_all = vertex_set(eb)
     _guard_exact_all_sources(verts_all.count(), "graph_center")
     cc = closeness_centrality(eb, sources=verts_all, directed=False,
                               partitions=8).select("s", "reached", "ecc")

@@ -1,19 +1,26 @@
-"""PageRank's pinned superstep, checked with the session's AQE on: one Spark
-job per superstep, one Exchange per superstep on a hub-free graph and two
-on a salted one, a rank state that keeps hashpartitioning(id, P), and an
-AQE setting that ``pin_checkpoint`` always restores.  Also the degenerate
-inputs: an empty edge table and an empty personalization set."""
+"""The pinned superstep kernel (``gcommon``), checked with the session's AQE
+on: one Spark job per superstep for PageRank's three variants, connected
+components and label propagation; one Exchange per PageRank superstep on
+a hub-free graph and two on a salted one; a rank state that keeps
+hashpartitioning(id, P); and an AQE setting that ``pin_checkpoint``
+always restores.  Also the degenerate inputs (an empty edge table, a null
+id, an empty personalization set) and a checkpoint that refuses to resume
+against another graph, another damping or without its identity."""
 
 import importlib
+import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from linkgraph import datagen
+from linkgraph.algos.components import connected_components
 from linkgraph.algos.gcommon import pin_checkpoint
+from linkgraph.algos.labelprop import label_propagation
 
 prmod = importlib.import_module("linkgraph.algos.pagerank")
+gcommon = importlib.import_module("linkgraph.algos.gcommon")
 
 AQE = "spark.sql.adaptive.enabled"
 # hub-free: no src above the default block size; salted: a block size of
@@ -29,6 +36,28 @@ def rmat(spark):
     edges.unpersist()
 
 
+@pytest.fixture(scope="module")
+def path(spark):
+    """A 60-vertex path: CC and LP still change labels after 4 supersteps."""
+    return spark.createDataFrame([(i, i + 1) for i in range(59)], "src long, dst long")
+
+
+def _run(spark, case, rmat, path, n):
+    """``n`` supersteps of one kernel algorithm on a graph where it runs
+    all ``n`` of them."""
+    if case in LAYOUTS:
+        return prmod.pagerank(rmat, num_iters=n, partitions=8, **LAYOUTS[case])
+    if case == "cc":
+        return connected_components(path, max_iter=n, partitions=8)
+    if case == "lp":
+        return label_propagation(path, max_iter=n, partitions=8)
+    if case == "ppr":
+        sources = spark.createDataFrame([(0,), (3,), (7,)], "id long")
+        return prmod.personalized_pagerank(rmat, sources, num_iters=n, partitions=8)
+    weighted = rmat.withColumn("weight", (F.col("src") % 3 + 1).cast("double"))
+    return prmod.pagerank_weighted(weighted, num_iters=n, partitions=8)
+
+
 def _jobs(spark, group, fn):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -39,17 +68,16 @@ def _jobs(spark, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("layout", sorted(LAYOUTS))
-def test_pagerank_one_job_per_extra_superstep(spark, rmat, layout):
+@pytest.mark.parametrize("case", sorted(LAYOUTS) + ["cc", "lp", "ppr", "weighted"])
+def test_pagerank_one_job_per_extra_superstep(spark, rmat, path, case):
     assert spark.conf.get(AQE) == "true"
-    kw = dict(partitions=8, **LAYOUTS[layout])
-    n2 = _jobs(spark, f"pin2{layout}", lambda: prmod.pagerank(rmat, num_iters=2, **kw))
-    n4 = _jobs(spark, f"pin4{layout}", lambda: prmod.pagerank(rmat, num_iters=4, **kw))
+    n2 = _jobs(spark, f"pin2{case}", lambda: _run(spark, case, rmat, path, 2))
+    n4 = _jobs(spark, f"pin4{case}", lambda: _run(spark, case, rmat, path, 4))
     assert n4 - n2 == 2
 
 
 def _superstep_plans(monkeypatch):
-    """Record the executed plan of every frame ``pagerank`` pins."""
+    """Record the executed plan of every frame the kernel pins."""
     plans = []
 
     def spy(df):
@@ -57,7 +85,7 @@ def _superstep_plans(monkeypatch):
         plans.append(df._jdf.queryExecution().executedPlan().toString())
         return out
 
-    monkeypatch.setattr(prmod, "pin_checkpoint", spy)
+    monkeypatch.setattr(gcommon, "pin_checkpoint", spy)
     return plans
 
 
@@ -118,13 +146,55 @@ def test_pin_checkpoint_restores_aqe(spark, rmat, prior):
         spark.conf.set(AQE, old)
 
 
-@pytest.mark.parametrize("mode", [{"num_iters": 3}, {"tol": 1e-6}])
+@pytest.mark.parametrize("mode", [
+    (prmod.pagerank, {"num_iters": 3}, "rank"),
+    (prmod.pagerank, {"tol": 1e-6}, "rank"),
+    (connected_components, {}, "component"),
+    (label_propagation, {}, "label"),
+])
 def test_pagerank_empty_edges(spark, mode):
+    algo, kw, col = mode
     edges = spark.createDataFrame([], "src long, dst long")
-    ranks, metrics = prmod.pagerank(edges, partitions=8, **mode)
+    ranks, metrics = algo(edges, partitions=8, **kw)
     assert metrics == []
-    assert ranks.columns == ["id", "rank"]
+    assert ranks.columns == ["id", col]
     assert ranks.count() == 0
+
+
+@pytest.mark.parametrize("algo", [
+    prmod.pagerank, prmod.personalized_pagerank, prmod.pagerank_weighted,
+    connected_components, label_propagation,
+])
+def test_kernel_null_id_raises(spark, algo):
+    edges = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 2, 1.0), (None, 2, 1.0)], "src long, dst long, weight double"
+    )
+    kw = {"sources": spark.createDataFrame([(0,)], "id long")} \
+        if algo is prmod.personalized_pagerank else {}
+    with pytest.raises(ValueError, match="null vertex ids in column 'id'"):
+        algo(edges, partitions=8, **kw)
+
+
+def test_checkpoint_refuses_other_edges(spark, edges30, tmp_path):
+    ck = str(tmp_path / "pr")
+    prmod.pagerank(edges30, num_iters=2, partitions=8, checkpoint_dir=ck)
+    other = edges30.filter(F.col("src") != 0)
+    with pytest.raises(ValueError, match="edges differs"):
+        prmod.pagerank(other, num_iters=4, partitions=8, checkpoint_dir=ck)
+    # checkpoints whose identity is gone are refused too
+    os.remove(os.path.join(ck, "identity.json"))
+    with pytest.raises(ValueError, match="identity.json is missing"):
+        prmod.pagerank(edges30, num_iters=4, partitions=8, checkpoint_dir=ck)
+
+
+def test_checkpoint_refuses_other_damping(spark, edges30, tmp_path):
+    ck = str(tmp_path / "pr")
+    prmod.pagerank(edges30, num_iters=2, partitions=8, checkpoint_dir=ck)
+    with pytest.raises(ValueError, match="damping differs"):
+        prmod.pagerank(edges30, damping=0.9, num_iters=4, partitions=8, checkpoint_dir=ck)
+    # max_iter / num_iters / tol / partitions are not part of the identity
+    _, metrics = prmod.pagerank(edges30, num_iters=4, partitions=4, checkpoint_dir=ck)
+    assert [m["iteration"] for m in metrics] == [0, 1, 2, 3]
 
 
 def test_personalized_pagerank_empty_sources(spark, edges30):
