@@ -3,7 +3,9 @@
 Capability parity target: jy-yuan/sampling-graph-mining (ZGraph, an ASAP
 [OSDI'18] implementation) — see SURVEY.md.  The architecture is
 DataFrame/SQL-first (Catalyst + Tungsten pick physical strategies); the
-reference supplies operator *semantics* only.
+reference supplies operator *semantics* only.  The pure numpy/python
+ground-truth oracles live with the tests (tests/oracles.py), so the
+shipped package carries none.
 
 Layout:
   session    — pinned SparkSession factory
@@ -15,7 +17,6 @@ Layout:
   textops    — lang-id, quality, tokens, fingerprints over documents
   dedup      — exact / minhash-LSH / simhash / n-gram-jaccard dedup
   simsearch  — brute-force + LSH cosine top-k over embeddings
-  oracles    — pure numpy/python ground-truth implementations (tests only)
 """
 
 __version__ = "0.1.0"

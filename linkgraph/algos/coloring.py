@@ -43,13 +43,11 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import ckpt, norm_edges
+
 PRI_A = 1_000_003
 PRI_B = 12345
 PRI_M = (1 << 31) - 1
-
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
 
 
 def jones_plassmann_coloring(
@@ -68,17 +66,11 @@ def jones_plassmann_coloring(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    und = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
     pri = lambda c: (F.col(c) * PRI_A + PRI_B) % PRI_M  # noqa: E731
 
     # full adjacency (never shrinks: colored neighbors feed the mex)
-    full = _ckpt(und, P, "src")
-    active = _ckpt(full.select(F.col("src").alias("id")).distinct(), P, "id")
+    full = norm_edges(edges, P, materialize="checkpoint")
+    active = ckpt(full.select(F.col("src").alias("id")).distinct(), P, "id")
     ae = full  # active-only adjacency (shrinks each round)
     colors = spark.createDataFrame([], "id long, color int")
     metrics: list[dict] = []
@@ -89,7 +81,7 @@ def jones_plassmann_coloring(
             ae.groupBy(F.col("src").alias("id"))
             .agg(F.min((F.col("dst") * PRI_A + PRI_B) % PRI_M).alias("nmin"))
         )
-        winners = _ckpt(
+        winners = ckpt(
             active.join(nbr_min.hint("shuffle_hash"), "id", "left")
             .filter(F.col("nmin").isNull() | (pri("id") < F.col("nmin")))
             .select("id"),
@@ -114,8 +106,8 @@ def jones_plassmann_coloring(
                 .cast("int").alias("color"),
             )
         )
-        colors = _ckpt(colors.union(newc), P, "id")
-        active = _ckpt(active.join(winners.hint("shuffle_hash"), "id", "left_anti"),
+        colors = ckpt(colors.union(newc), P, "id")
+        active = ckpt(active.join(winners.hint("shuffle_hash"), "id", "left_anti"),
                        P, "id")
         n_active = active.count()
         metrics.append(
@@ -124,7 +116,7 @@ def jones_plassmann_coloring(
         )
         if n_active == 0:
             break
-        ae = _ckpt(
+        ae = ckpt(
             ae.join(active.withColumnRenamed("id", "src").hint("shuffle_hash"),
                     "src", "left_semi")
             .join(active.withColumnRenamed("id", "dst").hint("shuffle_hash"),

@@ -21,12 +21,12 @@ from pyspark.sql import functions as F
 
 from .gcommon import (
     build_blocks,
+    gather,
     iterate,
     labels_changed,
     norm_edges,
     pin_checkpoint,
     pin_vertices,
-    propagate,
     vertex_set,
 )
 
@@ -76,14 +76,8 @@ def connected_components(
         )
 
     def step(labels: DataFrame, obs) -> DataFrame:
-        nb_min = (
-            propagate(blocks, rep, labels.select(F.col("id").alias("src"), "component"))
-            .select(F.explode("dsts").alias("id"), "component")
-            .groupBy("id")
-            .agg(F.min("component").alias("nb_component"))
-        )
         return (
-            labels.join(nb_min.hint("shuffle_hash"), "id", "left")
+            gather(labels, blocks, rep, F.min, nb_component=F.col("component"))
             .select(
                 "id",
                 F.least(
@@ -237,13 +231,7 @@ def bowtie_regions(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .persist()
-    )
+    e = norm_edges(edges, P, directed=True)
     verts = vertex_set(e).repartition(P, "id").persist()
 
     labels, _ = strongly_connected_components(e, vertices=verts, partitions=P)

@@ -23,9 +23,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
+from .gcommon import ckpt
 
 
 def densest_subgraph(
@@ -38,7 +36,7 @@ def densest_subgraph(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    cur = _ckpt(
+    cur = ckpt(
         edges.select(F.least("src", "dst").alias("a"),
                      F.greatest("src", "dst").alias("b"))
         .filter(F.col("a") != F.col("b"))
@@ -50,7 +48,7 @@ def densest_subgraph(
 
     for rnd in range(max_rounds):
         t0 = time.time()
-        v = _ckpt(
+        v = ckpt(
             cur.select(F.col("a").alias("id"))
             .union(cur.select(F.col("b").alias("id"))).distinct(),
             P, "id",
@@ -66,9 +64,9 @@ def densest_subgraph(
             .union(cur.select(F.col("b").alias("id")))
             .groupBy("id").agg(F.count(F.lit(1)).alias("d"))
         )
-        keep = _ckpt(
+        keep = ckpt(
             deg.filter(F.col("d") * nv > 2 * ne).select("id"), P, "id")
-        cur = _ckpt(
+        cur = ckpt(
             cur.join(keep.withColumnRenamed("id", "a").hint("shuffle_hash"),
                      "a", "left_semi")
             .join(keep.withColumnRenamed("id", "b").hint("shuffle_hash"),
@@ -79,4 +77,4 @@ def densest_subgraph(
                         "density_e9": key, "seconds": time.time() - t0})
 
     out = best_v.select("id", F.lit(best_key).cast("long").alias("density_e9"))
-    return _ckpt(out, P, "id"), metrics
+    return ckpt(out, P, "id"), metrics

@@ -14,21 +14,23 @@ engines compute the identical expression, making per-vertex scores
 bit-equal across engines (the per-step-quantization recipe shared with
 Katz / SALSA / weighted PageRank).
 
-Plan shape per superstep: one state ⋈ edges shuffle-hash join grouped by
-dst (map-side combinable), one 1-row max aggregate entering as a
-broadcast cross join, one left join back to the vertex set; state
-hash-partitioned on id, lineage truncated per step.  The reference has
-no spectral ranking — north-rule capability widening beside PageRank
-(/root/reference has only sampled pattern counts; our centrality family
-mirrors its exact-oracle test pattern, naive_implementation/).
+The superstep is this update rule on the gcommon kernel: the pinned state
+holds the raw sums s, joined with the sum of x sent along the
+self-loop-free, deduplicated edges (``gather``, ``simple_graph``), one
+Spark job per superstep.  max s rides the pin as an Observation and
+enters the next superstep (or the output) as a literal, so the state's x
+is computed where it is read: no 1-row max aggregate is joined back.  The
+reference has no spectral ranking — north-rule capability widening beside
+PageRank (the reference has only sampled pattern counts; our centrality
+family mirrors its exact-oracle test pattern, naive_implementation/).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import vertex_set
+from .gcommon import build_blocks, gather, iterate, pin_checkpoint, simple_graph
 
 SCALE = 1_000_000
 
@@ -40,47 +42,34 @@ def eigenvector_centrality(
     partitions: int | None = None,
 ) -> DataFrame:
     """Returns (id, eig_e6) after ``iters`` quantized power supersteps."""
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e, v, V = simple_graph(edges, P, "eigenvector_centrality", directed)
+    mx = SCALE  # max of the state's sums s: x₀ = round(1e6 · 1e6 / 1e6) = 1e6
+    s0 = v.select("id", F.lit(SCALE).cast("long").alias("s"))
 
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if not directed:
-        e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.dropDuplicates(["src", "dst"]).repartition(P, "src").persist()
-    verts = vertex_set(e).repartition(P, "id").persist()
-
-    x = (
-        verts.select("id", F.lit(SCALE).cast("long").alias("x"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
-        s = (
-            e.join(x.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("x").alias("s"))
+    def x() -> Column:
+        return F.when(F.col("s").isNull(), F.lit(0).cast("long")).otherwise(
+            F.round(
+                F.col("s").cast("double") * F.lit(float(SCALE)) / F.lit(float(mx))
+            ).cast("long")
         )
-        m = s.agg(F.max("s").alias("mx"))
-        x = (
-            verts.join(s.hint("shuffle_hash"), "id", "left")
-            .crossJoin(F.broadcast(m))
-            .select(
-                "id",
-                F.when(
-                    F.col("s").isNull(), F.lit(0).cast("long")
-                )
-                .otherwise(
-                    F.round(
-                        F.col("s").cast("double")
-                        * F.lit(float(SCALE))
-                        / F.col("mx").cast("double")
-                    ).cast("long")
-                )
-                .alias("x"),
-            )
+
+    if V == 0:
+        return s0.select("id", x().alias("eig_e6"))
+    blocks, rep, E = build_blocks(e, P)
+
+    def step(state: DataFrame, obs) -> DataFrame:
+        return (
+            gather(state, blocks, rep, F.sum, _s=x())
+            .select("id", F.col("_s").alias("s"))
+            .observe(obs, F.max("s").alias("mx"))
             .repartition(P, "id")
-            .localCheckpoint(eager=True)
         )
-    e.unpersist()
-    verts.unpersist()
-    return x.select("id", F.col("x").alias("eig_e6"))
+
+    def record(got: dict) -> tuple[dict, bool]:
+        nonlocal mx
+        mx = got["mx"]
+        return {"max_sum": mx}, False
+
+    state, _ = iterate(e, lambda _: pin_checkpoint(s0), step, record, "eig", P, E, iters)
+    return state.select("id", x().alias("eig_e6"))

@@ -10,9 +10,16 @@
 * ``propagate``: joins the per-source state to its blocks under any
   replication layout (hub-free, salted, or the grid's destination buckets),
   given as ``rep``: None or (replication map, block key column).
+* ``gather``: the superstep shape built on it (below).
 * ``iterate``: the superstep loop (resume, timing, metrics, checkpoint
-  save, stop test) that PageRank's three variants, connected components
-  and label propagation run on.
+  save, stop test).
+
+Every vertex program on the kernel has one superstep shape: its pinned
+state joins ``agg(propagate(blocks, rep, state))``, and that is its only
+per-vertex input.  PageRank's three variants, connected components, label
+propagation, Katz, eigenvector, SALSA, HITS and HyperBall run on it.
+Global scalars a superstep needs (a norm, a max, a deficit) ride its
+Observation and enter the next superstep as literals.
 
 Reference parity: the loop replaces ZGraph's OpenMP reduction +
 MPI_Allreduce superstep (ZGraph's src/ZGraphInstance.cpp:257-297);
@@ -42,6 +49,11 @@ def vertex_set(edges: DataFrame) -> DataFrame:
     )
 
 
+def flip(edges: DataFrame) -> DataFrame:
+    """(src, dst) of the reversed edges."""
+    return edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+
+
 def norm_edges(
     edges: DataFrame,
     partitions: int,
@@ -58,7 +70,7 @@ def norm_edges(
     """
     e = edges.select("src", "dst")
     if not directed:
-        e = e.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        e = e.union(flip(edges))
     e = (
         e.filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
@@ -70,6 +82,13 @@ def norm_edges(
     elif materialize == "checkpoint":
         e = e.localCheckpoint(eager=True)
     return e
+
+
+def ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
+    """Eager ``localCheckpoint`` of ``df`` repartitioned on ``keys``: the
+    lineage cut of the loops off the kernel (under AQE it forgets the
+    partitioning; ``pin_checkpoint`` keeps it)."""
+    return df.repartition(P, *keys).localCheckpoint(eager=True)
 
 
 def pin_checkpoint(df: DataFrame) -> DataFrame:
@@ -112,6 +131,18 @@ def pin_vertices(v: DataFrame, P: int, algo: str) -> tuple[DataFrame, int]:
             "(taken from the edges' src and dst when no vertices are given)"
         )
     return v, int(got["n"])
+
+
+def simple_graph(
+    edges: DataFrame, P: int, algo: str, directed: bool = True
+) -> tuple[DataFrame, DataFrame, int]:
+    """(e, v, V): the self-loop-free, deduplicated edges (``norm_edges``)
+    pinned on src, and their vertex set pinned on id (``pin_vertices``).
+    The vertex set's self-loop test is null-safe, so a null id reaches
+    ``pin_vertices``, which raises naming it."""
+    loop = F.col("src").eqNullSafe(F.col("dst"))
+    v, V = pin_vertices(vertex_set(edges.filter(~loop)), P, algo)
+    return pin_checkpoint(norm_edges(edges, P, directed, materialize="none")), v, V
 
 
 def pin_blocks(blocks: DataFrame) -> tuple[DataFrame, int]:
@@ -242,10 +273,42 @@ def propagate(
     return blocks.join(repl.hint("shuffle_hash"), ["src", key])
 
 
+def gather(
+    state: DataFrame,
+    blocks: DataFrame,
+    rep: tuple[DataFrame, str] | None,
+    agg: Callable[[str], Column],
+    **vals: Column,
+) -> DataFrame:
+    """The superstep shape: the state (id, ...) left-joined with ``agg`` of
+    each of ``vals`` over the vertex's in-edges.
+
+    A value is a column of the source's state row and its block row
+    (``out_degree``, ...), taken once per block row (below the explode)
+    from the state ``propagate``d to the blocks.  Both sides are hash(id),
+    so the join needs no exchange; the state is the only per-vertex input.
+    """
+    sent = propagate(blocks, rep, state.withColumnRenamed("id", "src")).select(
+        "dsts", *(c.alias(k) for k, c in vals.items())
+    )
+    got = (
+        sent.select(F.explode("dsts").alias("id"), *vals)
+        .groupBy("id")
+        .agg(*(agg(k).alias(k) for k in vals))
+    )
+    return state.join(got.hint("shuffle_hash"), "id", "left")
+
+
 def labels_changed(got: dict) -> tuple[dict, bool]:
     """``iterate``'s record for label algorithms observing their change
     count as ``c``: stop when no label changed."""
     return {"labels_changed": int(got["c"])}, got["c"] == 0
+
+
+def l1_change(got: dict) -> tuple[dict, bool]:
+    """``iterate``'s record for fixed-superstep programs observing their
+    state's L1 change as ``delta``: it never stops early."""
+    return {"l1_delta": got["delta"]}, False
 
 
 def iterate(

@@ -2,11 +2,17 @@
 directed link graph.
 
 New link-graph capability alongside PageRank (no reference analogue; the
-oracle is the textbook power iteration in numpy, oracles.hits_oracle).
-Per iteration: auth = normalize(A^T hub), hub = normalize(A auth), each a
-single pinned-partition join + map-side-combined grouped sum; L2 norms via
-Observation-free scalar aggs (2 tiny jobs per iteration at V rows).
-Fixed iteration count for exact cross-engine parity.
+oracle is the textbook power iteration in numpy, tests/oracles.py
+``hits_oracle``).  Per iteration: auth = normalize(A^T hub), hub =
+normalize(A auth), over the edges as given (duplicates count) and the
+``vertices`` set.  Each half-step is one superstep of the gcommon kernel:
+the authority half-step ``propagate``s hub scores to blocks built on the
+edges, the hub half-step authority scores to blocks built on the
+reversed edges, one Spark job each.  The state holds the raw sums; each
+one's L2 norm rides its half-step's pin as an Observation and enters as
+a literal where the scores are next read (the other half-step, or the
+output), so no norm needs a job of its own.  Fixed iteration count for
+exact cross-engine parity.
 """
 
 from __future__ import annotations
@@ -14,7 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import vertex_set
+from .gcommon import (
+    build_blocks,
+    flip,
+    gather,
+    iterate,
+    pin_checkpoint,
+    pin_vertices,
+    vertex_set,
+)
 
 
 def hits(
@@ -25,61 +39,45 @@ def hits(
 ) -> DataFrame:
     """Returns (id, hub, authority) after ``num_iters`` synchronous updates,
     each score vector L2-normalized."""
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    v = vertex_set(edges) if vertices is None else vertices.select("id")
+    v, V = pin_vertices(v, P, "hits")
+    norm = {"hub": 1.0, "authority": 1.0}  # L2 norms of the state's raw sums
 
-    if vertices is None:
-        vertices = vertex_set(edges)
-    v = vertices.select("id").repartition(P, "id").persist()
-    e = edges.select("src", "dst").repartition(P, "src").persist()
-    e.count()
+    def unit(col: str):
+        return (F.col(col) / F.lit(norm[col])).alias(col)
 
-    state = v.select(
-        "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
-    ).localCheckpoint(eager=True)
+    state0 = v.select("id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority"))
+    if V == 0:
+        return state0
+    e = pin_checkpoint(edges.select("src", "dst").repartition(P, "src"))
+    fwd, frep, E = build_blocks(e, P)
+    bwd, brep, _ = build_blocks(flip(e), P)
 
-    def _norm(df: DataFrame, col: str) -> float:
-        row = df.agg(F.sqrt(F.sum(F.col(col) * F.col(col))).alias("n")).collect()[0]
-        return float(row["n"]) or 1.0
+    # a superstep is one half-step: (blocks, rep, sent score, updated score)
+    halves = [(fwd, frep, "hub", "authority"), (bwd, brep, "authority", "hub")]
+    k = 0
 
-    for _ in range(num_iters):
-        # authority(d) = sum of hub(s) over in-edges
-        a = (
-            e.join(
-                state.select(F.col("id").alias("src"), "hub").hint("shuffle_hash"),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("hub").alias("a_raw"))
+    def step(state: DataFrame, obs) -> DataFrame:
+        nonlocal k
+        blocks, rep, sent, upd = halves[k % 2]
+        k += 1
+        # authority(d) = Σ hub(s) over in-edges; hub(s) = Σ authority(d)
+        # over out-edges
+        return (
+            gather(state, blocks, rep, F.sum, n=unit(sent))
+            .select("id", sent, F.coalesce("n", F.lit(0.0)).alias(upd))
+            .observe(obs, F.sqrt(F.sum(F.col(upd) * F.col(upd))).alias(upd))
+            .select("id", "hub", "authority")
+            .repartition(P, "id")
         )
-        state = (
-            state.join(a.hint("shuffle_hash"), "id", "left")
-            .select("id", "hub", F.coalesce("a_raw", F.lit(0.0)).alias("authority"))
-        )
-        an = _norm(state, "authority")
-        state = state.select(
-            "id", "hub", (F.col("authority") / F.lit(an)).alias("authority")
-        ).localCheckpoint(eager=True)
-        # hub(s) = sum of authority(d) over out-edges
-        h = (
-            e.join(
-                state.select(F.col("id").alias("dst"), "authority").hint(
-                    "shuffle_hash"
-                ),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("authority").alias("h_raw"))
-        )
-        state = (
-            state.join(h.hint("shuffle_hash"), "id", "left")
-            .select("id", F.coalesce("h_raw", F.lit(0.0)).alias("hub"), "authority")
-        )
-        hn = _norm(state, "hub")
-        state = state.select(
-            "id", (F.col("hub") / F.lit(hn)).alias("hub"), "authority"
-        ).repartition(P, "id").localCheckpoint(eager=True)
 
-    v.unpersist()
-    e.unpersist()
-    return state
+    def record(got: dict) -> tuple[dict, bool]:
+        ((upd, n),) = got.items()  # the updated score's norm
+        norm[upd] = float(n) or 1.0
+        return {f"{upd}_norm": norm[upd]}, False
+
+    state, _ = iterate(
+        e, lambda _: pin_checkpoint(state0), step, record, "hits", P, E, 2 * num_iters
+    )
+    return state.select("id", unit("hub"), unit("authority"))

@@ -19,10 +19,13 @@ SQL twin reproduces every register and the e6-quantized estimate bit-for-bit
 /root/reference/naive_implementation/, applied to a cardinality sketch).
 
 Scale: registers live as B small-int columns on one row per vertex (no
-row blow-up); each superstep is one edges ⋈ state join + a 1-row-per-vertex
-grouped max — the same shuffle shape as a PageRank superstep, pinned on
-``partitions``.  B=16 gives ~26% relative error (1.04/sqrt(B)); production
-would raise B, not change the plan.
+row blow-up).  The superstep is this update rule on the gcommon kernel:
+the pinned state ``propagate``s to blocks built on the reversed
+simple-graph edges (keyed by dst, hubs split and salted), one grouped
+max per vertex, joined back into the state — a PageRank superstep's
+shape, one Spark job, with the registers' total increase observed on the
+pin.  The output covers exactly ``vertices``.  B=16 gives ~26% relative
+error (1.04/sqrt(B)); production would raise B, not change the plan.
 """
 
 from __future__ import annotations
@@ -32,7 +35,17 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import norm_edges, vertex_set
+from .gcommon import (
+    build_blocks,
+    flip,
+    iterate,
+    gather,
+    l1_change,
+    norm_edges,
+    pin_checkpoint,
+    pin_vertices,
+    vertex_set,
+)
 
 NUM_REGISTERS = 16
 HASH_A, HASH_B, HASH_MOD = 7919, 104729, 1 << 20  # shared with the SQL twin
@@ -63,58 +76,55 @@ def hyperball(
     ``ball_e6`` = round(alpha·B²·2^32·1e6 / sum_int) — the raw HLL estimate
     in e6 units, one correctly-rounded double division from integers.
     """
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     B = NUM_REGISTERS
-
-    # counters flow dst -> src (ball along out-links), so the loop joins on
-    # dst: pin the normalized edge table on dst ONCE — every superstep's
-    # join then reuses the persisted partitioning and only the V-row
-    # register state shuffles (same discipline as the PageRank blocks)
-    e0 = norm_edges(edges, P, directed=directed, materialize="none")
-    e = e0.repartition(P, "dst").persist()
-    e.count()
-    if vertices is None:
-        vertices = vertex_set(edges)
+    v = vertex_set(edges) if vertices is None else vertices.select("id")
+    v, V = pin_vertices(v, P, "hyperball")
 
     m = (F.col("id") * HASH_A + HASH_B) % HASH_MOD
     j = (m % B).cast("int")
     rho = _rho(F.shiftright(m, 4)).cast("int")
     rcols = [f"r{i}" for i in range(B)]
-    cur = (
-        vertices.select(
-            "id",
-            *[
-                F.when(j == i, rho).otherwise(F.lit(0)).cast("int").alias(f"r{i}")
-                for i in range(B)
-            ],
-        )
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-
-    for _ in range(radius):
-        nbr = e.join(
-            cur.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst"
-        ).select(F.col("src").alias("id"), *rcols)
-        cur = (
-            cur.select("id", *rcols)
-            .union(nbr)
-            .groupBy("id")
-            .agg(*[F.max(c).alias(c) for c in rcols])
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
-        )
-
-    e.unpersist()
-    # 2^(32 - M_j) as a BIGINT shift (pyspark's shiftright helper wants a
-    # literal shift count, so spell the column-shift in SQL)
-    sum_int = reduce(
-        lambda a, b: a + b,
-        [F.expr(f"shiftright(cast(4294967296 as bigint), {c})") for c in rcols],
-    ).alias("sum_int")
-    return cur.select("id", sum_int).select(
+    cur0 = v.select(
         "id",
-        "sum_int",
-        F.round(F.lit(EST_NUM_E6) / F.col("sum_int")).cast("long").alias("ball_e6"),
+        *[F.when(j == i, rho).otherwise(F.lit(0)).cast("int").alias(c) for i, c in enumerate(rcols)],
     )
+
+    def out(cur: DataFrame) -> DataFrame:
+        # 2^(32 - M_j) as a BIGINT shift (pyspark's shiftright helper wants
+        # a literal shift count, so spell the column-shift in SQL)
+        sum_int = reduce(
+            lambda a, b: a + b,
+            [F.expr(f"shiftright(cast(4294967296 as bigint), {c})") for c in rcols],
+        ).alias("sum_int")
+        return cur.select("id", sum_int).select(
+            "id",
+            "sum_int",
+            F.round(F.lit(EST_NUM_E6) / F.col("sum_int")).cast("long").alias("ball_e6"),
+        )
+
+    if V == 0:
+        return out(cur0)
+    # counters flow dst -> src (ball along out-links): the blocks are built
+    # on the reversed simple-graph edges, keyed by dst
+    e = pin_checkpoint(norm_edges(edges, P, directed=directed, materialize="none"))
+    blocks, rep, E = build_blocks(flip(e), P)
+
+    def step(cur: DataFrame, obs) -> DataFrame:
+        # greatest() skips the null registers of a vertex no counter reached
+        merged = [F.greatest(c, f"n{c}") for c in rcols]
+        return (
+            gather(cur, blocks, rep, F.max, **{f"n{c}": F.col(c) for c in rcols})
+            .select(
+                "id",
+                *[r.alias(c) for r, c in zip(merged, rcols)],
+                reduce(lambda a, b: a + b, [r - F.col(c) for r, c in zip(merged, rcols)])
+                .alias("_d"),
+            )
+            .observe(obs, F.sum("_d").alias("delta"))
+            .select("id", *rcols)
+            .repartition(P, "id")
+        )
+
+    cur, _ = iterate(e, lambda _: pin_checkpoint(cur0), step, l1_change, "hyperball", P, E, radius)
+    return out(cur)

@@ -14,10 +14,11 @@ identical integers, making per-vertex scores bit-equal across engines
 HyperBall).  With α < 1/deg_max the iteration contracts; the suite runs
 a fixed 4 supersteps against a 4-step unrolled SQL twin.
 
-Each superstep is one state ⋈ edges join grouped by dst (map-side
-combinable) plus a left join back to the vertex set — the engine's
-standard superstep shape, state hash-partitioned on id, lineage
-truncated per step.
+The superstep is this update rule on the gcommon kernel: the pinned
+state joins the sum of its copies sent along the self-loop-free,
+deduplicated edges (``gather``; ``simple_graph``, blocks hub-split and
+salted), one Spark job per superstep; the state's L1 change rides
+the pin as an Observation.
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import vertex_set
+from .gcommon import build_blocks, gather, iterate, l1_change, pin_checkpoint, simple_graph
 
 SCALE = 1_000_000
 
@@ -37,38 +38,22 @@ def katz_centrality(
     partitions: int | None = None,
 ) -> DataFrame:
     """Returns (id, katz_e6) after ``iters`` quantized supersteps."""
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e, v, V = simple_graph(edges, P, "katz_centrality")
+    x0 = v.select("id", F.lit(SCALE).cast("long").alias("x"))
+    if V == 0:
+        return x0.withColumnRenamed("x", "katz_e6")
+    blocks, rep, E = build_blocks(e, P)
 
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .persist()
-    )
-    verts = vertex_set(e).repartition(P, "id").persist()
-
-    x = verts.select("id", F.lit(SCALE).cast("long").alias("x"))
-    x = x.repartition(P, "id").localCheckpoint(eager=True)
-    for _ in range(iters):
-        contrib = (
-            e.join(x.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("x").alias("s"))
-        )
-        x = (
-            verts.join(contrib.hint("shuffle_hash"), "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(SCALE)
-                    + F.round(F.lit(alpha) * F.coalesce("s", F.lit(0))).cast("long")
-                ).alias("x"),
-            )
+    def step(x: DataFrame, obs) -> DataFrame:
+        new = F.lit(SCALE) + F.round(F.lit(alpha) * F.coalesce("s", F.lit(0))).cast("long")
+        return (
+            gather(x, blocks, rep, F.sum, s=F.col("x"))
+            .select("id", new.alias("x"), F.abs(new - F.col("x")).alias("_d"))
+            .observe(obs, F.sum("_d").alias("delta"))
+            .select("id", "x")
             .repartition(P, "id")
-            .localCheckpoint(eager=True)
         )
-    e.unpersist()
-    verts.unpersist()
-    return x.select("id", F.col("x").alias("katz_e6"))
+
+    x, _ = iterate(e, lambda _: pin_checkpoint(x0), step, l1_change, "katz", P, E, iters)
+    return x.withColumnRenamed("x", "katz_e6")

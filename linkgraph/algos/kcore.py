@@ -5,7 +5,7 @@ survivors are the k-core.  Each round is one grouped degree count + one
 broadcast-able semi-join filter (the removed set shrinks the edge table);
 lineage truncated per round.  Converges in O(peeling depth) rounds; early
 exit when a round removes nothing.  New link-graph capability (no
-reference analogue); oracle: oracles.kcore_oracle.
+reference analogue); oracle: tests/oracles.py kcore_oracle.
 """
 
 from __future__ import annotations
@@ -28,14 +28,7 @@ def kcore_vertices(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    sym = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .localCheckpoint(eager=True)
-    )
+    sym = norm_edges(edges, P, materialize="checkpoint")
     for _ in range(max_rounds):
         keep = (
             sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))

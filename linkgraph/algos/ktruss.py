@@ -36,9 +36,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
+from .gcommon import ckpt
 
 
 def _rank_table(e: DataFrame, P: int) -> DataFrame:
@@ -49,7 +47,7 @@ def _rank_table(e: DataFrame, P: int) -> DataFrame:
     rank keeps out-degrees O(√m₀) as the edge set shrinks, so the peel
     loop pays the ranking's two E-row joins but never re-aggregates
     degrees per round."""
-    return _ckpt(
+    return ckpt(
         e.select(F.col("a").alias("id"))
         .union(e.select(F.col("b").alias("id")))
         .groupBy("id")
@@ -103,7 +101,7 @@ def ktruss_edges(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = _ckpt(
+    e = ckpt(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
@@ -118,7 +116,7 @@ def ktruss_edges(
     for rnd in range(max_rounds):
         t0 = time.time()
         keep = _support(e, rank).filter(F.col("supp") >= k - 2).select("a", "b")
-        e2 = _ckpt(e.join(keep.hint("shuffle_hash"), ["a", "b"], "left_semi"), P, "a")
+        e2 = ckpt(e.join(keep.hint("shuffle_hash"), ["a", "b"], "left_semi"), P, "a")
         n2 = e2.count()
         metrics.append(
             {"round": rnd, "edges": n2, "removed": n - n2, "seconds": time.time() - t0}
@@ -160,7 +158,7 @@ def truss_numbers(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = _ckpt(
+    e = ckpt(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
@@ -172,7 +170,7 @@ def truss_numbers(
     tri = _tri_id_sorted(e)
     # one incidence row per (triangle, member edge), carrying the OTHER
     # two member edges' keys — built once, reused every round
-    inc = _ckpt(
+    inc = ckpt(
         tri.select(
             F.col("x").alias("ea"), F.col("y").alias("eb"),
             F.col("x").alias("o1a"), F.col("z").alias("o1b"),
@@ -189,7 +187,7 @@ def truss_numbers(
         P, "ea",
     )
     supp = inc.groupBy("ea", "eb").agg(F.count(F.lit(1)).alias("t"))
-    cur = _ckpt(
+    cur = ckpt(
         e.join(supp.withColumnRenamed("ea", "a").withColumnRenamed("eb", "b"),
                ["a", "b"], "left")
         .select("a", "b", F.coalesce(F.col("t"), F.lit(0)).cast("long").alias("t")),
@@ -217,7 +215,7 @@ def truss_numbers(
             .agg(F.max(F.when(F.col("v") >= F.col("rn"), F.col("rn"))
                        .otherwise(F.lit(0))).alias("h"))
         )
-        nxt = _ckpt(
+        nxt = ckpt(
             cur.join(
                 h.withColumnRenamed("ea", "a").withColumnRenamed("eb", "b")
                 .hint("shuffle_hash"),

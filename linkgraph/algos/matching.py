@@ -29,13 +29,11 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import ckpt
+
 PRI_A = 1_000_003
 PRI_B = 12345
 PRI_M = (1 << 31) - 1
-
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
 
 
 def _key():
@@ -52,7 +50,7 @@ def maximal_matching(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = _ckpt(
+    e = ckpt(
         edges.select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
@@ -71,7 +69,7 @@ def maximal_matching(
             .groupBy("v")
             .agg(F.min("key").alias("mk"))
         )
-        w = _ckpt(
+        w = ckpt(
             ke.join(
                 vmin.select(F.col("v").alias("a"), F.col("mk").alias("mka"))
                 .hint("shuffle_hash"), "a")
@@ -87,12 +85,12 @@ def maximal_matching(
         if n_w == 0:
             break
         parts.append(w)
-        mv = _ckpt(
+        mv = ckpt(
             w.select(F.col("a").alias("v")).union(w.select(F.col("b").alias("v")))
             .distinct(),
             P, "v",
         )
-        e = _ckpt(
+        e = ckpt(
             e.join(mv.withColumnRenamed("v", "a").hint("shuffle_hash"),
                    "a", "left_anti")
             .join(mv.withColumnRenamed("v", "b").hint("shuffle_hash"),
@@ -107,4 +105,4 @@ def maximal_matching(
     out = parts[0]
     for p_ in parts[1:]:
         out = out.union(p_)
-    return _ckpt(out, P, "a"), metrics
+    return ckpt(out, P, "a"), metrics

@@ -24,13 +24,11 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import ckpt, norm_edges
+
 PRI_A = 1_000_003
 PRI_B = 12345
 PRI_M = (1 << 31) - 1
-
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
 
 
 def maximal_independent_set(
@@ -42,18 +40,12 @@ def maximal_independent_set(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    und = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
+    ae = norm_edges(edges, P, materialize="checkpoint")
     pri = lambda c: (F.col(c) * PRI_A + PRI_B) % PRI_M  # noqa: E731
 
-    active = _ckpt(
-        und.select(F.col("src").alias("id")).distinct(), P, "id"
+    active = ckpt(
+        ae.select(F.col("src").alias("id")).distinct(), P, "id"
     )
-    ae = _ckpt(und, P, "src")
     mis_parts: list[DataFrame] = []
     metrics: list[dict] = []
 
@@ -69,7 +61,7 @@ def maximal_independent_set(
             .filter(F.col("nmin").isNull() | (pri("id") < F.col("nmin")))
             .select("id")
         )
-        w = _ckpt(winners, P, "id")
+        w = ckpt(winners, P, "id")
         n_win = w.count()
         mis_parts.append(w)
         # remove winners and their neighbors from the active set
@@ -79,7 +71,7 @@ def maximal_independent_set(
             .select(F.col("dst").alias("id"))
             .dropDuplicates(["id"])
         )
-        active = _ckpt(
+        active = ckpt(
             active.join(w.hint("shuffle_hash"), "id", "left_anti")
             .join(loser.hint("shuffle_hash"), "id", "left_anti"),
             P, "id",
@@ -91,7 +83,7 @@ def maximal_independent_set(
         )
         if n_active == 0:
             break
-        ae = _ckpt(
+        ae = ckpt(
             ae.join(active.withColumnRenamed("id", "src").hint("shuffle_hash"),
                     "src", "left_semi")
             .join(active.withColumnRenamed("id", "dst").hint("shuffle_hash"),
@@ -102,4 +94,4 @@ def maximal_independent_set(
     out = mis_parts[0]
     for p_ in mis_parts[1:]:
         out = out.union(p_)
-    return _ckpt(out, P, "id"), metrics
+    return ckpt(out, P, "id"), metrics

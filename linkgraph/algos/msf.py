@@ -19,7 +19,7 @@ join-agg superstep shape of the PageRank loop.
 Reference parity: the reference has no MSF, but this is the standard
 link-graph backbone-extraction companion to its components/clustering
 toolkit; semantics fixed by the exact Kruskal oracle
-(oracles.msf_oracle), mirroring the reference's exact-counter test
+(tests/oracles.py msf_oracle), mirroring the reference's exact-counter test
 pattern (sampling/Graph.cpp:169-291).
 """
 
@@ -30,9 +30,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
+from .gcommon import ckpt
 
 
 def boruvka_msf(
@@ -51,10 +49,10 @@ def boruvka_msf(
     spark = wedges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    we = _ckpt(
+    we = ckpt(
         wedges.select("a", "b", "w").dropDuplicates(["a", "b"]), P, "a"
     )
-    labels = _ckpt(
+    labels = ckpt(
         we.select(F.col("a").alias("id"))
         .union(we.select(F.col("b").alias("id")))
         .distinct()
@@ -68,7 +66,7 @@ def boruvka_msf(
         t0 = time.time()
         la = labels.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
         lb = labels.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
-        el = _ckpt(
+        el = ckpt(
             we.join(la.hint("shuffle_hash"), "a")
             .join(lb.hint("shuffle_hash"), "b")
             .filter(F.col("ca") != F.col("cb"))
@@ -84,7 +82,7 @@ def boruvka_msf(
             F.col("w"), F.col("a").alias("ka"), F.col("b").alias("kb"),
             F.col("ca"), F.col("cb"),
         )
-        chosen = _ckpt(
+        chosen = ckpt(
             el.select(F.col("ca").alias("comp"), key.alias("e"))
             .union(el.select(F.col("cb").alias("comp"), key.alias("e")))
             .groupBy("comp").agg(F.min("e").alias("e"))
@@ -101,7 +99,7 @@ def boruvka_msf(
         # re-map vertex labels through it
         cgraph = chosen.select(F.col("ca").alias("src"), F.col("cb").alias("dst"))
         cmap, _ = connected_components(cgraph, partitions=P)
-        labels = _ckpt(
+        labels = ckpt(
             labels.join(
                 cmap.select(F.col("id").alias("comp"),
                             F.col("component").alias("newc"))
@@ -119,4 +117,4 @@ def boruvka_msf(
         .select("a", "b", "w")
     for p_ in forest_parts[1:]:
         out = out.union(p_)
-    return _ckpt(out.dropDuplicates(["a", "b"]), P, "a"), metrics
+    return ckpt(out.dropDuplicates(["a", "b"]), P, "a"), metrics

@@ -14,6 +14,14 @@ rank-to-block join, and the ``iterate`` loop.  Two things differ between
 the variants: the teleport term t (1/V, or personalized PageRank's reset
 vector) and the per-edge contribution expression.
 
+  * **The state is the superstep's only per-vertex input**: it carries
+    the reset column and the dangling flag from the start, and the update
+    is the rank state joined with its own contributions, so the L1 delta
+    reads the old rank from the same row.  A join of the update back to
+    the old ranks squared the pinned state's size estimate every
+    superstep, and after ~15 tol-mode supersteps the planner spent
+    minutes a superstep on that number.  The vertex table is read only to
+    start the state.
   * **Pinned partitioning**: the vertex table, the blocks, the salt or
     bucket map and every superstep's rank state are eager local
     checkpoints taken with AQE off (gcommon.pin_checkpoint).  Each is a
@@ -162,14 +170,15 @@ def _supersteps(
     """The PageRank superstep shared by all three variants.
 
     ``tele`` is the teleport vector t: a per-vertex constant (1/V) or the
-    name of a column of ``v`` that rides along in the state (personalized
-    PageRank's reset vector).  The state holds raw ranks
+    name of a column of ``v`` (personalized PageRank's reset vector).
+    Every column of ``v`` besides id (the reset vector, the ``dang`` flag)
+    rides along in the state.  The state holds raw ranks
     r' = (1-d)·t + d·Σ contrib, whose total S falls short of 1 by exactly
     the mass that reached no vertex (dangling ranks); that deficit c
     returns through the teleport lazily, as r = r' + c·t in the next
     superstep.  With a uniform t, c is 1 - S.  With a reset vector, c is
     d times the input state's dangling mass, summed over the dangling
-    vertices alone (the static ``dang`` flag on ``v``) and known before
+    vertices alone (the static ``dang`` flag) and known before
     the superstep runs: the rounding error of 1 - S, which 1/V spreads
     thin, would land on the few sources.  ``start()`` gives the initial
     ranks (t if None).  ``tol`` switches to convergence mode, which needs
@@ -177,8 +186,8 @@ def _supersteps(
     """
     personal = isinstance(tele, str)
     t = F.col(tele) if personal else F.lit(tele)
-    keep = [tele] if personal else []
-    dang = "dang" in v.columns
+    carry = v.columns[1:]  # the reset column and the dangling flag ride in the state
+    dang = "dang" in carry
     # Σ_dang t: the dangling mass of t itself, so of a deficit folded as c·t
     td = float(v.filter(F.col("dang")).agg(F.sum(t)).collect()[0][0] or 0.0) if dang else 0.0
     c = 0.0  # the deficit of the current raw state
@@ -187,14 +196,17 @@ def _supersteps(
 
     def init(resumed: DataFrame | None) -> DataFrame:
         nonlocal sd
-        ranks = resumed
-        if ranks is None:
-            first = start() if start else v.select("id", t.alias("rank"), *keep)
-            ranks = pin_checkpoint(first.repartition(P, "id"))
-        if dang and (resumed is not None or start is not None):
+        if resumed is None and start is None:
+            return pin_checkpoint(v.select("id", t.alias("rank"), *carry))
+        ranks = resumed if resumed is not None else start()
+        ranks = pin_checkpoint(
+            v.join(ranks.select("id", "rank"), "id").select("id", "rank", *carry)
+            .repartition(P, "id")
+        )
+        if dang:
             # warm or resumed state: one aggregation (a start of t has td)
             sd = float(
-                ranks.join(v.filter(F.col("dang")), "id", "left_semi")
+                ranks.filter(F.col("dang"))
                 .agg(F.coalesce(F.sum("rank"), F.lit(0.0)))
                 .collect()[0][0]
             )
@@ -211,9 +223,10 @@ def _supersteps(
         new_rank = (
             F.lit(1.0 - damping) * t + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))
         ).alias("rank")
-        # co-partitioned V-row join (both sides hash(id, P)): no exchange
-        upd = v.join(contrib.hint("shuffle_hash"), "id", "left").select(
-            "id", new_rank, *keep, *(["dang"] if dang else [])
+        # the state joins its own contributions, co-partitioned (both sides
+        # hash(id, P)): no exchange, and the old rank is read from the row
+        upd = ranks.join(contrib.hint("shuffle_hash"), "id", "left").select(
+            "id", new_rank, F.col("rank").alias("_old"), *carry
         )
         # ONE job per superstep, convergence check included: the mass sum,
         # the dangling raw mass and the L1 delta ride the pin as
@@ -226,15 +239,12 @@ def _supersteps(
                 F.sum(F.when(F.col("dang"), F.col("rank")).otherwise(F.lit(0.0))).alias("sd")
             )
         if tol is not None:
-            upd = upd.join(
-                ranks.select("id", F.col("rank").alias("_old")).hint("shuffle_hash"), "id"
-            )
             aggs.append(F.sum(F.abs(
                 F.col("rank") + F.lit(nxt) * t - F.col("_old") - F.lit(c) * t
             )).alias("delta"))
         # the join already leaves hash(id, P) when P is the session default
         # (the planner then drops this repartition); otherwise it re-pins P
-        return upd.observe(obs, *aggs).select("id", "rank", *keep).repartition(P, "id")
+        return upd.observe(obs, *aggs).select("id", "rank", *carry).repartition(P, "id")
 
     def record(got: dict) -> tuple[dict, bool]:
         nonlocal c, sd

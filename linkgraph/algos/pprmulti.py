@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import norm_edges
+
 SCALE = 1_000_000
 
 
@@ -45,11 +47,7 @@ def multi_seed_ppr(
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     teleport = int(round((1.0 - damping) * SCALE))
 
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
+    e = norm_edges(edges, P, directed=True, materialize="none")
     ed = (
         e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("od")), "src")
         .repartition(P, "src")

@@ -14,10 +14,13 @@ are bit-equal across engines (same determinism contract as Katz /
 weighted PageRank).  Mass is conserved up to rounding, so no
 normalization pass is needed for a fixed iteration count.
 
-Per iteration: two state ⋈ edge joins with map-side-combined grouped
-sums, state hash-partitioned on id, lineage truncated per step — the
-engine's standard superstep shape (see PLANS.md).  Degree tables are
-computed once and rejoined per step.
+Each half-step is one superstep of the gcommon kernel, over the
+self-loop-free, deduplicated edges (``simple_graph``): the authority
+half-step ``propagate``s hub scores to blocks built on the edges, the hub
+half-step authority scores to blocks built on the reversed edges, and
+outdeg / indeg are the two block sets' ``out_degree``.  round(score /
+degree) is taken once per block row; a half-step is one Spark job, and
+the state's L1 change rides its pin.
 
 New web-ranking capability alongside PageRank/HITS (no reference
 analogue; /root/reference is a pattern-counting engine).
@@ -28,7 +31,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import vertex_set
+from .gcommon import (
+    build_blocks,
+    flip,
+    iterate,
+    l1_change,
+    gather,
+    pin_checkpoint,
+    simple_graph,
+)
 
 SCALE = 1_000_000
 
@@ -39,61 +50,35 @@ def salsa(
     partitions: int | None = None,
 ) -> DataFrame:
     """Returns (id, hub_e6, auth_e6) after ``num_iters`` quantized rounds."""
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e, v, V = simple_graph(edges, P, "salsa")
+    one = F.lit(SCALE).cast("long")
+    state0 = v.select("id", one.alias("h"), one.alias("a"))
+    out = lambda s: s.select("id", F.col("h").alias("hub_e6"), F.col("a").alias("auth_e6"))  # noqa: E731
+    if V == 0:
+        return out(state0)
+    fwd, frep, E = build_blocks(e, P)
+    bwd, brep, _ = build_blocks(flip(e), P)
+    # a superstep is one half-step: (blocks, rep, sent score, updated score)
+    halves = [(fwd, frep, "h", "a"), (bwd, brep, "a", "h")]
+    k = 0
 
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .persist()
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("idg"))
-    # edge table annotated once with both endpoint degrees
-    ed = (
-        e.join(outdeg, "src")
-        .join(indeg, "dst")
-        .repartition(P, "src")
-        .persist()
-    )
-    ed.count()
-    verts = vertex_set(e).repartition(P, "id").persist()
-
-    state = verts.select(
-        "id",
-        F.lit(SCALE).cast("long").alias("h"),
-        F.lit(SCALE).cast("long").alias("a"),
-    ).localCheckpoint(eager=True)
-
-    for _ in range(num_iters):
-        a_new = (
-            ed.join(state.select(F.col("id").alias("src"), "h").hint("shuffle_hash"),
-                    "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.round(F.col("h") / F.col("od")).cast("long")).alias("an"))
-        )
-        state = (
-            state.join(a_new.hint("shuffle_hash"), "id", "left")
-            .select("id", "h", F.coalesce("an", F.lit(0)).cast("long").alias("a"))
+    def step(state: DataFrame, obs) -> DataFrame:
+        nonlocal k
+        blocks, rep, sent, upd = halves[k % 2]
+        k += 1
+        # Σ round(sent(src) / out_degree(src)) over each vertex's in-edges
+        m = F.round(F.col(sent) / F.col("out_degree")).cast("long")
+        new = F.coalesce("n", F.lit(0)).cast("long")
+        return (
+            gather(state, blocks, rep, F.sum, n=m)
+            .select("id", sent, new.alias(upd), F.abs(new - F.col(upd)).alias("_d"))
+            .observe(obs, F.sum("_d").alias("delta"))
+            .select("id", "h", "a")
             .repartition(P, "id")
-            .localCheckpoint(eager=True)
-        )
-        h_new = (
-            ed.join(state.select(F.col("id").alias("dst"), "a").hint("shuffle_hash"),
-                    "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum(F.round(F.col("a") / F.col("idg")).cast("long")).alias("hn"))
-        )
-        state = (
-            state.join(h_new.hint("shuffle_hash"), "id", "left")
-            .select("id", F.coalesce("hn", F.lit(0)).cast("long").alias("h"), "a")
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
         )
 
-    e.unpersist()
-    ed.unpersist()
-    verts.unpersist()
-    return state.select("id", F.col("h").alias("hub_e6"), F.col("a").alias("auth_e6"))
+    state, _ = iterate(
+        e, lambda _: pin_checkpoint(state0), step, l1_change, "salsa", P, E, 2 * num_iters
+    )
+    return out(state)

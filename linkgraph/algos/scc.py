@@ -35,11 +35,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import vertex_set
-
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
+from .gcommon import ckpt, norm_edges, vertex_set
 
 
 def strongly_connected_components(
@@ -55,12 +51,8 @@ def strongly_connected_components(
 
     if vertices is None:
         vertices = vertex_set(edges)
-    active_v = _ckpt(vertices.select("id").distinct(), P, "id")
-    active_e = _ckpt(
-        edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"]),
-        P, "src",
-    )
+    active_v = ckpt(vertices.select("id").distinct(), P, "id")
+    active_e = norm_edges(edges, P, directed=True, materialize="checkpoint")
     done_parts: list[DataFrame] = []
     metrics: list[dict] = []
 
@@ -78,11 +70,11 @@ def strongly_connected_components(
             # trimmed has 2-step lineage over checkpointed inputs — append
             # it lazily (no per-peel-layer checkpoint job)
             done_parts.append(trimmed.select("id", F.col("id").alias("scc")))
-            active_v = _ckpt(
+            active_v = ckpt(
                 active_v.join(trimmed.hint("shuffle_hash"), "id", "left_anti"), P, "id"
             )
             keep2 = active_v
-            active_e = _ckpt(
+            active_e = ckpt(
                 active_e.join(
                     keep2.withColumnRenamed("id", "src").hint("shuffle_hash"),
                     "src", "left_semi",
@@ -98,7 +90,7 @@ def strongly_connected_components(
             break
 
         # ---- 2. forward min-label coloring to fixpoint
-        colors = _ckpt(active_v.select("id", F.col("id").alias("c")), P, "id")
+        colors = ckpt(active_v.select("id", F.col("id").alias("c")), P, "id")
         for _ in range(max_iter):
             upd = (
                 active_e.join(
@@ -107,7 +99,7 @@ def strongly_connected_components(
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("c").alias("nc"))
             )
-            new_colors = _ckpt(
+            new_colors = ckpt(
                 colors.join(upd.hint("shuffle_hash"), "id", "left")
                 .select("id", F.least("c", F.coalesce("nc", "c")).alias("c")),
                 P, "id",
@@ -124,7 +116,7 @@ def strongly_connected_components(
 
         # ---- 3. backward membership: reach the color root within the color
         # edge (u -> w) carries flag backward w=>u when both share a color
-        ce = _ckpt(
+        ce = ckpt(
             active_e.join(colors.withColumnRenamed("id", "src")
                           .withColumnRenamed("c", "cs").hint("shuffle_hash"), "src")
             .join(colors.withColumnRenamed("id", "dst")
@@ -133,7 +125,7 @@ def strongly_connected_components(
             .select("src", "dst"),
             P, "dst",
         )
-        member = _ckpt(
+        member = ckpt(
             colors.filter(F.col("id") == F.col("c")).select("id"), P, "id"
         )  # roots
         for _ in range(max_iter):
@@ -147,9 +139,9 @@ def strongly_connected_components(
             n_grown = grown.count()
             if n_grown == 0:
                 break
-            member = _ckpt(member.union(grown), P, "id")
+            member = ckpt(member.union(grown), P, "id")
 
-        scc_now = _ckpt(
+        scc_now = ckpt(
             member.join(colors.hint("shuffle_hash"), "id").select(
                 "id", F.col("c").alias("scc")
             ),
@@ -157,10 +149,10 @@ def strongly_connected_components(
         )
         done_parts.append(scc_now)
         n_assigned = scc_now.count()
-        active_v = _ckpt(
+        active_v = ckpt(
             active_v.join(member.hint("shuffle_hash"), "id", "left_anti"), P, "id"
         )
-        active_e = _ckpt(
+        active_e = ckpt(
             active_e.join(
                 member.withColumnRenamed("id", "src").hint("shuffle_hash"),
                 "src", "left_anti",
@@ -183,7 +175,7 @@ def strongly_connected_components(
     out = done_parts[0]
     for p in done_parts[1:]:
         out = out.union(p)
-    return _ckpt(out, P, "id"), metrics
+    return ckpt(out, P, "id"), metrics
 
 
 def condensation_levels(
@@ -207,9 +199,9 @@ def condensation_levels(
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
     labels, _ = strongly_connected_components(edges, partitions=P)
-    lab = _ckpt(labels, P, "id")
+    lab = ckpt(labels, P, "id")
     sizes = lab.groupBy("scc").agg(F.count(F.lit(1)).alias("n_vertices"))
-    cond = _ckpt(
+    cond = ckpt(
         edges.select("src", "dst")
         .join(lab.withColumnRenamed("id", "src")
               .withColumnRenamed("scc", "cs").hint("shuffle_hash"), "src")
@@ -220,7 +212,7 @@ def condensation_levels(
         .dropDuplicates(["src", "dst"]),
         P, "src",
     )
-    lvl = _ckpt(
+    lvl = ckpt(
         sizes.select(F.col("scc").alias("id"), F.lit(0).cast("long").alias("lvl")),
         P, "id",
     )
@@ -230,7 +222,7 @@ def condensation_levels(
             .groupBy(F.col("dst").alias("id"))
             .agg((F.max("lvl") + 1).alias("nl"))
         )
-        new_lvl = _ckpt(
+        new_lvl = ckpt(
             lvl.join(upd.hint("shuffle_hash"), "id", "left")
             .select("id", F.greatest("lvl", F.coalesce("nl", F.lit(0))).alias("lvl")),
             P, "id",

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import norm_edges
+
 
 def simrank_truncated(
     edges: DataFrame,
@@ -37,11 +39,7 @@ def simrank_truncated(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = (
-        edges.select("src", "dst").dropDuplicates(["src", "dst"])
-        .filter(F.col("src") != F.col("dst"))
-        .repartition(P, "src").localCheckpoint(eager=True)
-    )
+    e = norm_edges(edges, P, directed=True, materialize="checkpoint")
     ind = e.groupBy(F.col("dst").alias("v")).agg(F.count(F.lit(1)).alias("n"))
     e1 = e.select(F.col("src").alias("i"), F.col("dst").alias("a"))
     e2 = e.select(F.col("src").alias("j"), F.col("dst").alias("b"))

@@ -26,9 +26,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
+from .gcommon import ckpt, norm_edges
 
 
 def nearest_seed_partition(
@@ -42,14 +40,8 @@ def nearest_seed_partition(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    und = _ckpt(
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"]),
-        P, "src",
-    )
-    state = _ckpt(
+    und = norm_edges(edges, P, materialize="checkpoint")
+    state = ckpt(
         seeds.select("id").distinct().select(
             "id", F.struct(F.lit(0).cast("long").alias("d"),
                            F.col("id").alias("l")).alias("m")),
@@ -70,7 +62,7 @@ def nearest_seed_partition(
             state.join(cand.hint("shuffle_hash"), "id", "full_outer")
             .select("id", F.least("m", "c").alias("m"))
         )
-        new_state = _ckpt(merged, P, "id")
+        new_state = ckpt(merged, P, "id")
         changed = (
             new_state.alias("n")
             .join(state.alias("o").hint("shuffle_hash"), "id", "left")
@@ -86,4 +78,4 @@ def nearest_seed_partition(
 
     out = state.select("id", F.col("m.d").alias("dist"),
                        F.col("m.l").alias("seed"))
-    return _ckpt(out, P, "id"), metrics
+    return ckpt(out, P, "id"), metrics

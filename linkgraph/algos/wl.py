@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import norm_edges
+
 
 def wl_refinement(
     edges: DataFrame,
@@ -38,14 +40,7 @@ def wl_refinement(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    und = (
-        edges.select("src", "dst")
-        .union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .localCheckpoint(eager=True)
-    )
+    und = norm_edges(edges, P, materialize="checkpoint")
     state = und.select(F.col("src").alias("id")).distinct() \
         .select("id", F.lit(1).cast("long").alias("color"))
 

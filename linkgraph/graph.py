@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .algos.gcommon import vertex_set
+from .algos.gcommon import norm_edges, vertex_set
 
 
 class LinkGraph:
@@ -71,15 +71,7 @@ class LinkGraph:
         (/root/reference/src/Graph.cpp:295-310).
         """
         if "und" not in self._cache:
-            sym = self.edges.select("src", "dst").union(
-                self.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            self._cache["und"] = (
-                sym.filter(F.col("src") != F.col("dst"))
-                .dropDuplicates(["src", "dst"])
-                .repartition(self.partitions, "src")
-                .persist()
-            )
+            self._cache["und"] = norm_edges(self.edges, self.partitions)
         return self._cache["und"]
 
     def oriented_edges(self) -> DataFrame:

@@ -4,7 +4,8 @@ PageRank allclose 1e-6, components/labels exact, triangle counts exact)."""
 import numpy as np
 import pytest
 
-from linkgraph import datagen, oracles
+from linkgraph import datagen
+import oracles
 from linkgraph.algos import (
     connected_components,
     label_propagation,

@@ -277,7 +277,7 @@ def test_quality_filter_partition_invariant(docs):
 
 
 def test_hash_classifier_matches_python(docs):
-    from linkgraph.oracles import h60_oracle
+    from oracles import h60_oracle
 
     def w_of(tok):
         b = h60_oracle(tok) % corpus.HC_DIM
@@ -296,7 +296,7 @@ def test_hash_classifier_matches_python(docs):
 def test_hash_classifier_separates_planted_classes(spark):
     # two vocabularies drawn from opposite-sign weight buckets must land
     # on opposite sides of the 0 threshold
-    from linkgraph.oracles import h60_oracle
+    from oracles import h60_oracle
 
     def w_of(tok):
         b = h60_oracle(tok) % corpus.HC_DIM

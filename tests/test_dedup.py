@@ -3,7 +3,8 @@
 import numpy as np
 import pytest
 
-from linkgraph import dedup, oracles
+from linkgraph import dedup
+import oracles
 
 BASE = ("the quick brown fox jumps over the lazy dog while the cat "
         "sleeps on the warm mat near the door")

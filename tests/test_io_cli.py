@@ -7,7 +7,7 @@ import pytest
 
 from linkgraph import cli, datagen
 from linkgraph import io as lgio
-from linkgraph import oracles
+import oracles
 
 
 @pytest.fixture(scope="module")

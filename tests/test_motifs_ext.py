@@ -2,7 +2,8 @@
 
 from pyspark.sql import functions as F
 
-from linkgraph import datagen, oracles
+from linkgraph import datagen
+import oracles
 from linkgraph.algos import motifs
 
 V = 30

@@ -14,7 +14,7 @@ counts: non-negative, each below the total, and summing to the total
 
 import pytest
 
-from linkgraph import oracles
+import oracles
 from linkgraph.algos.triangles import four_chain_count_sampled_multiplan
 from linkgraph.datagen import expected_edges
 

@@ -1,11 +1,14 @@
 """The pinned superstep kernel (``gcommon``), checked with the session's AQE
-on: one Spark job per superstep for PageRank's three variants, connected
-components and label propagation; one Exchange per PageRank superstep on
-a hub-free graph and two on a salted one; a rank state that keeps
-hashpartitioning(id, P); and an AQE setting that ``pin_checkpoint``
-always restores.  Also the degenerate inputs (an empty edge table, a null
-id, an empty personalization set) and a checkpoint that refuses to resume
-against another graph, another damping or without its identity."""
+on: one Spark job per superstep for every vertex program on it (PageRank's
+three variants, connected components, label propagation, Katz,
+eigenvector, SALSA, HITS and HyperBall); a state size estimate that grows
+linearly, not geometrically, over the supersteps; one Exchange per
+PageRank superstep on a hub-free graph and two on a salted one; a rank
+state that keeps hashpartitioning(id, P); and an AQE setting that
+``pin_checkpoint`` always restores.  Also the degenerate inputs (an empty
+edge table, a null id, an empty personalization set) and a checkpoint
+that refuses to resume against another graph, another damping or without
+its identity."""
 
 import importlib
 import os
@@ -16,8 +19,13 @@ from pyspark.sql import functions as F
 
 from linkgraph import datagen
 from linkgraph.algos.components import connected_components
+from linkgraph.algos.eigenvector import eigenvector_centrality
 from linkgraph.algos.gcommon import pin_checkpoint
+from linkgraph.algos.hits import hits
+from linkgraph.algos.hyperball import hyperball
+from linkgraph.algos.katz import katz_centrality
 from linkgraph.algos.labelprop import label_propagation
+from linkgraph.algos.salsa import salsa
 
 prmod = importlib.import_module("linkgraph.algos.pagerank")
 gcommon = importlib.import_module("linkgraph.algos.gcommon")
@@ -26,6 +34,15 @@ AQE = "spark.sql.adaptive.enabled"
 # hub-free: no src above the default block size; salted: a block size of
 # 16 splits the R-MAT graph's high-degree sources across salts
 LAYOUTS = {"hubfree": {}, "salted": {"hub_degree_threshold": 16}}
+# the fixed-superstep vertex programs, their iteration-count argument and
+# supersteps per iteration (SALSA and HITS run two half-steps)
+FIXED = {
+    "katz": (katz_centrality, "iters", 1),
+    "eigenvector": (eigenvector_centrality, "iters", 1),
+    "salsa": (salsa, "num_iters", 2),
+    "hits": (hits, "num_iters", 2),
+    "hyperball": (hyperball, "radius", 1),
+}
 
 
 @pytest.fixture(scope="module")
@@ -47,6 +64,11 @@ def _run(spark, case, rmat, path, n):
     all ``n`` of them."""
     if case in LAYOUTS:
         return prmod.pagerank(rmat, num_iters=n, partitions=8, **LAYOUTS[case])
+    if case == "tol":  # a tolerance of 0 is never reached
+        return prmod.pagerank(rmat, tol=0.0, max_iter=n, partitions=8)
+    if case in FIXED:
+        algo, arg, per = FIXED[case]
+        return algo(rmat, partitions=8, **{arg: n // per})
     if case == "cc":
         return connected_components(path, max_iter=n, partitions=8)
     if case == "lp":
@@ -68,7 +90,7 @@ def _jobs(spark, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("case", sorted(LAYOUTS) + ["cc", "lp", "ppr", "weighted"])
+@pytest.mark.parametrize("case", sorted(LAYOUTS) + ["cc", "lp", "ppr", "weighted", *FIXED])
 def test_pagerank_one_job_per_extra_superstep(spark, rmat, path, case):
     assert spark.conf.get(AQE) == "true"
     n2 = _jobs(spark, f"pin2{case}", lambda: _run(spark, case, rmat, path, 2))
@@ -76,17 +98,45 @@ def test_pagerank_one_job_per_extra_superstep(spark, rmat, path, case):
     assert n4 - n2 == 2
 
 
-def _superstep_plans(monkeypatch):
-    """Record the executed plan of every frame the kernel pins."""
+def _superstep_plans(monkeypatch, pinned=None):
+    """Record the executed plan of every frame the kernel pins (and the
+    pinned frames themselves in ``pinned``)."""
     plans = []
 
     def spy(df):
         out = pin_checkpoint(df)
         plans.append(df._jdf.queryExecution().executedPlan().toString())
+        if pinned is not None:
+            pinned.append(out)
         return out
 
     monkeypatch.setattr(gcommon, "pin_checkpoint", spy)
     return plans
+
+
+def _size_bits(df):
+    """Bit length of the optimizer's size estimate of ``df``."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()).bit_length()
+    except ValueError:  # over 4300 decimal digits: py4j cannot convert it
+        return float("inf")
+
+
+@pytest.mark.parametrize("case", ["tol", "cc", "lp", *FIXED])
+def test_superstep_state_size_estimate_grows_linearly(spark, rmat, path, monkeypatch, case):
+    """Each superstep's state keeps its origin plan's size estimate.  When
+    tol-mode PageRank joined its update back to the old state, the
+    estimate squared every superstep, and after ~15 supersteps the planner
+    spent minutes on BigInteger products.  The kernel's superstep shape,
+    the state joined with agg(propagate(blocks, state)), adds a constant
+    number of bits a superstep."""
+    pinned, n = [], 22
+    _superstep_plans(monkeypatch, pinned)
+    out = _run(spark, case, rmat, path, n)
+    if isinstance(out, tuple):
+        assert len(out[1]) == n  # no early stop: every superstep ran
+    bits = [_size_bits(df) for df in pinned[-n:]]
+    assert max(b - a for a, b in zip(bits, bits[1:])) <= 64, bits
 
 
 @pytest.mark.parametrize("layout,exchanges", [("hubfree", 1), ("salted", 2)])
@@ -98,7 +148,8 @@ def test_pagerank_superstep_plan_audit(spark, rmat, monkeypatch, layout, exchang
     assert len(re.findall(r"Exchange ", step)) == exchanges
     assert ("salt#" in step) == (layout == "salted")
     assert "Sort " not in step and "NestedLoopJoin" not in step
-    # the leaves are the pinned vertices, blocks, state and salt map; the
+    # the leaves are the pinned blocks, state (read once for its
+    # contributions, once for the update) and salt map; the
     # dangling correction is a literal, not a createDataFrame relation
     # (a Python-RDD scan, which ran a Python-worker job every superstep)
     leaves = sorted(
@@ -106,8 +157,8 @@ def test_pagerank_superstep_plan_audit(spark, rmat, monkeypatch, layout, exchang
         for cols in re.findall(r"Scan ExistingRDD\[([^\]]*)\]", step)
     )
     expected = {
-        "hubfree": ["id", "id,rank", "src,dsts,out_degree"],
-        "salted": ["id", "id,rank", "src,salt,dsts,out_degree", "src,salts"],
+        "hubfree": ["id,rank", "id,rank", "src,dsts,out_degree"],
+        "salted": ["id,rank", "id,rank", "src,salt,dsts,out_degree", "src,salts"],
     }
     assert leaves == expected[layout]
     assert "hashpartitioning(id#" in (
@@ -146,24 +197,35 @@ def test_pin_checkpoint_restores_aqe(spark, rmat, prior):
         spark.conf.set(AQE, old)
 
 
+def _no_metrics(algo):
+    """``algo``, which returns a frame only, as (frame, [])."""
+    return lambda edges, **kw: (algo(edges, **kw), [])
+
+
 @pytest.mark.parametrize("mode", [
-    (prmod.pagerank, {"num_iters": 3}, "rank"),
-    (prmod.pagerank, {"tol": 1e-6}, "rank"),
-    (connected_components, {}, "component"),
-    (label_propagation, {}, "label"),
+    (prmod.pagerank, {"num_iters": 3}, ["rank"]),
+    (prmod.pagerank, {"tol": 1e-6}, ["rank"]),
+    (connected_components, {}, ["component"]),
+    (label_propagation, {}, ["label"]),
+    (_no_metrics(katz_centrality), {}, ["katz_e6"]),
+    (_no_metrics(eigenvector_centrality), {}, ["eig_e6"]),
+    (_no_metrics(salsa), {}, ["hub_e6", "auth_e6"]),
+    (_no_metrics(hits), {}, ["hub", "authority"]),
+    (_no_metrics(hyperball), {}, ["sum_int", "ball_e6"]),
 ])
 def test_pagerank_empty_edges(spark, mode):
-    algo, kw, col = mode
+    algo, kw, cols = mode
     edges = spark.createDataFrame([], "src long, dst long")
     ranks, metrics = algo(edges, partitions=8, **kw)
     assert metrics == []
-    assert ranks.columns == ["id", col]
+    assert ranks.columns == ["id", *cols]
     assert ranks.count() == 0
 
 
 @pytest.mark.parametrize("algo", [
     prmod.pagerank, prmod.personalized_pagerank, prmod.pagerank_weighted,
     connected_components, label_propagation,
+    katz_centrality, eigenvector_centrality, salsa, hits, hyperball,
 ])
 def test_kernel_null_id_raises(spark, algo):
     edges = spark.createDataFrame(

@@ -5,7 +5,8 @@
 import pytest
 from pyspark.sql import functions as F
 
-from linkgraph import datagen, oracles
+from linkgraph import datagen
+import oracles
 
 
 @pytest.fixture(scope="module")

@@ -2,7 +2,8 @@
 
 import pytest
 
-from linkgraph import datagen, oracles
+from linkgraph import datagen
+import oracles
 from linkgraph.algos import motifs, patterns, triangles
 
 V = 30

@@ -11,7 +11,7 @@ arbitrary inputs rather than blessed datasets.
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from linkgraph import oracles
+import oracles
 
 edge_lists = st.lists(
     st.tuples(st.integers(0, 9), st.integers(0, 9)),

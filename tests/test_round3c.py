@@ -6,7 +6,7 @@ from collections import defaultdict
 from pyspark.sql import functions as F
 
 from linkgraph import sketch, suite
-from linkgraph.oracles import h60_oracle
+from oracles import h60_oracle
 
 SF = "/root/testdata/sf0.001"
 

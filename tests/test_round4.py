@@ -128,7 +128,7 @@ def _brute_remove_dup_spans(doc_rows, k):
 
 def test_remove_dup_spans_brute_force(spark):
     from linkgraph import dedup
-    from linkgraph.oracles import h60_oracle
+    from oracles import h60_oracle
 
     k = 3
     rows = [

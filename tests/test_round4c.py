@@ -15,7 +15,8 @@ from itertools import combinations
 
 from pyspark.sql import functions as F
 
-from linkgraph import dedup, oracles
+from linkgraph import dedup
+import oracles
 from linkgraph.algos.motifs import graphlet_orbits
 from linkgraph.ingest import path_prefix_rollup
 

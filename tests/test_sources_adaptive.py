@@ -6,7 +6,8 @@ import random
 
 import pytest
 
-from linkgraph import adaptive, datagen, oracles, sources
+from linkgraph import adaptive, datagen, sources
+import oracles
 
 V = 30
 EDGES = datagen.expected_edges(V)

@@ -24,7 +24,9 @@ import pytest
 
 LINKGRAPH = pathlib.Path(__file__).resolve().parent.parent / "linkgraph"
 
-MODULES = sorted(p for p in LINKGRAPH.rglob("*.py") if p.name != "__init__.py")
+# plus the numpy oracles the tests compare against, which live beside them
+ORACLES = LINKGRAPH.parent / "tests" / "oracles.py"
+MODULES = sorted(p for p in LINKGRAPH.rglob("*.py") if p.name != "__init__.py") + [ORACLES]
 
 
 def _top_level_bindings(tree: ast.Module):
@@ -45,7 +47,9 @@ def _top_level_bindings(tree: ast.Module):
         # AugAssign / calls like REGISTRY.update(...) do not rebind — skip.
 
 
-@pytest.mark.parametrize("path", MODULES, ids=lambda p: str(p.relative_to(LINKGRAPH)))
+@pytest.mark.parametrize(
+    "path", MODULES, ids=lambda p: p.name if p == ORACLES else str(p.relative_to(LINKGRAPH))
+)
 def test_no_duplicate_module_level_bindings(path):
     tree = ast.parse(path.read_text(), filename=str(path))
     seen: dict = {}

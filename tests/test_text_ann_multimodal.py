@@ -3,7 +3,8 @@
 import numpy as np
 import pytest
 
-from linkgraph import ann, multimodal, oracles, text
+from linkgraph import ann, multimodal, text
+import oracles
 
 DOCS = [
     (0, "Hello world 123 foo-bar!"),
