@@ -75,7 +75,7 @@ def connected_components(
             .repartition(P, "id")
         )
 
-    def step(labels: DataFrame, obs) -> DataFrame:
+    def step(labels: DataFrame, obs, it: int) -> DataFrame:
         return (
             gather(labels, blocks, rep, F.min, nb_component=F.col("component"))
             .select(

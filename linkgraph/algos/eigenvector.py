@@ -58,7 +58,7 @@ def eigenvector_centrality(
         return s0.select("id", x().alias("eig_e6"))
     blocks, rep, E = build_blocks(e, P)
 
-    def step(state: DataFrame, obs) -> DataFrame:
+    def step(state: DataFrame, obs, it: int) -> DataFrame:
         return (
             gather(state, blocks, rep, F.sum, _s=x())
             .select("id", F.col("_s").alias("s"))

@@ -58,7 +58,7 @@ def hits(
     halves = [(fwd, frep, "hub", "authority"), (bwd, brep, "authority", "hub")]
     k = 0
 
-    def step(state: DataFrame, obs) -> DataFrame:
+    def step(state: DataFrame, obs, it: int) -> DataFrame:
         nonlocal k
         blocks, rep, sent, upd = halves[k % 2]
         k += 1

@@ -110,7 +110,7 @@ def hyperball(
     e = pin_checkpoint(norm_edges(edges, P, directed=directed, materialize="none"))
     blocks, rep, E = build_blocks(flip(e), P)
 
-    def step(cur: DataFrame, obs) -> DataFrame:
+    def step(cur: DataFrame, obs, it: int) -> DataFrame:
         # greatest() skips the null registers of a vertex no counter reached
         merged = [F.greatest(c, f"n{c}") for c in rcols]
         return (

@@ -45,7 +45,7 @@ def katz_centrality(
         return x0.withColumnRenamed("x", "katz_e6")
     blocks, rep, E = build_blocks(e, P)
 
-    def step(x: DataFrame, obs) -> DataFrame:
+    def step(x: DataFrame, obs, it: int) -> DataFrame:
         new = F.lit(SCALE) + F.round(F.lit(alpha) * F.coalesce("s", F.lit(0))).cast("long")
         return (
             gather(x, blocks, rep, F.sum, s=F.col("x"))

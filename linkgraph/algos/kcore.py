@@ -1,21 +1,27 @@
-"""k-core decomposition by iterative peeling.
+"""k-core decomposition by iterative peeling, and core numbers.
 
-Repeatedly remove vertices of undirected degree < k until none remain; the
-survivors are the k-core.  Each round is one grouped degree count + one
-broadcast-able semi-join filter (the removed set shrinks the edge table);
+``kcore_vertices``: repeatedly remove vertices of undirected degree < k
+until none remain; the survivors are the k-core.  Each round is one
+grouped degree count + one broadcast-able semi-join filter (the removed
+set shrinks the edge table, so it stays off the superstep kernel);
 lineage truncated per round.  Converges in O(peeling depth) rounds; early
-exit when a round removes nothing.  New link-graph capability (no
-reference analogue); oracle: tests/oracles.py kcore_oracle.
+exit when a round removes nothing.
+
+``core_numbers`` is a ``gather`` program on the gcommon kernel: every
+vertex collects its neighbours' values along the symmetric view pinned
+once (``gather_edges``) and takes their H-index with one array
+expression, one Spark job per round.
+
+New link-graph capability (no reference analogue); oracle:
+tests/oracles.py kcore_oracle and core_numbers_oracle.
 """
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import norm_edges
+from .gcommon import gather_edges, iterate, norm_edges, pin_checkpoint, pin_sym
 
 
 def kcore_vertices(
@@ -62,60 +68,39 @@ def core_numbers(
     start with core(v) = deg(v); each round set core(v) to the H-index of
     its neighbors' current values (the largest h such that ≥ h neighbors
     have core ≥ h); monotonically non-increasing and converges to the exact
-    coreness.  Each round is one state ⋈ edges join + one windowed rank per
-    vertex — all built-in column expressions, converging in few rounds on
-    real graphs (rounds ≤ graph degeneracy-ish, not O(V) like sequential
-    peeling).  Per-round lineage truncation; fixpoint when no value drops.
+    coreness.  Each round ``gather``s the neighbour values as one array
+    per vertex (``collect_list``) and reads the H-index off it sorted
+    descending — no window sort — converging in few rounds on real
+    graphs (rounds ≤ graph degeneracy-ish, not O(V) like sequential
+    peeling).  Fixpoint when no value drops; the drop count rides the
+    pin as ``dropped``.
     """
-    from pyspark.sql import Window
-
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-
-    sym = norm_edges(edges, P)
-
-    core = (
-        sym.groupBy("src").agg(F.count(F.lit(1)).alias("core"))
-        .withColumnRenamed("src", "id")
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sym, E = pin_sym(edges, P, "core_numbers")
+    core = pin_checkpoint(
+        sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("core"))
         .repartition(P, "id")
-        .localCheckpoint(eager=True)
     )
-    metrics: list[dict] = []
-    for rnd in range(1, max_rounds + 1):
-        t0 = time.time()
-        # neighbor core values, ranked descending per vertex;
-        # H-index = max(min(rank, neighbor_core))
-        nb = sym.join(
-            core.withColumnRenamed("id", "dst").withColumnRenamed("core", "nc")
-            .hint("shuffle_hash"),
-            "dst",
-        ).select("src", "nc")
-        w = Window.partitionBy("src").orderBy(F.col("nc").desc())
-        h = (
-            nb.withColumn("_rn", F.row_number().over(w))
-            .groupBy("src")
-            .agg(F.max(F.least(F.col("_rn").cast("long"), F.col("nc"))).alias("h"))
-        )
-        new_core = (
-            core.join(h.withColumnRenamed("src", "id").hint("shuffle_hash"), "id")
+    if E == 0:
+        return core, []
+    # sorted descending, the values above their 0-based position are a
+    # prefix, and its length is the H-index
+    hidx = F.size(F.filter(F.sort_array("nc", asc=False), lambda x, i: x > i))
+
+    def step(core: DataFrame, obs, it: int) -> DataFrame:
+        return (
+            gather_edges(core, sym, F.collect_list, nc=F.col("core"))
+            .select("id", "core", hidx.alias("h"))
             .select("id", F.least("core", "h").alias("core"),
                     (F.col("h") < F.col("core")).alias("_drop"))
-        )
-        # drop-count rides the checkpoint job — the H-index window sort
-        # (the engine's only sorting loop) runs ONCE per round
-        from pyspark.sql import Observation
-
-        obs = Observation(f"hidx_{rnd}")
-        core = (
-            new_core.repartition(P, "id")
             .observe(obs, F.coalesce(
                 F.sum(F.col("_drop").cast("long")), F.lit(0)).alias("c"))
-            .localCheckpoint(eager=True)
             .select("id", "core")
+            .repartition(P, "id")
         )
-        dropped = int(obs.get["c"])
-        metrics.append({"round": rnd, "dropped": dropped, "seconds": time.time() - t0})
-        if dropped == 0:
-            break
-    sym.unpersist()
-    return core, metrics
+
+    return iterate(
+        edges, lambda _: core, step,
+        lambda got: ({"dropped": int(got["c"])}, got["c"] == 0),
+        "hidx", P, E, max_rounds,
+    )

@@ -7,11 +7,12 @@ cap of supersteps (default 20) with early stop when a round changes
 nothing — fully deterministic so the pytest oracle check is exact (north
 rule: label assignments exact).
 
-The superstep is this update rule on the gcommon kernel: the V-row label
-state ``propagate``s to pinned CSR-style adjacency blocks
-(``adjacency_blocks``: hubs split/salted, join keys ~V rows not E), then
-one (id, label) grouped count (partial agg) and a per-id argmax via
-max(struct(cnt, -label)) — no window shuffle beyond the grouped agg, no
+The superstep is this update rule on the gcommon kernel: a ``gather`` of
+the neighbours' labels over pinned CSR-style adjacency blocks
+(``build_blocks``: hubs split/salted, join keys ~V rows not E) by
+``mode(label, deterministic=true)``, which returns the lowest of the
+most frequent labels — the min-label tie-break.  It plans as one
+hash-based aggregate with a map-side partial: one Exchange, no Sort, no
 Python in the loop, one Spark job per superstep (``iterate``).
 """
 
@@ -22,12 +23,12 @@ from pyspark.sql import functions as F
 
 from .gcommon import (
     build_blocks,
+    gather,
     iterate,
     labels_changed,
     norm_edges,
     pin_checkpoint,
     pin_vertices,
-    propagate,
     vertex_set,
 )
 
@@ -52,23 +53,10 @@ def label_propagation(
     blocks, rep, E = build_blocks(sym, P)
     del sym  # only the block build reads it; let the cleaner free it
 
-    def step(labels: DataFrame, obs) -> DataFrame:
-        # each vertex receives every neighbor's label: src carries the
-        # label, dsts receive it
-        nb = propagate(
-            blocks, rep, labels.select(F.col("id").alias("src"), "label")
-        ).select(F.explode("dsts").alias("id"), "label")
-        # mode with min-label tie-break: argmax of (count, -label)
-        best = (
-            nb.groupBy("id", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .groupBy("id")
-            .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("m"))
-            .select("id", (-F.col("m.neg")).alias("nb_label"))
-        )
+    def step(labels: DataFrame, obs, it: int) -> DataFrame:
         new = F.coalesce("nb_label", F.col("label"))
         return (
-            labels.join(best.hint("shuffle_hash"), "id", "left")
+            gather(labels, blocks, rep, lambda k: F.mode(k, True), nb_label=F.col("label"))
             .select("id", new.alias("label"), (new != F.col("label")).alias("_chg"))
             .observe(obs, F.coalesce(
                 F.sum(F.col("_chg").cast("long")), F.lit(0)).alias("c"))

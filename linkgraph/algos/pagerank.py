@@ -212,7 +212,7 @@ def _supersteps(
             )
         return ranks
 
-    def step(ranks: DataFrame, obs) -> DataFrame:
+    def step(ranks: DataFrame, obs, it: int) -> DataFrame:
         nonlocal nxt
         src = ranks.select(F.col("id").alias("src"), (F.col("rank") + F.lit(c) * t).alias("rank"))
         contrib = (

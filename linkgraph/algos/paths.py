@@ -1,28 +1,46 @@
 """Breadth-first hop distances (single- or multi-source) over the link graph.
 
-Frontier-expansion BFS as iterative DataFrame joins: the discovered state
-``(id, dist)`` stays hash-partitioned on id; each superstep joins only the
-*frontier* (vertices discovered last round) against the edge table, then
-anti-joins the already-discovered set — so per-superstep work is
-O(edges touched by the frontier), not O(E).  Lineage is truncated every
-superstep (``localCheckpoint``), mirroring the engine's PageRank/CC loops.
+Every loop here except the walks is a program on the gcommon kernel's
+sparse-state supersteps, over the simple-graph view pinned once on src
+(``gcommon.pin_sym``; a null src or dst raises ``ValueError``):
 
-Scale notes: the frontier join shuffles on ``src`` and the dedup/anti-join
-on ``id`` — both pinned at ``partitions``; at web scale the frontier is
-the small side early on (broadcast-able) and the state join is the classic
-BFS-as-semijoin plan.  New link-graph capability (the reference has no
-path queries); oracle: pure-Python BFS in tests + a bounded recursive-CTE
-SQL twin for the driver gate.
+* ``bfs_distances`` is ``gcommon.frontier`` with no keys: superstep l
+  sends the vertices found at level l along their edges, anti-joins the
+  discovered set and appends the rest at level l + 1, so its work is
+  O(edges touched by the frontier), not O(E);
+* ``closeness_centrality`` and ``distance_histogram`` run one frontier
+  keyed by source, ``(s, v)``, for all sampled sources at once;
+* ``stress_centrality`` and ``betweenness_centrality`` share one forward
+  sweep, that frontier carrying the shortest-path counts ``sig``, and
+  one backward pass reading level l as ``state.filter(dist == l)``;
+* ``sssp_distances`` is a min-relaxation (``gcommon.relax``) sending only
+  the distances the last superstep improved.
+
+Each superstep is one Spark job whose state keeps its hash partitioning
+(the union of the old state and its new rows), and its frontier size,
+or improved count, rides the pin as an Observation.
+
+New link-graph capability (the reference has no path queries); oracle:
+pure-Python BFS in tests + a bounded recursive-CTE SQL twin for the
+parity gate.
 """
 
 from __future__ import annotations
 
-import time
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import norm_edges
+from .gcommon import (
+    flip,
+    frontier,
+    iterate,
+    norm_edges,
+    pin_checkpoint,
+    pin_edges,
+    pin_sym,
+    relax,
+    send,
+)
 
 
 def bfs_distances(
@@ -35,46 +53,13 @@ def bfs_distances(
     """Hop distance from the nearest source; returns (dist(id, dist), metrics).
 
     ``sources``: DataFrame with one ``id`` column.  Unreached vertices are
-    absent from the result (dist would be +inf).
+    absent from the result (dist would be +inf).  Empty ``sources`` give
+    an empty frame and no metrics.
     """
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-
-    e = norm_edges(edges, P, directed=directed)
-
-    state = (
-        sources.select("id").distinct()
-        .select("id", F.lit(0).cast("int").alias("dist"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-    frontier = state
-    metrics: list[dict] = []
-
-    for it in range(1, max_iter + 1):
-        t0 = time.time()
-        # frontier ⋈ edges: only edges incident to newly-found vertices;
-        # dropDuplicates before the anti-join keeps the shuffle minimal
-        nxt = (
-            e.join(
-                frontier.select(F.col("id").alias("src")).hint("shuffle_hash"), "src"
-            )
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates(["id"])
-            .join(state.hint("shuffle_hash"), "id", "left_anti")
-            .select("id", F.lit(it).cast("int").alias("dist"))
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
-        )
-        found = nxt.count()
-        metrics.append({"iteration": it, "frontier": found, "seconds": time.time() - t0})
-        if found == 0:
-            break
-        state = state.union(nxt).repartition(P, "id").localCheckpoint(eager=True)
-        frontier = nxt
-
-    e.unpersist()
-    return state, metrics
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sym, E = pin_sym(edges, P, "bfs_distances", directed)
+    start = sources.select("id").distinct().select("id", F.lit(0).cast("int").alias("dist"))
+    return frontier(sym, E, start, (), "bfs_distances", P, max_iter)
 
 
 def sssp_distances(
@@ -87,74 +72,28 @@ def sssp_distances(
 ) -> tuple[DataFrame, list[dict]]:
     """Single/multi-source shortest paths (Bellman–Ford relaxation).
 
-    Integer edge weights → exact long distances.  Per superstep: one
-    state ⋈ edges relaxation join + grouped min + compare-update, lineage
-    truncated; terminates when no distance improves (guaranteed: positive
-    weights).  Returns (dist(id, dist), metrics); unreached vertices absent.
+    Integer edge weights → exact long distances; parallel edges keep their
+    least weight.  Per superstep the distances the last one set or
+    improved relax their out-edges (``gcommon.relax``); terminates when no
+    distance improves (guaranteed: positive weights).  Returns
+    (dist(id, dist), metrics); unreached vertices absent.
     """
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-    e = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
-    if not directed:
-        e = e.union(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"),
-                F.col(weight_col).cast("long").alias("w"),
-            )
+    def view(edges: DataFrame) -> DataFrame:
+        e = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
+        if not directed:
+            e = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
+        return (
+            e.filter(F.col("src") != F.col("dst"))
+            .groupBy("src", "dst").agg(F.min("w").alias("w"))  # parallel edges: keep min
+            .repartition(P, "src")
         )
-    e = (
-        e.filter(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst").agg(F.min("w").alias("w"))  # parallel edges: keep min
-        .repartition(P, "src")
-        .persist()
-    )
-    e.count()
 
-    state = (
-        sources.select("id").distinct()
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-    metrics: list[dict] = []
-    for it in range(1, max_iter + 1):
-        t0 = time.time()
-        cand = (
-            e.join(state.withColumnRenamed("id", "src").hint("shuffle_hash"), "src")
-            .select(F.col("dst").alias("id"), (F.col("dist") + F.col("w")).alias("nd"))
-            .groupBy("id")
-            .agg(F.min("nd").alias("nd"))
-        )
-        merged = (
-            state.join(cand.hint("shuffle_hash"), "id", "full")
-            .select(
-                "id",
-                F.least("dist", "nd").alias("dist"),  # least() skips NULLs
-                (
-                    F.col("dist").isNull() | (F.col("nd") < F.col("dist"))
-                ).alias("_improved"),
-            )
-        )
-        # improved-count rides the checkpoint job (Observation) — the
-        # relaxation join + grouped min run ONCE per superstep
-        obs = Observation(f"sssp_{it}")
-        new_state = (
-            merged.select("id", "dist", "_improved")
-            .repartition(P, "id")
-            .observe(obs, F.coalesce(
-                F.sum(F.col("_improved").cast("long")), F.lit(0)).alias("c"))
-            .localCheckpoint(eager=True)
-            .select("id", "dist")
-        )
-        improved = int(obs.get["c"])
-        metrics.append({"iteration": it, "improved": improved,
-                        "seconds": time.time() - t0})
-        state = new_state
-        if improved == 0:
-            break
-    e.unpersist()
-    return state, metrics
+    e, E = pin_edges(edges, view, "sssp_distances")
+    start = sources.select("id").distinct().select("id", F.lit(0).cast("long").alias("dist"))
+    return relax(e, E, start, "dist", F.col("dist") + F.col("w"), "improved",
+                 "sssp_distances", P, max_iter)
 
 
 # deterministic-walk mixing constants (arbitrary primes; BIGINT-exact in
@@ -187,8 +126,7 @@ def random_walks(
     """
     from pyspark.sql import Window
 
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     e = norm_edges(edges, P, directed=directed, materialize="none")
     w = Window.partitionBy("src").orderBy("dst")
@@ -227,6 +165,89 @@ def random_walks(
     return res
 
 
+def _sweep(
+    edges: DataFrame,
+    sources: DataFrame,
+    directed: bool,
+    max_iter: int,
+    P: int,
+    algo: str,
+    sums: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame, list[dict]]:
+    """(sym, state, metrics): the BFS of every source at once, one
+    ``gcommon.frontier`` keyed by source over the pinned view ``sym``.
+
+    The state (s, id, dist[, sig]) holds each vertex reached from source
+    s, bounded by |S|·V rows; the loop ends after the largest
+    eccentricity.  With ``sums=("sig",)`` it carries the number of
+    shortest paths from s (level-synchronous sum over the frontier — the
+    sigma recurrence of Brandes'01).
+    """
+    sym, E = pin_sym(edges, P, algo, directed)
+    start = sources.select(F.col("id").alias("s")).distinct().select(
+        "s", F.col("s").alias("id"), F.lit(0).cast("long").alias("dist"),
+        *(F.lit(1).cast("long").alias(c) for c in sums),
+    )
+    state, metrics = frontier(sym, E, start, ("s",), algo, P, max_iter, sums)
+    return sym, state, metrics
+
+
+def _brandes(
+    edges: DataFrame,
+    sources: DataFrame,
+    directed: bool,
+    max_iter: int,
+    partitions: int | None,
+    algo: str,
+    term: Column,
+) -> DataFrame:
+    """(s, id, sig, cv): the forward sweep (``_sweep`` carrying ``sig``)
+    and the backward pass over its shortest-path DAG.
+
+    Level by decreasing level, ``cv(v) = Σ_{w ∈ succ(v)} term``, where
+    ``term`` reads the receiver's ``sig`` and the successor's ``sigw`` and
+    ``cvw``; the deepest level has cv = 0.  Backward superstep ``it`` sets
+    level l = deepest − 1 − it: it sends level l + 1 of the one pinned
+    state (``state.filter(dist == l + 1)``) along the reversed edges,
+    joins the messages, shuffled to hash(s, v), to the level-l rows of
+    the state, which already are, sums the terms with a partial aggregate
+    and sets cv on those rows: the kernel's superstep shape, one Spark
+    job.  Every term is evaluated per successor on exact integers and
+    summed as a BIGINT.  Level 0 (v = s) is no interior vertex and is not
+    computed.
+    """
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sym, fwd, metrics = _sweep(edges, sources, directed, max_iter, P, algo, ("sig",))
+    deepest = sum(1 for m in metrics if m["frontier"])
+    back = pin_checkpoint(flip(sym).repartition(P, "src")) if directed else sym
+
+    def step(state: DataFrame, obs, it: int) -> DataFrame:
+        lvl = deepest - 1 - it
+        sent = send(state.filter(F.col("dist") == lvl + 1), back, ("s",),
+                    sigw=F.col("sig"), cvw=F.col("cv"))
+        # (s, id) is unique in the state; the dedup says so to the planner,
+        # which otherwise estimates the join as the product of its sides
+        lv = (state.filter(F.col("dist") == lvl).select("s", "id", "sig")
+              .dropDuplicates(["s", "id"]))
+        got = (
+            sent.join(lv.hint("shuffle_hash"), ["s", "id"])
+            .groupBy("s", "id").agg(F.sum(term).alias("_cv"))
+        )
+        return (
+            state.join(got.hint("shuffle_hash"), ["s", "id"], "left")
+            .select("s", "id", "dist", "sig",
+                    F.when(F.col("dist") == lvl, F.coalesce("_cv", F.lit(0).cast("long")))
+                    .otherwise(F.col("cv")).alias("cv"))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .repartition(P, "s", "id")
+        )
+
+    init = fwd.withColumn("cv", F.lit(0).cast("long"))
+    out, _ = iterate(back, lambda _: init, step, lambda got: ({}, False),
+                     f"{algo}_back", P, 0, max(deepest - 1, 0))
+    return out.filter(F.col("id") != F.col("s"))  # endpoints are not interior
+
+
 def stress_centrality(
     edges: DataFrame,
     sources: DataFrame,
@@ -238,91 +259,27 @@ def stress_centrality(
     Brandes two-pass, distributed.
 
     Forward pass: composite-key multi-source BFS carrying per-(s, v) the
-    number of shortest paths ``sigma`` (level-synchronous sum over the
-    frontier — the σ recurrence of Brandes'01).  Backward pass, level by
-    decreasing level over the shortest-path DAG:
-    ``c(v) = Σ_{w ∈ succ(v)} (1 + c(w))`` — the number of shortest-path
-    *suffixes* leaving v; then ``stress(v) = Σ_s σ(s,v)·c(s,v)``, the count
-    of shortest paths from sampled sources passing THROUGH v.  This is the
-    betweenness dependency recursion with the σ(s,t) division dropped, so
-    every quantity stays a BIGINT — no float accumulation order to disagree
-    on between engines (betweenness itself needs fractional δ; stress is
-    its exact-integer sibling and ranks hubs the same way in practice).
+    number of shortest paths ``sigma``.  Backward pass over the
+    shortest-path DAG: ``c(v) = Σ_{w ∈ succ(v)} (1 + c(w))`` — the number
+    of shortest-path *suffixes* leaving v; then ``stress(v) = Σ_s
+    σ(s,v)·c(s,v)``, the count of shortest paths from sampled sources
+    passing THROUGH v.  This is the betweenness dependency recursion with
+    the σ(s,t) division dropped, so every quantity stays a BIGINT — no
+    float accumulation order to disagree on between engines (betweenness
+    itself needs fractional δ; stress is its exact-integer sibling and
+    ranks hubs the same way in practice).
 
-    Scale: both passes are frontier ⋈ edges supersteps over state bounded
-    by |S|·V rows, pinned on ``partitions``; 2·diameter supersteps total.
-    Sampling sources is the standard web-scale centrality approximation
-    (same shape as the reference's sampled estimators,
-    /root/reference/src/ZGraphInstance.cpp:257-297).  Returns
-    (id, stress) for vertices with stress > 0.
+    Scale: both passes are supersteps on the gcommon kernel (``_brandes``)
+    over state bounded by |S|·V rows, pinned on ``partitions``;
+    2·diameter supersteps total.  Sampling sources is the standard
+    web-scale centrality approximation (same shape as the reference's
+    sampled estimators, ZGraph's src/ZGraphInstance.cpp:257-297).
+    Returns (id, stress) for vertices with stress > 0.
     """
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-
-    e = norm_edges(edges, P, directed=directed)
-
-    lvl = (
-        sources.select(F.col("id").alias("s")).distinct()
-        .select("s", F.col("s").alias("v"), F.lit(1).cast("long").alias("sig"))
-        .repartition(P, "v")
-        .localCheckpoint(eager=True)
-    )
-    levels = [lvl]
-    settled = lvl.select("s", "v").localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        nxt = (
-            e.join(lvl.withColumnRenamed("v", "src").hint("shuffle_hash"), "src")
-            .select("s", F.col("dst").alias("v"), "sig")
-            .join(settled.hint("shuffle_hash"), ["s", "v"], "left_anti")
-            .groupBy("s", "v")
-            .agg(F.sum("sig").alias("sig"))
-            .repartition(P, "v")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.count() == 0:
-            break
-        levels.append(nxt)
-        settled = (
-            settled.union(nxt.select("s", "v"))
-            .repartition(P, "v")
-            .localCheckpoint(eager=True)
-        )
-        lvl = nxt
-
-    # backward: deepest level has no successors (c = 0); walk levels up,
-    # summing (1 + c) over DAG successors (neighbors one level deeper)
-    out = [levels[-1].select("s", "v", "sig", F.lit(0).cast("long").alias("cv"))]
-    c = out[0].select("s", "v", "cv")
-    for l in range(len(levels) - 2, -1, -1):
-        agg = (
-            levels[l].select("s", "v")
-            .join(e.withColumnRenamed("src", "v").hint("shuffle_hash"), "v")
-            .join(
-                c.select("s", F.col("v").alias("dst"), "cv").hint("shuffle_hash"),
-                ["s", "dst"],
-            )
-            .groupBy("s", "v")
-            .agg(F.sum(F.lit(1) + F.col("cv")).alias("cv"))
-        )
-        cur = (
-            levels[l].join(agg.hint("shuffle_hash"), ["s", "v"], "left")
-            .select(
-                "s", "v", "sig",
-                F.coalesce("cv", F.lit(0)).cast("long").alias("cv"),
-            )
-            .repartition(P, "v")
-            .localCheckpoint(eager=True)
-        )
-        out.append(cur)
-        c = cur.select("s", "v", "cv")
-    e.unpersist()
-
-    res = out[0]
-    for df in out[1:]:
-        res = res.union(df)
+    res = _brandes(edges, sources, directed, max_iter, partitions, "stress_centrality",
+                   1 + F.col("cvw"))
     return (
-        res.filter(F.col("v") != F.col("s"))  # endpoints are not interior
-        .groupBy(F.col("v").alias("id"))
+        res.groupBy("id")
         .agg(F.sum(F.col("sig") * F.col("cv")).alias("stress"))
         .filter(F.col("stress") > 0)
     )
@@ -356,46 +313,21 @@ def closeness_centrality(
     """Exact closeness centrality for a source sample, one superstep loop.
 
     All sources run their BFS **concurrently** through a composite-key
-    frontier ``(s, v)`` — per-superstep state is bounded by |S|·V rows and
-    the loop still terminates in max-eccentricity supersteps, so sampling
-    S sources costs one loop, not |S| loops (the standard approximation
-    path for centrality at web scale: sample sources, aggregate).
-    ``max_sources`` guards against pointing the exact sweep at a full
-    web-scale vertex set (see :func:`_guard_sources`).
+    frontier ``(s, v)`` (``_sweep``) — per-superstep state is bounded by
+    |S|·V rows and the loop still terminates in max-eccentricity
+    supersteps, so sampling S sources costs one loop, not |S| loops (the
+    standard approximation path for centrality at web scale: sample
+    sources, aggregate).  ``max_sources`` guards against pointing the
+    exact sweep at a full web-scale vertex set (see
+    :func:`_guard_sources`).
 
     Returns (s, reached, total_dist, closeness_e6) with
     closeness = (reached-1) / total_dist (0 when no vertex is reached),
     e6-quantized from exact integers — engine-independent.
     """
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     _guard_sources(sources, max_sources, "closeness_centrality")
-
-    e = norm_edges(edges, P, directed=directed)
-
-    state = (
-        sources.select(F.col("id").alias("s")).distinct()
-        .select("s", F.col("s").alias("v"), F.lit(0).cast("long").alias("dist"))
-        .repartition(P, "v")
-        .localCheckpoint(eager=True)
-    )
-    frontier = state
-    for it in range(1, max_iter + 1):
-        nxt = (
-            e.join(frontier.withColumnRenamed("v", "src").hint("shuffle_hash"), "src")
-            .select("s", F.col("dst").alias("v"))
-            .dropDuplicates(["s", "v"])
-            .join(state.select("s", "v").hint("shuffle_hash"), ["s", "v"], "left_anti")
-            .select("s", "v", F.lit(it).cast("long").alias("dist"))
-            .repartition(P, "v")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.count() == 0:
-            break
-        state = state.union(nxt).repartition(P, "v").localCheckpoint(eager=True)
-        frontier = nxt
-    e.unpersist()
-
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    _, state, _ = _sweep(edges, sources, directed, max_iter, P, "closeness_centrality")
     agg = state.groupBy("s").agg(
         (F.count(F.lit(1)) - 1).alias("reached"),
         F.sum("dist").alias("total_dist"),
@@ -432,39 +364,13 @@ def distance_histogram(
     sketch is the approximate path at web scale).  ``max_sources`` guards
     against an accidental full-graph O(V·E) sweep (see _guard_sources).
 
-    Same composite-key (s, v) multi-source BFS loop as
-    closeness_centrality: |S|·V bounded state, max-eccentricity
-    supersteps, O(frontier) work per superstep.  Self-pairs (d=0) are
-    excluded.
+    Same composite-key (s, v) multi-source BFS as closeness_centrality
+    (``_sweep``): |S|·V bounded state, max-eccentricity supersteps,
+    O(frontier) work per superstep.  Self-pairs (d=0) are excluded.
     """
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     _guard_sources(sources, max_sources, "distance_histogram")
-
-    e = norm_edges(edges, P, directed=directed)
-
-    state = (
-        sources.select(F.col("id").alias("s")).distinct()
-        .select("s", F.col("s").alias("v"), F.lit(0).cast("long").alias("dist"))
-        .repartition(P, "v")
-        .localCheckpoint(eager=True)
-    )
-    frontier = state
-    for it in range(1, max_iter + 1):
-        nxt = (
-            e.join(frontier.withColumnRenamed("v", "src").hint("shuffle_hash"), "src")
-            .select("s", F.col("dst").alias("v"))
-            .dropDuplicates(["s", "v"])
-            .join(state.select("s", "v").hint("shuffle_hash"), ["s", "v"], "left_anti")
-            .select("s", "v", F.lit(it).cast("long").alias("dist"))
-            .repartition(P, "v")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.count() == 0:
-            break
-        state = state.union(nxt).repartition(P, "v").localCheckpoint(eager=True)
-        frontier = nxt
-    e.unpersist()
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    _, state, _ = _sweep(edges, sources, directed, max_iter, P, "distance_histogram")
     return (
         state.filter(F.col("dist") > 0)
         .groupBy("dist")
@@ -485,8 +391,8 @@ def betweenness_centrality(
 
     Forward pass: the same composite-key (s, v) level-synchronous BFS as
     ``stress_centrality``, carrying exact shortest-path counts ``sigma``.
-    Backward pass, level by decreasing level over the shortest-path DAG,
-    computes the Brandes dependency
+    The backward pass over the shortest-path DAG computes the Brandes
+    dependency
     ``delta(v) = sum_{w in succ(v)} sigma(v)/sigma(w) * (1 + delta(w))``
     with ``delta`` stored as ``dv = round(delta * 1e6)``: each term is ONE
     IEEE-double expression evaluated from exact integers —
@@ -502,88 +408,20 @@ def betweenness_centrality(
     ``stress_centrality`` (reference oracle pattern:
     /root/reference/naive_implementation/ exact counters).
 
-    Scale: identical plan shape to ``stress_centrality`` — 2*diameter
-    frontier⋈edges supersteps, |S|*V-bounded state, shuffle-hash joins
-    pinned on ``partitions``, lineage truncated per superstep.
+    Scale: the same two passes as ``stress_centrality`` (``_brandes``) —
+    2*diameter supersteps on the gcommon kernel, |S|*V-bounded state.
     """
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    term = F.round(
+        F.col("sig").cast("double")
+        * (F.lit(1000000).cast("long") + F.col("cvw")).cast("double")
+        / F.col("sigw").cast("double")
+    ).cast("long")
 
-    e = norm_edges(edges, P, directed=directed)
-
-    lvl = (
-        sources.select(F.col("id").alias("s")).distinct()
-        .select("s", F.col("s").alias("v"), F.lit(1).cast("long").alias("sig"))
-        .repartition(P, "v")
-        .localCheckpoint(eager=True)
-    )
-    levels = [lvl]
-    settled = lvl.select("s", "v").localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        nxt = (
-            e.join(lvl.withColumnRenamed("v", "src").hint("shuffle_hash"), "src")
-            .select("s", F.col("dst").alias("v"), "sig")
-            .join(settled.hint("shuffle_hash"), ["s", "v"], "left_anti")
-            .groupBy("s", "v")
-            .agg(F.sum("sig").alias("sig"))
-            .repartition(P, "v")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.count() == 0:
-            break
-        levels.append(nxt)
-        settled = (
-            settled.union(nxt.select("s", "v"))
-            .repartition(P, "v")
-            .localCheckpoint(eager=True)
-        )
-        lvl = nxt
-
-    # backward: deepest level has delta = 0; one quantized term per DAG
-    # successor, summed exactly
-    out = [levels[-1].select("s", "v", "sig", F.lit(0).cast("long").alias("dv"))]
-    c = out[0].select("s", "v", "sig", "dv")
-    for l in range(len(levels) - 2, -1, -1):
-        term = F.round(
-            F.col("sig").cast("double")
-            * (F.lit(1000000).cast("long") + F.col("dvw")).cast("double")
-            / F.col("sigw").cast("double")
-        ).cast("long")
-        agg = (
-            levels[l]
-            .join(e.withColumnRenamed("src", "v").hint("shuffle_hash"), "v")
-            .join(
-                c.select(
-                    "s",
-                    F.col("v").alias("dst"),
-                    F.col("sig").alias("sigw"),
-                    F.col("dv").alias("dvw"),
-                ).hint("shuffle_hash"),
-                ["s", "dst"],
-            )
-            .groupBy("s", "v")
-            .agg(F.sum(term).alias("dv"))
-        )
-        cur = (
-            levels[l].join(agg.hint("shuffle_hash"), ["s", "v"], "left")
-            .select(
-                "s", "v", "sig",
-                F.coalesce("dv", F.lit(0)).cast("long").alias("dv"),
-            )
-            .repartition(P, "v")
-            .localCheckpoint(eager=True)
-        )
-        out.append(cur)
-        c = cur.select("s", "v", "sig", "dv")
-    e.unpersist()
-
-    res = out[0]
-    for df in out[1:]:
-        res = res.union(df)
+    res = _brandes(edges, sources, directed, max_iter, partitions,
+                   "betweenness_centrality", term)
     return (
-        res.filter(F.col("v") != F.col("s"))
-        .groupBy(F.col("v").alias("id"))
-        .agg(F.sum("dv").alias("betweenness_e6"))
+        res.groupBy("id")
+        .agg(F.sum("cv").alias("betweenness_e6"))
         .filter(F.col("betweenness_e6") > 0)
     )
 
@@ -667,8 +505,7 @@ def node2vec_walks(
     """
     from pyspark.sql import Window
 
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
     adj = norm_edges(edges, P, directed=directed, materialize="none").persist()
     adj.count()

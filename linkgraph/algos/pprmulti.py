@@ -20,9 +20,12 @@ PPR (scores keep their ranking semantics; the suite's single-seed
 
 State stays sparse: only reached (s, v) pairs are materialized, which is
 what makes 10^4-seed batches feasible at web scale — the state is
-|S|·avg-ball-size, not |S|·V.  Per superstep: one state ⋈ edge join
-(shuffle on the vertex key) + one grouped sum + one outer join with the
-|S|-row teleport table (broadcast).
+|S|·avg-ball-size, not |S|·V.  The superstep is this push on the gcommon
+kernel: the state is ``send``-ed along the out-degree-annotated edge view
+pinned once (``gcommon.pin_edges``), summed per (seed, vertex), and
+unioned with the teleport rows, which come from the state's own (s, s)
+rows — no teleport table, no join.  The state keeps its hash
+partitioning on (s, v); one Spark job per superstep.
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import norm_edges
+from .gcommon import iterate, norm_edges, pin_edges, pin_vertices, send
 
 SCALE = 1_000_000
 
@@ -42,54 +45,40 @@ def multi_seed_ppr(
     num_iters: int = 4,
     partitions: int | None = None,
 ) -> DataFrame:
-    """Returns sparse (s, v, rank_e6) with rank_e6 > 0 after ``num_iters``."""
+    """Returns sparse (s, v, rank_e6) with rank_e6 > 0 after ``num_iters``;
+    empty ``seeds`` give an empty frame."""
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     teleport = int(round((1.0 - damping) * SCALE))
 
-    e = norm_edges(edges, P, directed=True, materialize="none")
-    ed = (
-        e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("od")), "src")
-        .repartition(P, "src")
-        .persist()
-    )
-    ed.count()
+    def view(edges: DataFrame) -> DataFrame:
+        e = norm_edges(edges, P, directed=True, materialize="none")
+        return e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("od")), "src")
 
-    seed_df = F.broadcast(
-        spark.createDataFrame([(int(s),) for s in sorted(set(seeds))], "s long")
+    ed, E = pin_edges(edges, view, "multi_seed_ppr")
+    seed_df = spark.createDataFrame(
+        [(None if s is None else int(s),) for s in set(seeds)], "id long")
+    # (s, s) stays in the state from the start on: it carries the teleport
+    start, _ = pin_vertices(
+        seed_df.select(F.col("id").alias("s"), "id", F.lit(SCALE).cast("long").alias("r")),
+        P, "multi_seed_ppr", "s", "id",
     )
-    state = (
-        seed_df.select("s", F.col("s").alias("v"),
-                       F.lit(SCALE).cast("long").alias("r"))
-        .repartition(P, "v")
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(num_iters):
-        contrib = (
-            ed.join(state.withColumnRenamed("v", "src").hint("shuffle_hash"), "src")
-            .groupBy("s", F.col("dst").alias("v"))
-            .agg(
-                F.sum(
-                    F.round(F.lit(damping) * F.col("r") / F.col("od")).cast("long")
-                ).alias("c")
-            )
+
+    def step(state: DataFrame, obs, it: int) -> DataFrame:
+        c = F.round(F.lit(damping) * F.col("r") / F.col("od")).cast("long")
+        tele = state.filter(F.col("id") == F.col("s")).select(
+            "s", "id", F.lit(teleport).cast("long").alias("c"))
+        return (
+            send(state, ed, ("s",), c=c)
+            .groupBy("s", "id").agg(F.sum("c").alias("c"))
+            .unionByName(tele)
+            .groupBy("s", "id").agg(F.sum("c").alias("r"))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .repartition(P, "s", "id")
         )
-        state = (
-            contrib.join(
-                seed_df.select("s", F.col("s").alias("v"), F.lit(True).alias("t")),
-                ["s", "v"], "full_outer",
-            )
-            .select(
-                "s", "v",
-                (
-                    F.coalesce("c", F.lit(0))
-                    + F.when(F.col("t").isNotNull(), F.lit(teleport)).otherwise(0)
-                ).cast("long").alias("r"),
-            )
-            .repartition(P, "v")
-            .localCheckpoint(eager=True)
-        )
-    ed.unpersist()
+
+    state, _ = iterate(ed, lambda _: start, step, lambda got: ({}, False),
+                       "ppr_multi", P, E, num_iters)
     return state.filter(F.col("r") > 0).select(
-        "s", "v", F.col("r").alias("rank_e6")
+        "s", F.col("id").alias("v"), F.col("r").alias("rank_e6")
     )

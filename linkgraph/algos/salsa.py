@@ -63,7 +63,7 @@ def salsa(
     halves = [(fwd, frep, "h", "a"), (bwd, brep, "a", "h")]
     k = 0
 
-    def step(state: DataFrame, obs) -> DataFrame:
+    def step(state: DataFrame, obs, it: int) -> DataFrame:
         nonlocal k
         blocks, rep, sent, upd = halves[k % 2]
         k += 1

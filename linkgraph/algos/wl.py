@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import norm_edges
+from .gcommon import gather_edges, iterate, pin_checkpoint, pin_sym
 
 
 def wl_refinement(
@@ -37,31 +37,28 @@ def wl_refinement(
     """Returns ``(id, color)`` after ``rounds`` refinement steps over the
     undirected view of ``edges`` (vertices with ≥1 neighbor).  ``color`` is
     the minimum vertex id sharing the vertex's final WL class."""
-    spark = edges.sparkSession
-    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-
-    und = norm_edges(edges, P, materialize="checkpoint")
-    state = und.select(F.col("src").alias("id")).distinct() \
+    P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    sym, E = pin_sym(edges, P, "wl_refinement")
+    start = pin_checkpoint(
+        sym.select(F.col("src").alias("id")).distinct()
         .select("id", F.lit(1).cast("long").alias("color"))
+        .repartition(P, "id")
+    )
+    sig = F.concat_ws(",", F.sort_array("nc").cast("array<string>"))
 
-    for _ in range(rounds):
-        sig = (
-            und.join(state.select(F.col("id").alias("dst"),
-                                  F.col("color").alias("nc")), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.concat_ws(",", F.sort_array(F.collect_list("nc"))
-                             .cast("array<string>")).alias("sig"))
-        )
+    def step(state: DataFrame, obs, it: int) -> DataFrame:
         # hash relabel: equal (old color, signature) -> equal new color;
         # distinct classes collide with prob ~V^2/2^64 (negligible, and any
         # collision would only MERGE classes — caught by the oracle gate)
-        state = (
-            state.join(sig, "id")
-            .select("id", F.xxhash64(F.concat_ws("|", "color", "sig"))
-                    .alias("color"))
+        return (
+            gather_edges(state, sym, F.collect_list, nc=F.col("color"))
+            .select("id", F.xxhash64(F.concat_ws("|", "color", sig)).alias("color"))
+            .observe(obs, F.count(F.lit(1)).alias("n"))
             .repartition(P, "id")
-            .localCheckpoint(eager=True)
         )
+
+    state, _ = iterate(edges, lambda _: start, step, lambda got: ({}, False),
+                       "wl", P, E, rounds)
     # canonicalize: engine-portable label = min vertex id in the class
     canon = state.groupBy("color").agg(F.min("id").alias("canon"))
     return state.join(F.broadcast(canon), "color") \

@@ -1,14 +1,17 @@
 """The pinned superstep kernel (``gcommon``), checked with the session's AQE
 on: one Spark job per superstep for every vertex program on it (PageRank's
 three variants, connected components, label propagation, Katz,
-eigenvector, SALSA, HITS and HyperBall); a state size estimate that grows
-linearly, not geometrically, over the supersteps; one Exchange per
-PageRank superstep on a hub-free graph and two on a salted one; a rank
-state that keeps hashpartitioning(id, P); and an AQE setting that
-``pin_checkpoint`` always restores.  Also the degenerate inputs (an empty
-edge table, a null id, an empty personalization set) and a checkpoint
-that refuses to resume against another graph, another damping or without
-its identity."""
+eigenvector, SALSA, HITS, HyperBall, core numbers and WL) and every
+frontier program (the BFS family, SSSP, Voronoi, multi-seed PPR); a state
+size estimate that grows linearly, not geometrically, over the
+supersteps; one Exchange per PageRank superstep on a hub-free graph and
+two on a salted one, and one, with no sort, per label-propagation
+superstep; a rank state that keeps hashpartitioning(id, P); and an AQE
+setting that ``pin_checkpoint`` always restores.  Also the degenerate
+inputs (an empty edge table, a null id in the edges or the sources, an
+empty personalization or source set) and a checkpoint that refuses to
+resume against another graph, another damping or without its
+identity."""
 
 import importlib
 import os
@@ -24,8 +27,20 @@ from linkgraph.algos.gcommon import pin_checkpoint
 from linkgraph.algos.hits import hits
 from linkgraph.algos.hyperball import hyperball
 from linkgraph.algos.katz import katz_centrality
+from linkgraph.algos.kcore import core_numbers
 from linkgraph.algos.labelprop import label_propagation
+from linkgraph.algos.paths import (
+    betweenness_centrality,
+    bfs_distances,
+    closeness_centrality,
+    distance_histogram,
+    sssp_distances,
+    stress_centrality,
+)
+from linkgraph.algos.pprmulti import multi_seed_ppr
 from linkgraph.algos.salsa import salsa
+from linkgraph.algos.voronoi import nearest_seed_partition
+from linkgraph.algos.wl import wl_refinement
 
 prmod = importlib.import_module("linkgraph.algos.pagerank")
 gcommon = importlib.import_module("linkgraph.algos.gcommon")
@@ -43,6 +58,23 @@ FIXED = {
     "hits": (hits, "num_iters", 2),
     "hyperball": (hyperball, "radius", 1),
 }
+# the gather programs that run every superstep on the path below
+PATH_GATHER = {"core": (core_numbers, "max_rounds"), "wl": (wl_refinement, "rounds")}
+# the frontier programs as (edges, sources, **kw), their iteration-count
+# argument and supersteps per iteration (stress and betweenness run a
+# backward superstep per forward one)
+FRONTIER = {
+    "bfs": (bfs_distances, "max_iter", 1),
+    "sssp": (lambda e, s, **kw: sssp_distances(
+        e.withColumn("weight", F.lit(1).cast("long")), s, **kw), "max_iter", 1),
+    "closeness": (closeness_centrality, "max_iter", 1),
+    "histogram": (distance_histogram, "max_iter", 1),
+    "stress": (stress_centrality, "max_iter", 2),
+    "betweenness": (betweenness_centrality, "max_iter", 2),
+    "voronoi": (nearest_seed_partition, "max_rounds", 1),
+    "pprmulti": (lambda e, s, **kw: multi_seed_ppr(
+        e, [r["id"] for r in s.collect()], **kw), "num_iters", 1),
+}
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +87,8 @@ def rmat(spark):
 
 @pytest.fixture(scope="module")
 def path(spark):
-    """A 60-vertex path: CC and LP still change labels after 4 supersteps."""
+    """A 60-vertex path: CC, LP and core numbers still change values after
+    22 supersteps, and a frontier from vertex 0 still grows."""
     return spark.createDataFrame([(i, i + 1) for i in range(59)], "src long, dst long")
 
 
@@ -69,6 +102,13 @@ def _run(spark, case, rmat, path, n):
     if case in FIXED:
         algo, arg, per = FIXED[case]
         return algo(rmat, partitions=8, **{arg: n // per})
+    if case in PATH_GATHER:
+        algo, arg = PATH_GATHER[case]
+        return algo(path, partitions=8, **{arg: n})
+    if case in FRONTIER:
+        algo, arg, per = FRONTIER[case]
+        source = spark.createDataFrame([(0,)], "id long")
+        return algo(path, source, partitions=8, **{arg: n // per})
     if case == "cc":
         return connected_components(path, max_iter=n, partitions=8)
     if case == "lp":
@@ -90,7 +130,9 @@ def _jobs(spark, group, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-@pytest.mark.parametrize("case", sorted(LAYOUTS) + ["cc", "lp", "ppr", "weighted", *FIXED])
+@pytest.mark.parametrize(
+    "case", sorted(LAYOUTS) + ["cc", "lp", "ppr", "weighted", *FIXED, *PATH_GATHER, *FRONTIER]
+)
 def test_pagerank_one_job_per_extra_superstep(spark, rmat, path, case):
     assert spark.conf.get(AQE) == "true"
     n2 = _jobs(spark, f"pin2{case}", lambda: _run(spark, case, rmat, path, 2))
@@ -122,14 +164,15 @@ def _size_bits(df):
         return float("inf")
 
 
-@pytest.mark.parametrize("case", ["tol", "cc", "lp", *FIXED])
+@pytest.mark.parametrize("case", ["tol", "cc", "lp", *FIXED, *PATH_GATHER, *FRONTIER])
 def test_superstep_state_size_estimate_grows_linearly(spark, rmat, path, monkeypatch, case):
     """Each superstep's state keeps its origin plan's size estimate.  When
     tol-mode PageRank joined its update back to the old state, the
     estimate squared every superstep, and after ~15 supersteps the planner
     spent minutes on BigInteger products.  The kernel's superstep shape,
     the state joined with agg(propagate(blocks, state)), adds a constant
-    number of bits a superstep."""
+    number of bits a superstep; so does a frontier program's, the union
+    of its state and the new rows."""
     pinned, n = [], 22
     _superstep_plans(monkeypatch, pinned)
     out = _run(spark, case, rmat, path, n)
@@ -139,15 +182,24 @@ def test_superstep_state_size_estimate_grows_linearly(spark, rmat, path, monkeyp
     assert max(b - a for a, b in zip(bits, bits[1:])) <= 64, bits
 
 
-@pytest.mark.parametrize("layout,exchanges", [("hubfree", 1), ("salted", 2)])
+@pytest.mark.parametrize("layout,exchanges", [("hubfree", 1), ("salted", 2), ("lp", 1)])
 def test_pagerank_superstep_plan_audit(spark, rmat, monkeypatch, layout, exchanges):
+    """``lp``: label propagation's mode of the neighbours' labels is one
+    hash aggregate with a map-side partial (the count-then-argmax it
+    replaced took two Exchanges and a sort-based aggregate)."""
     plans = _superstep_plans(monkeypatch)
-    ranks, _ = prmod.pagerank(rmat, num_iters=2, partitions=8, **LAYOUTS[layout])
+    if layout == "lp":
+        ranks, _ = label_propagation(rmat, max_iter=2, partitions=8)
+    else:
+        ranks, _ = prmod.pagerank(rmat, num_iters=2, partitions=8, **LAYOUTS[layout])
     step = plans[-1]  # the last superstep's state
-    assert step.startswith("CollectMetrics mass_1")
+    if layout == "lp":  # a Project sits above LP's Observation
+        assert "CollectMetrics lp_changes_1" in step
+    else:
+        assert step.startswith("CollectMetrics mass_1")
     assert len(re.findall(r"Exchange ", step)) == exchanges
     assert ("salt#" in step) == (layout == "salted")
-    assert "Sort " not in step and "NestedLoopJoin" not in step
+    assert "Sort" not in step and "NestedLoopJoin" not in step
     # the leaves are the pinned blocks, state (read once for its
     # contributions, once for the update) and salt map; the
     # dangling correction is a literal, not a createDataFrame relation
@@ -159,6 +211,7 @@ def test_pagerank_superstep_plan_audit(spark, rmat, monkeypatch, layout, exchang
     expected = {
         "hubfree": ["id,rank", "id,rank", "src,dsts,out_degree"],
         "salted": ["id,rank", "id,rank", "src,salt,dsts,out_degree", "src,salts"],
+        "lp": ["id,label", "id,label", "src,dsts,out_degree"],
     }
     assert leaves == expected[layout]
     assert "hashpartitioning(id#" in (
@@ -212,6 +265,8 @@ def _no_metrics(algo):
     (_no_metrics(salsa), {}, ["hub_e6", "auth_e6"]),
     (_no_metrics(hits), {}, ["hub", "authority"]),
     (_no_metrics(hyperball), {}, ["sum_int", "ball_e6"]),
+    (core_numbers, {}, ["core"]),
+    (_no_metrics(wl_refinement), {}, ["color"]),
 ])
 def test_pagerank_empty_edges(spark, mode):
     algo, kw, cols = mode
@@ -222,10 +277,18 @@ def test_pagerank_empty_edges(spark, mode):
     assert ranks.count() == 0
 
 
+def _from_0(algo):
+    """The frontier program ``algo`` run from source 0."""
+    return lambda edges, **kw: algo(
+        edges, edges.sparkSession.createDataFrame([(0,)], "id long"), **kw)
+
+
 @pytest.mark.parametrize("algo", [
     prmod.pagerank, prmod.personalized_pagerank, prmod.pagerank_weighted,
     connected_components, label_propagation,
     katz_centrality, eigenvector_centrality, salsa, hits, hyperball,
+    core_numbers, wl_refinement,
+    *(pytest.param(_from_0(a), id=case) for case, (a, _, _) in FRONTIER.items()),
 ])
 def test_kernel_null_id_raises(spark, algo):
     edges = spark.createDataFrame(
@@ -235,6 +298,20 @@ def test_kernel_null_id_raises(spark, algo):
         if algo is prmod.personalized_pagerank else {}
     with pytest.raises(ValueError, match="null vertex ids in column 'id'"):
         algo(edges, partitions=8, **kw)
+
+
+@pytest.mark.parametrize("case", sorted(FRONTIER))
+def test_frontier_null_or_empty_sources(spark, edges30, case):
+    """A null source raises naming ``id``; no sources give an empty frame
+    and no metrics."""
+    algo = FRONTIER[case][0]
+    edges = edges30.withColumn("weight", F.lit(1).cast("long"))
+    with pytest.raises(ValueError, match="null vertex ids in column 'id'"):
+        algo(edges, spark.createDataFrame([(0,), (None,)], "id long"), partitions=8)
+    out = algo(edges, spark.createDataFrame([], "id long"), partitions=8)
+    frame, metrics = out if isinstance(out, tuple) else (out, [])
+    assert metrics == []
+    assert frame.count() == 0
 
 
 def test_checkpoint_refuses_other_edges(spark, edges30, tmp_path):
