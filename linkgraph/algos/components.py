@@ -21,12 +21,12 @@ from pyspark.sql import functions as F
 
 from .gcommon import (
     build_blocks,
+    degree_table,
     gather,
     iterate,
     labels_changed,
     norm_edges,
     pin_checkpoint,
-    pin_vertices,
     vertex_set,
 )
 
@@ -50,15 +50,15 @@ def connected_components(
     Checkpoint resume takes precedence over ``initial_labels``.  An empty
     vertex set gives an empty frame and no metrics."""
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    v = vertex_set(edges) if vertices is None else vertices.select("id")
-    v, V = pin_vertices(v, P, "connected_components")
-    if V == 0:
-        return v.select("id", F.col("id").alias("component")), []
-    # the symmetric view is pinned once: the hub probe and the block build
+    # the symmetric view is pinned once: the degree table and the block build
     # then read it without re-running its dedup and partitioning shuffles
     sym = pin_checkpoint(norm_edges(edges, P, materialize="none"))
-    blocks, rep, E = build_blocks(sym, P)
-    del sym  # only the block build reads it; let the cleaner free it
+    deg = degree_table(sym, P, "connected_components", vertices, edges)
+    v = deg.table.select("id")
+    if deg.V == 0:
+        return v.select("id", F.col("id").alias("component")), []
+    blocks, rep, E = build_blocks(sym, P, deg)
+    del sym  # only the set-up reads it; let the cleaner free it
 
     def init(resumed: DataFrame | None) -> DataFrame:
         if resumed is not None:
@@ -231,8 +231,10 @@ def bowtie_regions(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = norm_edges(edges, P, directed=True)
-    verts = vertex_set(e).repartition(P, "id").persist()
+    # pinned, not persisted: the ContextCleaner frees the checkpoints once
+    # the call's frames are gone, so a call leaves no cached table behind
+    e = pin_checkpoint(norm_edges(edges, P, directed=True, materialize="none"))
+    verts = pin_checkpoint(vertex_set(e).repartition(P, "id"))
 
     labels, _ = strongly_connected_components(e, vertices=verts, partitions=P)
     top = (
@@ -242,9 +244,8 @@ def bowtie_regions(
         .limit(1)
         .collect()[0]["scc"]
     )
-    core = (
-        labels.filter(F.col("scc") == F.lit(top)).select("id")
-        .repartition(P, "id").persist()
+    core = pin_checkpoint(
+        labels.filter(F.col("scc") == F.lit(top)).select("id").repartition(P, "id")
     )
 
     fwd, _ = bfs_distances(e, sources=core, directed=True, partitions=P)

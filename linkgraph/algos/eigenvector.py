@@ -16,7 +16,7 @@ Katz / SALSA / weighted PageRank).
 
 The superstep is this update rule on the gcommon kernel: the pinned state
 holds the raw sums s, joined with the sum of x sent along the
-self-loop-free, deduplicated edges (``gather``, ``simple_graph``), one
+self-loop-free, deduplicated edges (``gather``, ``pin_sym``), one
 Spark job per superstep.  max s rides the pin as an Observation and
 enters the next superstep (or the output) as a literal, so the state's x
 is computed where it is read: no 1-row max aggregate is joined back.  The
@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import build_blocks, gather, iterate, pin_checkpoint, simple_graph
+from .gcommon import build_blocks, degree_table, gather, iterate, pin_checkpoint, pin_sym
 
 SCALE = 1_000_000
 
@@ -43,9 +43,10 @@ def eigenvector_centrality(
 ) -> DataFrame:
     """Returns (id, eig_e6) after ``iters`` quantized power supersteps."""
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e, v, V = simple_graph(edges, P, "eigenvector_centrality", directed)
+    e, _ = pin_sym(edges, P, "eigenvector_centrality", directed)
+    deg = degree_table(e, P, "eigenvector_centrality")
     mx = SCALE  # max of the state's sums s: x₀ = round(1e6 · 1e6 / 1e6) = 1e6
-    s0 = v.select("id", F.lit(SCALE).cast("long").alias("s"))
+    s0 = deg.table.select("id", F.lit(SCALE).cast("long").alias("s"))
 
     def x() -> Column:
         return F.when(F.col("s").isNull(), F.lit(0).cast("long")).otherwise(
@@ -54,9 +55,9 @@ def eigenvector_centrality(
             ).cast("long")
         )
 
-    if V == 0:
+    if deg.V == 0:
         return s0.select("id", x().alias("eig_e6"))
-    blocks, rep, E = build_blocks(e, P)
+    blocks, rep, E = build_blocks(e, P, deg)
 
     def step(state: DataFrame, obs, it: int) -> DataFrame:
         return (

@@ -4,9 +4,10 @@
   simple-graph (optionally symmetric) edge view.
 * ``pin_checkpoint`` / ``pin_vertices``: lineage-free state that keeps its
   hash partitioning.
-* ``adjacency_blocks``: CSR-style blocks with hub splitting (salting),
-  built on ``hub_split``, the core it shares with the sampled estimators'
-  adjacency (``triangles._blocked_sym_adjacency``).
+* ``degree_table``: a call's set-up, one pinned degree table (below).
+* ``adjacency_blocks`` / ``build_blocks``: CSR-style blocks with hub
+  splitting (salting), built on ``hub_split``, the core they share with
+  the sampled estimators' adjacency (``triangles._blocked_sym_adjacency``).
 * ``propagate``: joins the per-source state to its blocks under any
   replication layout (hub-free, salted, or the grid's destination buckets),
   given as ``rep``: None or (replication map, block key column).
@@ -19,6 +20,12 @@
   level-synchronous BFS and the min-relaxation loops built on it.
 * ``iterate``: the superstep loop (resume, timing, metrics, checkpoint
   save, stop test).
+
+Set-up: every vertex program on the kernel (below) prepares its graph
+once, in one ``degree_table`` job.  Its start state, hub set (``Degrees.hubs``),
+PageRank's dangling flag (``out_degree == 0``) and mass (dangling / V)
+and its empty-graph test (V == 0) read that table or its pin's
+Observation; so does the sampled estimators' hub set.
 
 Every vertex program on the kernel has one superstep shape: its pinned
 state joins ``agg(propagate(blocks, rep, state))``, and that is its only
@@ -48,7 +55,7 @@ from __future__ import annotations
 
 import gc
 import time
-from typing import Callable
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -130,21 +137,23 @@ def pin_checkpoint(df: DataFrame) -> DataFrame:
 
 
 def pin_vertices(
-    v: DataFrame, P: int, algo: str, *keys: str
+    v: DataFrame, P: int, algo: str, *keys: str,
+    obs: Observation | None = None, aggs: tuple[Column, ...] = (),
 ) -> tuple[DataFrame, int]:
     """Pin the vertex table on ``keys`` (default ``id``); returns (v, V).
 
     The vertex count and the null-id check ride the pin's job as an
-    Observation.  A null id raises ``ValueError`` naming the column: it
-    would otherwise become a groupBy key that matches nothing.  A
-    frontier program's start state (its sources or seeds) is pinned here
-    too.
+    Observation (``obs``, with the caller's ``aggs`` too).  A null id
+    raises ``ValueError`` naming the column: it would otherwise become a
+    groupBy key that matches nothing.  A frontier program's start state
+    (its sources or seeds) is pinned here too.
     """
-    obs = Observation()
+    obs = obs or Observation()
     v = pin_checkpoint(v.repartition(P, *(keys or ("id",))).observe(
         obs,
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col("id").isNull(), 1)).alias("nulls"),
+        *aggs,
     ))
     got = obs.get
     if got["nulls"]:
@@ -185,16 +194,64 @@ def pin_sym(
     return pin_edges(edges, lambda e: norm_edges(e, P, directed, materialize="none"), algo)
 
 
-def simple_graph(
-    edges: DataFrame, P: int, algo: str, directed: bool = True
-) -> tuple[DataFrame, DataFrame, int]:
-    """(e, v, V): the self-loop-free, deduplicated edges (``norm_edges``)
-    pinned on src, and their vertex set pinned on id (``pin_vertices``).
-    The vertex set's self-loop test is null-safe, so a null id reaches
-    ``pin_vertices``, which raises naming it."""
-    loop = F.col("src").eqNullSafe(F.col("dst"))
-    v, V = pin_vertices(vertex_set(edges.filter(~loop)), P, algo)
-    return pin_checkpoint(norm_edges(edges, P, directed, materialize="none")), v, V
+class Degrees(NamedTuple):
+    """A call's degree table and what its pin observed (``degree_table``)."""
+
+    table: DataFrame  # (id, out_degree[, in_degree]), pinned on id
+    V: int
+    dangling: int  # vertices of out_degree 0
+    top: dict  # the largest value of each degree column
+
+    def hubs(self, block_size: int, col: str = "out_degree") -> DataFrame | None:
+        """(id, _d): the vertices whose ``col`` exceeds ``block_size``, or
+        None when the pin saw none."""
+        if self.top[col] <= block_size:
+            return None
+        return self.table.filter(F.col(col) > block_size).select(
+            "id", F.col(col).alias("_d"))
+
+
+def degree_table(
+    view: DataFrame,
+    P: int,
+    algo: str,
+    vertices: DataFrame | None = None,
+    edges: DataFrame | None = None,
+    in_degree: bool = False,
+) -> Degrees:
+    """Pin a call's degree table (``pin_vertices``): one row per vertex of
+    its universe with its out- (and in-) degree in ``view``, the edge view
+    its blocks are built on.  The largest degrees and the dangling count
+    ride the pin's one job too.
+
+    The universe is ``vertices`` when given, else the endpoints of
+    ``edges``, the raw input, where the view drops some (a self-loop-only
+    vertex), else those of ``view``, which then feed one grouped sum.
+    Otherwise the universe's distinct ids left-join the view's per-src
+    counts, which need no shuffle when the view is pinned on src.
+    """
+    cols = ["out_degree", "in_degree"][: 1 + in_degree]
+    own = vertices is None and edges is None
+    rows = [[F.col(k).alias("id"), *(F.lit(d).alias(c) for d, c in zip(ds, cols))]
+            for k, *ds in [("src", 1, 0), ("dst", 0, 1)][: 1 + (own or in_degree)]]
+    # plain projections: a view pinned on src then stays grouped on id, and
+    # the start state's row order, so PageRank's and HITS's summation
+    # order, is the one a vertex-set distinct gave
+    deg = view.select(*rows[0])
+    for r in rows[1:]:
+        deg = deg.union(view.select(*r))
+    deg = deg.groupBy("id").agg(*(F.sum(c).alias(c) for c in cols))
+    if not own:
+        ids = vertices.select("id") if vertices is not None else \
+            edges.select(F.explode(F.array("src", "dst")).alias("id"))
+        deg = ids.distinct().join(deg.hint("shuffle_hash"), "id", "left").select(
+            "id", *(F.coalesce(c, F.lit(0)).alias(c) for c in cols))
+    obs = Observation()
+    table, V = pin_vertices(deg, P, algo, obs=obs, aggs=(
+        *(F.coalesce(F.max(c), F.lit(0)).alias(c) for c in cols),
+        F.count(F.when(F.col("out_degree") == 0, 1)).alias("dangling"),
+    ))
+    return Degrees(table, V, obs.get["dangling"], {c: obs.get[c] for c in cols})
 
 
 def pin_blocks(blocks: DataFrame) -> tuple[DataFrame, int]:
@@ -206,21 +263,21 @@ def pin_blocks(blocks: DataFrame) -> tuple[DataFrame, int]:
 
 
 def hub_split(
-    e: DataFrame, key: str, nbr: str, elem: Column, block_size: int
-) -> tuple[DataFrame, bool]:
-    """Group ``e`` into hub-split blocks ``(key, bi, nbrs, _d)``; returns
-    (blocks, has_hubs).
+    e: DataFrame, key: str, nbr: str, elem: Column, block_size: int,
+    hubs: DataFrame | None,
+) -> DataFrame:
+    """Group ``e`` into hub-split blocks ``(key, bi, nbrs, _d)``.
 
     ``nbrs`` is the sorted ``collect_list(elem)`` of one block and ``_d``
-    the degree of its ``key``.  A vertex with degree <= block_size gets ONE
-    block (bi = 0); a hub is split into ceil(d / block_size) blocks by
-    ``pmod(xxhash64(nbr), ceil(d / block_size))``, NOT by sorted position:
-    no window sort, and no task ever materializes a hub's whole adjacency
-    in one array.  The degree pass is a count-only shuffle (map-side
-    partial counts) and the hub set is small enough to broadcast, so the
-    build needs no E-row join shuffle.  Sorted arrays keyed by the
-    deterministic ``bi`` make the blocks a pure function of the data at
-    any partition layout.
+    the degree of its ``key``.  ``hubs`` (id, _d) is the hub set, the
+    vertices of degree > block_size (``Degrees.hubs``), or None when there
+    are none.  A vertex outside it gets ONE block (bi = 0); a hub is split
+    into ceil(d / block_size) blocks by ``pmod(xxhash64(nbr), ceil(d /
+    block_size))``, NOT by sorted position: no window sort, and no task
+    ever materializes a hub's whole adjacency in one array.  The hub set
+    is small enough to broadcast, so the build needs no E-row join
+    shuffle.  Sorted arrays keyed by the deterministic ``bi`` make the
+    blocks a pure function of the data at any partition layout.
     """
     nbrs = F.sort_array(F.collect_list(elem)).alias("nbrs")
 
@@ -230,11 +287,9 @@ def hub_split(
             key, F.lit(0).alias("bi"), "nbrs", "_d"
         )
 
-    deg = e.groupBy(key).agg(F.count(F.lit(1)).alias("_d"))
-    hubs = deg.filter(F.col("_d") > block_size)
-    if hubs.limit(1).count() == 0:
-        return whole(e), False
-    hub_b = F.broadcast(hubs)
+    if hubs is None:
+        return whole(e)
+    hub_b = F.broadcast(hubs.withColumnRenamed("id", key))
     hub = (
         e.join(hub_b, key)  # broadcast: adds _d map-side
         .withColumn(
@@ -244,28 +299,30 @@ def hub_split(
         .agg(nbrs)
         .select(key, "bi", "nbrs", "_d")
     )
-    return whole(e.join(hub_b.select(key), key, "left_anti")).union(hub), True
+    return whole(e.join(hub_b.select(key), key, "left_anti")).union(hub)
 
 
 def build_blocks(
     edges: DataFrame,
     partitions: int,
+    deg: Degrees,
+    col: str = "out_degree",
     block_size: int = DEFAULT_BLOCK_SIZE,
     num_salts: int = 8,
 ) -> tuple[DataFrame, tuple[DataFrame, str] | None, int]:
-    """:func:`adjacency_blocks` as (blocks, rep, E): rep is ``propagate``'s
-    layout, None or (salt_map, "salt"); E is the edge count of the
-    blocks."""
-    b, salted = hub_split(
-        edges.select("src", "dst"), "src", "dst", F.col("dst"), block_size
-    )
+    """:func:`adjacency_blocks` as (blocks, rep, E), with the hub set read
+    from ``deg``'s ``col`` (the degree of ``edges``' src there): rep is
+    ``propagate``'s layout, None or (salt_map, "salt"); E is the edge
+    count of the blocks."""
+    hubs = deg.hubs(block_size, col)
+    b = hub_split(edges.select("src", "dst"), "src", "dst", F.col("dst"), block_size, hubs)
     cols = [F.col("nbrs").alias("dsts"), F.col("_d").alias("out_degree")]
     # no src above block_size => no salting is needed; CRITICALLY the salt
     # column must then not exist at all: a constant salt would let Catalyst
     # rewrite the per-superstep (src, salt) equi-join into a src-only join
     # plus a pushed filter, which no longer matches the pinned (src, salt)
     # partitioning — re-shuffling every adjacency array each superstep
-    if not salted:
+    if hubs is None:
         blocks, E = pin_blocks(b.select("src", *cols).repartition(partitions, "src"))
         return blocks, None, E
     # block i of a hub gets salt = i mod num_salts, so its adjacency
@@ -300,7 +357,9 @@ def adjacency_blocks(
     skipped.  Per superstep the scan touches V-ish block rows with packed
     arrays instead of E edge rows.
     """
-    blocks, rep, _ = build_blocks(edges, partitions, block_size, num_salts)
+    deg = degree_table(edges, partitions, "adjacency_blocks")
+    blocks, rep, _ = build_blocks(edges, partitions, deg, block_size=block_size,
+                                  num_salts=num_salts)
     return blocks, rep[0] if rep else None
 
 
@@ -355,7 +414,7 @@ def gather_edges(
     It is the side for an ``agg`` that does not combine map-side
     (``collect_list``): the shuffle then carries one message per edge on
     either side, so blocks save only the rows the state joins, and their
-    build (hub probe, salt map, packing) costs more than that.  Core
+    build (degree table, salt map, packing) costs more than that.  Core
     numbers (18 supersteps) and WL (3) on ``expected_edges(20000, 1)`` at
     local[4], P=8 ran 23 % and 39 % faster warm on this view than on
     blocks.  A combining ``agg`` (sum, min, mode) keeps ``gather``."""

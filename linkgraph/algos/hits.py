@@ -20,15 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import (
-    build_blocks,
-    flip,
-    gather,
-    iterate,
-    pin_checkpoint,
-    pin_vertices,
-    vertex_set,
-)
+from .gcommon import build_blocks, degree_table, flip, gather, iterate, pin_checkpoint
 
 
 def hits(
@@ -40,28 +32,24 @@ def hits(
     """Returns (id, hub, authority) after ``num_iters`` synchronous updates,
     each score vector L2-normalized."""
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    v = vertex_set(edges) if vertices is None else vertices.select("id")
-    v, V = pin_vertices(v, P, "hits")
+    e = pin_checkpoint(edges.select("src", "dst").repartition(P, "src"))
+    deg = degree_table(e, P, "hits", vertices, in_degree=True)
     norm = {"hub": 1.0, "authority": 1.0}  # L2 norms of the state's raw sums
 
     def unit(col: str):
         return (F.col(col) / F.lit(norm[col])).alias(col)
 
-    state0 = v.select("id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority"))
-    if V == 0:
+    state0 = deg.table.select("id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority"))
+    if deg.V == 0:
         return state0
-    e = pin_checkpoint(edges.select("src", "dst").repartition(P, "src"))
-    fwd, frep, E = build_blocks(e, P)
-    bwd, brep, _ = build_blocks(flip(e), P)
+    fwd, frep, E = build_blocks(e, P, deg)
+    bwd, brep, _ = build_blocks(flip(e), P, deg, "in_degree")
 
     # a superstep is one half-step: (blocks, rep, sent score, updated score)
     halves = [(fwd, frep, "hub", "authority"), (bwd, brep, "authority", "hub")]
-    k = 0
 
     def step(state: DataFrame, obs, it: int) -> DataFrame:
-        nonlocal k
-        blocks, rep, sent, upd = halves[k % 2]
-        k += 1
+        blocks, rep, sent, upd = halves[it % 2]
         # authority(d) = Σ hub(s) over in-edges; hub(s) = Σ authority(d)
         # over out-edges
         return (

@@ -37,14 +37,13 @@ from pyspark.sql import functions as F
 
 from .gcommon import (
     build_blocks,
+    degree_table,
     flip,
     iterate,
     gather,
     l1_change,
     norm_edges,
     pin_checkpoint,
-    pin_vertices,
-    vertex_set,
 )
 
 NUM_REGISTERS = 16
@@ -78,14 +77,16 @@ def hyperball(
     """
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     B = NUM_REGISTERS
-    v = vertex_set(edges) if vertices is None else vertices.select("id")
-    v, V = pin_vertices(v, P, "hyperball")
+    # counters flow dst -> src (ball along out-links): the blocks are built
+    # on the reversed simple-graph edges, keyed by dst
+    e = pin_checkpoint(norm_edges(edges, P, directed=directed, materialize="none"))
+    deg = degree_table(flip(e), P, "hyperball", vertices, edges)
 
     m = (F.col("id") * HASH_A + HASH_B) % HASH_MOD
     j = (m % B).cast("int")
     rho = _rho(F.shiftright(m, 4)).cast("int")
     rcols = [f"r{i}" for i in range(B)]
-    cur0 = v.select(
+    cur0 = deg.table.select(
         "id",
         *[F.when(j == i, rho).otherwise(F.lit(0)).cast("int").alias(c) for i, c in enumerate(rcols)],
     )
@@ -103,12 +104,9 @@ def hyperball(
             F.round(F.lit(EST_NUM_E6) / F.col("sum_int")).cast("long").alias("ball_e6"),
         )
 
-    if V == 0:
+    if deg.V == 0:
         return out(cur0)
-    # counters flow dst -> src (ball along out-links): the blocks are built
-    # on the reversed simple-graph edges, keyed by dst
-    e = pin_checkpoint(norm_edges(edges, P, directed=directed, materialize="none"))
-    blocks, rep, E = build_blocks(flip(e), P)
+    blocks, rep, E = build_blocks(flip(e), P, deg)
 
     def step(cur: DataFrame, obs, it: int) -> DataFrame:
         # greatest() skips the null registers of a vertex no counter reached

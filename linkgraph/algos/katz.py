@@ -16,8 +16,8 @@ a fixed 4 supersteps against a 4-step unrolled SQL twin.
 
 The superstep is this update rule on the gcommon kernel: the pinned
 state joins the sum of its copies sent along the self-loop-free,
-deduplicated edges (``gather``; ``simple_graph``, blocks hub-split and
-salted), one Spark job per superstep; the state's L1 change rides
+deduplicated edges (``gather``; ``pin_sym`` and ``degree_table``, blocks
+hub-split and salted), one Spark job per superstep; the state's L1 change rides
 the pin as an Observation.
 """
 
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import build_blocks, gather, iterate, l1_change, pin_checkpoint, simple_graph
+from .gcommon import build_blocks, degree_table, gather, iterate, l1_change, pin_checkpoint, pin_sym
 
 SCALE = 1_000_000
 
@@ -39,11 +39,12 @@ def katz_centrality(
 ) -> DataFrame:
     """Returns (id, katz_e6) after ``iters`` quantized supersteps."""
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e, v, V = simple_graph(edges, P, "katz_centrality")
-    x0 = v.select("id", F.lit(SCALE).cast("long").alias("x"))
-    if V == 0:
+    e, _ = pin_sym(edges, P, "katz_centrality", directed=True)
+    deg = degree_table(e, P, "katz_centrality")
+    x0 = deg.table.select("id", F.lit(SCALE).cast("long").alias("x"))
+    if deg.V == 0:
         return x0.withColumnRenamed("x", "katz_e6")
-    blocks, rep, E = build_blocks(e, P)
+    blocks, rep, E = build_blocks(e, P, deg)
 
     def step(x: DataFrame, obs, it: int) -> DataFrame:
         new = F.lit(SCALE) + F.round(F.lit(alpha) * F.coalesce("s", F.lit(0))).cast("long")

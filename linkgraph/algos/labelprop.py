@@ -23,13 +23,12 @@ from pyspark.sql import functions as F
 
 from .gcommon import (
     build_blocks,
+    degree_table,
     gather,
     iterate,
     labels_changed,
     norm_edges,
     pin_checkpoint,
-    pin_vertices,
-    vertex_set,
 )
 
 
@@ -43,15 +42,15 @@ def label_propagation(
     """Returns (labels(id, label), per-iteration metrics); an empty vertex
     set gives an empty frame and no metrics."""
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    v = vertex_set(edges) if vertices is None else vertices.select("id")
-    v, V = pin_vertices(v, P, "label_propagation")
-    if V == 0:
-        return v.select("id", F.col("id").alias("label")), []
-    # the symmetric view is pinned once: the hub probe and the block build
+    # the symmetric view is pinned once: the degree table and the block build
     # then read it without re-running its dedup and partitioning shuffles
     sym = pin_checkpoint(norm_edges(edges, P, materialize="none"))
-    blocks, rep, E = build_blocks(sym, P)
-    del sym  # only the block build reads it; let the cleaner free it
+    deg = degree_table(sym, P, "label_propagation", vertices, edges)
+    v = deg.table.select("id")
+    if deg.V == 0:
+        return v.select("id", F.col("id").alias("label")), []
+    blocks, rep, E = build_blocks(sym, P, deg)
+    del sym  # only the set-up reads it; let the cleaner free it
 
     def step(labels: DataFrame, obs, it: int) -> DataFrame:
         new = F.coalesce("nb_label", F.col("label"))

@@ -20,9 +20,9 @@ vector) and the per-edge contribution expression.
     reads the old rank from the same row.  A join of the update back to
     the old ranks squared the pinned state's size estimate every
     superstep, and after ~15 tol-mode supersteps the planner spent
-    minutes a superstep on that number.  The vertex table is read only to
+    minutes a superstep on that number.  The degree table is read only to
     start the state.
-  * **Pinned partitioning**: the vertex table, the blocks, the salt or
+  * **Pinned partitioning**: the degree table, the blocks, the salt or
     bucket map and every superstep's rank state are eager local
     checkpoints taken with AQE off (gcommon.pin_checkpoint).  Each is a
     lineage-free plan leaf that keeps its hashpartitioning(key, P), so the
@@ -36,7 +36,9 @@ vector) and the per-edge contribution expression.
     PageRank and the weighted variant take c from the observed S;
     convergence mode and personalized PageRank carry a static dangling
     flag and sum dm over the dangling vertices alone (no cancellation,
-    which a reset vector on a few sources would concentrate).
+    which a reset vector on a few sources would concentrate).  The flag
+    is the degree table's ``out_degree == 0``, and t's own dangling mass
+    an observed count over V (or over the sources): no pass of its own.
   * **One Spark job per superstep — tol mode included**: the mass sum or
     the dangling raw mass, and the L1 convergence delta, ride the pin via
     the Observation API (the delta needs the new deficit before the job
@@ -62,12 +64,11 @@ from .gcommon import (  # noqa: F401  (adjacency_blocks is re-exported)
     DEFAULT_BLOCK_SIZE,
     adjacency_blocks,
     build_blocks,
+    degree_table,
     iterate,
     pin_blocks,
     pin_checkpoint,
-    pin_vertices,
     propagate,
-    vertex_set,
 )
 
 
@@ -144,13 +145,6 @@ def _weighted_contribs(joined: DataFrame) -> DataFrame:
     )
 
 
-def _flag_dangling(v: DataFrame, edges: DataFrame) -> DataFrame:
-    """``v`` plus the static flag ``dang``: the vertex has no out-edge."""
-    srcs = edges.select(F.col("src").alias("id")).distinct()
-    return v.join(srcs.withColumn("_s", F.lit(1)).hint("shuffle_hash"), "id", "left") \
-        .select(*v.columns, F.col("_s").isNull().alias("dang"))
-
-
 def _supersteps(
     edges: DataFrame,
     v: DataFrame,
@@ -166,6 +160,7 @@ def _supersteps(
     start: Callable[[], DataFrame] | None = None,
     tol: float | None = None,
     checkpoint_dir: str | None = None,
+    td: float = 0.0,
 ) -> tuple[DataFrame, list[dict]]:
     """The PageRank superstep shared by all three variants.
 
@@ -180,16 +175,15 @@ def _supersteps(
     d times the input state's dangling mass, summed over the dangling
     vertices alone (the static ``dang`` flag) and known before
     the superstep runs: the rounding error of 1 - S, which 1/V spreads
-    thin, would land on the few sources.  ``start()`` gives the initial
-    ranks (t if None).  ``tol`` switches to convergence mode, which needs
-    the flag too: the L1 delta needs the new deficit before the job runs.
+    thin, would land on the few sources; ``td`` is Σ_dang t.  ``start()``
+    gives the initial ranks (t if None).  ``tol`` switches to convergence
+    mode, which needs the flag too: the L1 delta needs the new deficit
+    before the job runs.
     """
     personal = isinstance(tele, str)
     t = F.col(tele) if personal else F.lit(tele)
     carry = v.columns[1:]  # the reset column and the dangling flag ride in the state
     dang = "dang" in carry
-    # Σ_dang t: the dangling mass of t itself, so of a deficit folded as c·t
-    td = float(v.filter(F.col("dang")).agg(F.sum(t)).collect()[0][0] or 0.0) if dang else 0.0
     c = 0.0  # the deficit of the current raw state
     sd = td  # its dangling raw mass Σ_dang r' (with the flag)
     nxt = 0.0  # the deficit of the superstep being run (with the flag)
@@ -277,7 +271,6 @@ def pagerank(
     checkpoint_dir: str | None = None,
     hub_degree_threshold: int | None = None,
     num_salts: int = 8,
-    block_size: int | None = None,
     dst_buckets: int | None = None,
     initial_ranks: DataFrame | None = None,
 ) -> tuple[DataFrame, list[dict]]:
@@ -301,25 +294,21 @@ def pagerank(
     vertex set gives an empty (id, rank) frame and no metrics.
     """
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    bs = block_size or hub_degree_threshold or DEFAULT_BLOCK_SIZE
+    bs = hub_degree_threshold or DEFAULT_BLOCK_SIZE
     conv_mode = num_iters is None
 
-    v = vertex_set(edges) if vertices is None else vertices.select("id")
-    # convergence mode only: a static dangling flag rides along on the
-    # vertex table — the tol-driven loop observes the raw dangling mass in
-    # the SAME job as the update, which is what lets the next superstep
-    # know its own deficit without a separate aggregation job.
-    # Fixed-iteration runs never read the flag, so they skip the E-row
-    # src-distinct + V-row join and keep the plain vertex build.
-    if conv_mode:
-        v = _flag_dangling(v, edges)
-    v, V = pin_vertices(v, P, "pagerank")
+    deg = degree_table(edges, P, "pagerank", vertices)
+    V = deg.V
     if V == 0:
-        return v.select("id", F.lit(0.0).alias("rank")), []
+        return deg.table.select("id", F.lit(0.0).alias("rank")), []
+    # convergence mode only: the static dangling flag rides in the state, so
+    # each superstep observes its raw dangling mass in the update's job
+    dang = [(F.col("out_degree") == 0).alias("dang")] if conv_mode else []
+    v = deg.table.select("id", *dang)
     if dst_buckets:
         blocks, rep, E = bucketed_adjacency_blocks(edges, P, dst_buckets)
     else:
-        blocks, rep, E = build_blocks(edges, P, bs, num_salts)
+        blocks, rep, E = build_blocks(edges, P, deg, block_size=bs, num_salts=num_salts)
 
     warm = None
     if initial_ranks is not None:
@@ -335,7 +324,7 @@ def pagerank(
     return _supersteps(
         edges, v, V, E, P, blocks, rep, _contribs, damping, 1.0 / V,
         max_iter if conv_mode else num_iters, warm,
-        tol=tol if conv_mode else None, checkpoint_dir=checkpoint_dir,
+        tol=tol if conv_mode else None, checkpoint_dir=checkpoint_dir, td=deg.dangling / V,
     )
 
 
@@ -353,26 +342,28 @@ def personalized_pagerank(
 
     Shares the CSR-block superstep with :func:`pagerank`, with the reset
     vector as the teleport term; runs a fixed iteration count (the
-    suite-parity mode).  The reset vector joins the pinned vertex table as
+    suite-parity mode).  The reset vector joins the pinned degree table as
     a broadcast (source sets are tiny relative to V).  An empty
     ``sources`` raises ``ValueError``; an empty vertex set gives an empty
     frame.
     """
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    deg = degree_table(edges, P, "personalized_pagerank", vertices)
     S = sources.select("id").distinct()
-    nS = S.count()
+    # one job: the source count and how many sources are dangling
+    nS, nd = S.join(deg.table, "id", "left").agg(
+        F.count(F.lit(1)), F.count(F.when(F.col("out_degree") == 0, 1))
+    ).collect()[0]
     if nS == 0:
         raise ValueError("personalized_pagerank: sources is empty (no id rows)")
+    if deg.V == 0:
+        return deg.table.select("id", F.lit(0.0).alias("rank"))
     reset = F.broadcast(S.withColumn("_p", F.lit(1.0 / nS)))
-    v = vertex_set(edges) if vertices is None else vertices.select("id")
-    v, V = pin_vertices(_flag_dangling(
-        v.join(reset, "id", "left").select("id", F.coalesce("_p", F.lit(0.0)).alias("_p")),
-        edges,
-    ), P, "personalized_pagerank")
-    if V == 0:
-        return v.select("id", F.lit(0.0).alias("rank"))
-    blocks, rep, E = build_blocks(edges, P)
-    ranks, _ = _supersteps(edges, v, V, E, P, blocks, rep, _contribs, damping, "_p", num_iters)
+    v = deg.table.join(reset, "id", "left").select(
+        "id", F.coalesce("_p", F.lit(0.0)).alias("_p"), (F.col("out_degree") == 0).alias("dang"))
+    blocks, rep, E = build_blocks(edges, P, deg)
+    ranks, _ = _supersteps(edges, v, deg.V, E, P, blocks, rep, _contribs, damping, "_p",
+                           num_iters, td=nd / nS)
     return ranks
 
 
@@ -396,8 +387,8 @@ def pagerank_weighted(
     or an empty frame for an empty vertex set.
     """
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    v = vertex_set(edges) if vertices is None else vertices.select("id")
-    v, V = pin_vertices(v, P, "pagerank_weighted")
+    deg = degree_table(edges, P, "pagerank_weighted", vertices)
+    v, V = deg.table.select("id"), deg.V
     if V == 0:
         return v.select("id", F.lit(0.0).alias("rank"))
     blocks, E = pin_blocks(

@@ -36,7 +36,7 @@ from itertools import permutations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .triangles import _oriented, _pick_mod, _u
+from .triangles import _indexed, _oriented, _pick_mod, _sym, _u
 
 Edge = tuple[int, int]
 
@@ -260,19 +260,8 @@ def pattern_count_sampled(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    o = _oriented(edges).withColumn(
-        "eid", F.xxhash64(F.col("a"), F.col("b"), F.lit(seed))
-    )
-    from ..ingest import dense_ids
-
-    o = o.withColumn("_key", F.concat_ws("_", "a", "b"))
-    idx = dense_ids(o.select("_key"), "_key", P)
-    o = o.join(idx, "_key").drop("_key").persist()
-    m = o.count()
-
-    sym = o.select(F.col("a").alias("x"), F.col("b").alias("w"), "eid").union(
-        o.select(F.col("b").alias("x"), F.col("a").alias("w"), "eid")
-    )
+    o, m = _indexed(edges, P, seed)
+    sym = _sym(o, "eid")
 
     edge_t = "array<struct<p:bigint,q:bigint,eid:bigint>>"
     cached: list[DataFrame] = []

@@ -15,12 +15,13 @@ weighted PageRank).  Mass is conserved up to rounding, so no
 normalization pass is needed for a fixed iteration count.
 
 Each half-step is one superstep of the gcommon kernel, over the
-self-loop-free, deduplicated edges (``simple_graph``): the authority
+self-loop-free, deduplicated edges (``pin_sym``): the authority
 half-step ``propagate``s hub scores to blocks built on the edges, the hub
 half-step authority scores to blocks built on the reversed edges, and
-outdeg / indeg are the two block sets' ``out_degree``.  round(score /
-degree) is taken once per block row; a half-step is one Spark job, and
-the state's L1 change rides its pin.
+outdeg / indeg are the two block sets' ``out_degree``.  One degree table
+(``degree_table``, with in-degrees) gives both block sets their hubs.
+round(score / degree) is taken once per block row; a half-step is one
+Spark job, and the state's L1 change rides its pin.
 
 New web-ranking capability alongside PageRank/HITS (no reference
 analogue; /root/reference is a pattern-counting engine).
@@ -33,12 +34,13 @@ from pyspark.sql import functions as F
 
 from .gcommon import (
     build_blocks,
+    degree_table,
     flip,
     iterate,
     l1_change,
     gather,
     pin_checkpoint,
-    simple_graph,
+    pin_sym,
 )
 
 SCALE = 1_000_000
@@ -51,22 +53,20 @@ def salsa(
 ) -> DataFrame:
     """Returns (id, hub_e6, auth_e6) after ``num_iters`` quantized rounds."""
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e, v, V = simple_graph(edges, P, "salsa")
+    e, _ = pin_sym(edges, P, "salsa", directed=True)
+    deg = degree_table(e, P, "salsa", in_degree=True)
     one = F.lit(SCALE).cast("long")
-    state0 = v.select("id", one.alias("h"), one.alias("a"))
+    state0 = deg.table.select("id", one.alias("h"), one.alias("a"))
     out = lambda s: s.select("id", F.col("h").alias("hub_e6"), F.col("a").alias("auth_e6"))  # noqa: E731
-    if V == 0:
+    if deg.V == 0:
         return out(state0)
-    fwd, frep, E = build_blocks(e, P)
-    bwd, brep, _ = build_blocks(flip(e), P)
+    fwd, frep, E = build_blocks(e, P, deg)
+    bwd, brep, _ = build_blocks(flip(e), P, deg, "in_degree")
     # a superstep is one half-step: (blocks, rep, sent score, updated score)
     halves = [(fwd, frep, "h", "a"), (bwd, brep, "a", "h")]
-    k = 0
 
     def step(state: DataFrame, obs, it: int) -> DataFrame:
-        nonlocal k
-        blocks, rep, sent, upd = halves[k % 2]
-        k += 1
+        blocks, rep, sent, upd = halves[it % 2]
         # Σ round(sent(src) / out_degree(src)) over each vertex's in-edges
         m = F.round(F.col(sent) / F.col("out_degree")).cast("long")
         new = F.coalesce("n", F.lit(0)).cast("long")

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import DEFAULT_BLOCK_SIZE, hub_split
+from .gcommon import DEFAULT_BLOCK_SIZE, degree_table, hub_split
 
 _U_DENOM = float(1 << 40)
 
@@ -121,6 +121,31 @@ def _oriented(edges: DataFrame) -> DataFrame:
         )
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
+    )
+
+
+def _indexed(
+    edges: DataFrame, P: int, seed: int | None = None
+) -> tuple[DataFrame, int]:
+    """(o, m): the canonical edge list (:func:`_oriented`) with each edge's
+    dense index ``id``, persisted, and m its row count; with ``seed`` also
+    its hash id ``eid``.  The index ranks the ``a_b`` string key
+    (``ingest.dense_ids``, a global rank at any P): the uniform edge picks,
+    and with them the estimates, depend on that order."""
+    from ..ingest import dense_ids
+
+    o = _oriented(edges)
+    if seed is not None:
+        o = o.withColumn("eid", F.xxhash64(F.col("a"), F.col("b"), F.lit(seed)))
+    o = o.withColumn("_key", F.concat_ws("_", "a", "b"))
+    o = o.join(dense_ids(o.select("_key"), "_key", P), "_key").drop("_key").persist()
+    return o, o.count()
+
+
+def _sym(o: DataFrame, *payload: Column | str) -> DataFrame:
+    """(x, w, payload…): both orientations of each canonical edge (a, b)."""
+    return o.select(F.col("a").alias("x"), F.col("b").alias("w"), *payload).union(
+        o.select(F.col("b").alias("x"), F.col("a").alias("w"), *payload)
     )
 
 
@@ -213,9 +238,13 @@ def _blocked_sym_adjacency(
     Determinism: arrays are sorted within a block and blocks are keyed by
     the deterministic ``bi``, so a two-level pick (global index ->
     bi-ordered block offsets, see _two_level_pick) is a pure function of
-    the data at any partition layout.
+    the data at any partition layout.  The hub set comes from the view's
+    pinned degree table (``gcommon.degree_table``).
     """
-    return hub_split(sym, "x", "w", elem, block_size)[0].select("x", "bi", "nbrs")
+    view = sym.select(F.col("x").alias("src"), F.col("w").alias("dst"))
+    P = int(sym.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    hubs = degree_table(view, P, "blocked adjacency").hubs(block_size)
+    return hub_split(sym, "x", "w", elem, block_size, hubs).select("x", "bi", "nbrs")
 
 
 def _blocked_adjacency(
@@ -223,10 +252,7 @@ def _blocked_adjacency(
 ) -> DataFrame:
     """Plain-neighbor blocked adjacency of the canonical edge list ``o``
     (a, b): symmetric view + _blocked_sym_adjacency with ``elem = w``."""
-    sym = o.select(F.col("a").alias("x"), F.col("b").alias("w")).union(
-        o.select(F.col("b").alias("x"), F.col("a").alias("w"))
-    )
-    return _blocked_sym_adjacency(sym, F.col("w"), block_size)
+    return _blocked_sym_adjacency(_sym(o), F.col("w"), block_size)
 
 
 def _two_level_pick(
@@ -375,28 +401,18 @@ def three_chain_count_sampled(
     exact 3-chain count.
     """
     spark = edges.sparkSession
-    o = _oriented(edges).withColumn(
-        "eid", F.xxhash64(F.col("a"), F.col("b"), F.lit(seed))
-    ).persist()
-    m = o.count()
-
-    from ..ingest import dense_ids
-
-    ok = o.withColumn("_key", F.concat_ws("_", "a", "b"))
-    idx = dense_ids(ok.select("_key"), "_key", partitions or 8)
-    ok = ok.join(idx, "_key").drop("_key")
+    P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    o, m = _indexed(edges, P, seed)
 
     est = spark.range(num_estimators).select(
         F.col("id").alias("est_id"),
         _pick_mod("id", m, seed).alias("id"),
     )
-    e1 = est.join(ok, "id").select(
+    e1 = est.join(o, "id").select(
         "est_id", F.col("a").alias("u"), F.col("b").alias("v"),
         F.col("eid").alias("eid1"),
     )
-    sym = o.select(F.col("a").alias("x"), F.col("b").alias("w"), "eid").union(
-        o.select(F.col("b").alias("x"), F.col("a").alias("w"), "eid")
-    )
+    sym = _sym(o, "eid")
     c_per_est = (
         e1.select("est_id", "eid1", F.explode(F.array("u", "v")).alias("x"))
         .join(sym, "x")
@@ -435,18 +451,12 @@ def four_chain_count_sampled(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    o = _oriented(edges)
-    from ..ingest import dense_ids
-
-    ok = o.withColumn("_key", F.concat_ws("_", "a", "b"))
-    idx = dense_ids(ok.select("_key"), "_key", P)
-    ok = ok.join(idx, "_key").drop("_key").persist()
-    m = ok.count()
+    ok, m = _indexed(edges, P)
 
     # hub-split blocked adjacency: no vertex's neighbor list ever
     # materializes as one array (see _blocked_adjacency); both neighbor
     # picks are two-level (block ∝ size, then element) uniform draws
-    adj = _blocked_adjacency(o).persist()
+    adj = _blocked_adjacency(ok).persist()
 
     est = spark.range(num_estimators).select(
         F.col("id").alias("est_id"),
@@ -526,21 +536,8 @@ def four_chain_count_sampled_multiplan(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    o = _oriented(edges)
-    from ..ingest import dense_ids
-
-    ok = o.withColumn("_key", F.concat_ws("_", "a", "b"))
-    idx = dense_ids(ok.select("_key"), "_key", P)
-    ok = ok.join(idx, "_key").drop("_key").persist()  # (a, b, id)
-    m = ok.count()
-
-    sym = ok.select(
-        F.col("a").alias("x"), F.col("b").alias("w"), F.col("id").alias("eid")
-    ).union(
-        ok.select(
-            F.col("b").alias("x"), F.col("a").alias("w"), F.col("id").alias("eid")
-        )
-    )
+    ok, m = _indexed(edges, P)  # (a, b, id)
+    sym = _sym(ok, F.col("id").alias("eid"))
     # hub-split blocked struct adjacency: (x, bi, nbrs array<struct<eid,w>>)
     # — the shared _blocked_sym_adjacency build with a struct element, so
     # per-row arrays are bounded by ~block_size and structs sort by eid
@@ -668,17 +665,11 @@ def k_chain_count_sampled(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    o = _oriented(edges)
-    from ..ingest import dense_ids
-
-    ok = o.withColumn("_key", F.concat_ws("_", "a", "b"))
-    idx = dense_ids(ok.select("_key"), "_key", P)
-    ok = ok.join(idx, "_key").drop("_key").persist()
-    m = ok.count()
+    ok, m = _indexed(edges, P)
 
     # hub-split blocked adjacency + two-level picks (see _blocked_adjacency):
     # a mega-hub on the path never materializes its full neighbor list
-    adj = _blocked_adjacency(o).persist()
+    adj = _blocked_adjacency(ok).persist()
 
     est = spark.range(num_estimators).select(
         F.col("id").alias("est_id"),
@@ -744,15 +735,7 @@ def three_motif_sampled(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    o = _oriented(edges).withColumn(
-        "eid", F.xxhash64(F.col("a"), F.col("b"), F.lit(seed))
-    )
-    from ..ingest import dense_ids
-
-    o = o.withColumn("_key", F.concat_ws("_", "a", "b"))
-    idx = dense_ids(o.select("_key"), "_key", P)
-    o = o.join(idx, "_key").drop("_key").persist()
-    m = o.count()
+    o, m = _indexed(edges, P, seed)
 
     est = spark.range(num_estimators).select(
         F.col("id").alias("est_id"),
@@ -762,9 +745,7 @@ def three_motif_sampled(
         "est_id", F.col("a").alias("u"), F.col("b").alias("v"),
         F.col("eid").alias("eid1"),
     )
-    sym = o.select(F.col("a").alias("x"), F.col("b").alias("w"), "eid").union(
-        o.select(F.col("b").alias("x"), F.col("a").alias("w"), "eid")
-    )
+    sym = _sym(o, "eid")
     # the SHARED 2-edge partial-sample stage
     cand = (
         e1.select("est_id", "eid1", "u", "v", F.explode(F.array("u", "v")).alias("x"))
@@ -821,16 +802,8 @@ def triangle_count_sampled(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    o = _oriented(edges).withColumn(
-        "eid", F.xxhash64(F.col("a"), F.col("b"), F.lit(seed))
-    )
     # dense index for uniform edge sampling
-    from ..ingest import dense_ids
-
-    o = o.withColumn("_key", F.concat_ws("_", "a", "b"))
-    idx = dense_ids(o.select("_key"), "_key", P)
-    o = o.join(idx, "_key").drop("_key").persist()
-    m = o.count()
+    o, m = _indexed(edges, P, seed)
 
     est = spark.range(num_estimators).select(
         F.col("id").alias("est_id"),
@@ -841,9 +814,7 @@ def triangle_count_sampled(
     )
 
     # symmetric adjacency with canonical edge ids
-    sym = o.select(F.col("a").alias("x"), F.col("b").alias("w"), "eid").union(
-        o.select(F.col("b").alias("x"), F.col("a").alias("w"), "eid")
-    )
+    sym = _sym(o, "eid")
 
     cand = (
         e1.select("est_id", "eid1", "u", "v", F.explode(F.array("u", "v")).alias("x"))

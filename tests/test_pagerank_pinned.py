@@ -6,8 +6,9 @@ frontier program (the BFS family, SSSP, Voronoi, multi-seed PPR); a state
 size estimate that grows linearly, not geometrically, over the
 supersteps; one Exchange per PageRank superstep on a hub-free graph and
 two on a salted one, and one, with no sort, per label-propagation
-superstep; a rank state that keeps hashpartitioning(id, P); and an AQE
-setting that ``pin_checkpoint`` always restores.  Also the degenerate
+superstep; a rank state that keeps hashpartitioning(id, P); an AQE
+setting that ``pin_checkpoint`` always restores; and a set-up that reads
+one pinned degree table, at least 2 jobs fewer than separate passes.  Also the degenerate
 inputs (an empty edge table, a null id in the edges or the sources, an
 empty personalization or source set) and a checkpoint that refuses to
 resume against another graph, another damping or without its
@@ -138,6 +139,20 @@ def test_pagerank_one_job_per_extra_superstep(spark, rmat, path, case):
     n2 = _jobs(spark, f"pin2{case}", lambda: _run(spark, case, rmat, path, 2))
     n4 = _jobs(spark, f"pin4{case}", lambda: _run(spark, case, rmat, path, 4))
     assert n4 - n2 == 2
+
+
+# jobs of a 2-superstep call when each set-up fact was a pass of its own
+# (vertex-set pin, hub probe, tol mode's dangling flag and its td collect)
+SETUP_JOBS_BEFORE = {"hubfree": 8, "salted": 11, "tol": 10, "cc": 8, "lp": 8}
+
+
+@pytest.mark.parametrize("case", sorted(SETUP_JOBS_BEFORE))
+def test_setup_reads_one_degree_table(spark, rmat, path, case):
+    """The vertex set, hub set, dangling flag and V come from one pinned
+    degree table: a 2-superstep call runs at least 2 jobs fewer."""
+    assert spark.conf.get(AQE) == "true"
+    n = _jobs(spark, f"setup{case}", lambda: _run(spark, case, rmat, path, 2))
+    assert n <= SETUP_JOBS_BEFORE[case] - 2
 
 
 def _superstep_plans(monkeypatch, pinned=None):

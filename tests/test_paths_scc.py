@@ -379,6 +379,26 @@ def test_bowtie_hand_case(spark):
                    40: "disc", 41: "disc"}
 
 
+def _cached_plans(spark):
+    """How many plans the session's CacheManager holds (its ``isEmpty`` is
+    the only public view; other tests' persisted fixtures share it)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_bowtie_leaves_no_cached_plan(spark):
+    """bowtie_regions pins its frames instead of persisting them, so a call
+    on an unpersisted input leaves the cache as it found it."""
+    from linkgraph.algos.components import bowtie_regions
+
+    e = spark.createDataFrame(datagen.expected_edges(300), "src long, dst long")
+    before = _cached_plans(spark)
+    assert bowtie_regions(e, partitions=8).count() > 0
+    assert _cached_plans(spark) == before
+
+
 def test_luby_mis_matches_sequential(spark, edges30, edge_rows):
     from linkgraph.algos.mis import PRI_A, PRI_B, PRI_M, maximal_independent_set
 

@@ -214,9 +214,10 @@ def test_blocked_pick_uniform_and_deterministic(spark):
 
 def test_tol_pagerank_single_job_per_superstep(spark):
     """Tol-driven PageRank runs ONE Spark job per superstep: with AQE off
-    (1 action = 1 job), the convergence run costs exactly one more job
-    than a fixed-iteration run of the same superstep count — the single
-    one-time dangling-vertex count — and produces identical ranks.
+    (1 action = 1 job), the convergence run costs exactly as many jobs as
+    a fixed-iteration run of the same superstep count — its dangling flag
+    and dangling count ride the degree table's pin — and produces
+    identical ranks.
 
     (With AQE on, the same single action surfaces as multiple
     stage-materialization jobs, so the accounting is done AQE-off.)"""
@@ -237,7 +238,7 @@ def test_tol_pagerank_single_job_per_superstep(spark):
         sc.setJobGroup("r5fixed", "fixed-iter pagerank")
         ranks2, _ = pagerank(edges, num_iters=iters, partitions=8)
         n_fixed = len(sc.statusTracker().getJobIdsForGroup("r5fixed"))
-        assert n_conv == n_fixed + 1
+        assert n_conv == n_fixed
         diff = (
             ranks.withColumnRenamed("rank", "r1")
             .join(ranks2.withColumnRenamed("rank", "r2"), "id")
