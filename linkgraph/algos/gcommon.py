@@ -18,6 +18,7 @@
 * ``send`` / ``frontier`` / ``relax``: the sparse-state supersteps on
   that view: a state's rows sent along their out-edges, and the
   level-synchronous BFS and the min-relaxation loops built on it.
+* ``h_index``: the H-index of an array column (core and truss numbers).
 * ``iterate``: the superstep loop (resume, timing, metrics, checkpoint
   save, stop test).
 
@@ -41,10 +42,20 @@ or (source, vertex) pairs) and send it along the pinned E-row view
 instead: a block build costs more than their few supersteps over a
 static edge set save.  ``frontier`` runs the BFS family
 (``paths.bfs_distances``, the (s, v) BFS of closeness and the distance
-histogram, the sigma-carrying forward sweep of stress and betweenness);
-``relax`` runs SSSP and the Voronoi partition; multi-seed PPR is an e6
-push on ``send``.  Each superstep's state is a union of the old state and
-its new rows, so it keeps its partitioning and is one Spark job.
+histogram, the sigma-carrying forward sweep of stress and betweenness)
+and SCC's backward membership; ``relax`` runs SSSP, the Voronoi
+partition, SCC's forward colouring and the condensation levels;
+multi-seed PPR is an e6 push on ``send``.  Each superstep's state is a
+union of the old state and its new rows, so it keeps its partitioning
+and is one Spark job.
+
+The other fixpoints over a static edge set run their own step on
+``iterate``: truss numbers (the edge H-index over a pinned
+triangle-edge incidence table), ACL push PPR and synchronous Louvain
+(both levels).  The peelers (``kcore_vertices``, ``ktruss_edges``, MIS,
+colouring, matching, MSF, densest subgraph, SCC's trim) shrink their
+edge set every round, so they stay off the loop; so does Louvain
+multilevel's one contraction.
 
 Reference parity: the loop replaces ZGraph's OpenMP reduction +
 MPI_Allreduce superstep (ZGraph's src/ZGraphInstance.cpp:257-297);
@@ -453,6 +464,7 @@ def frontier(
     P: int,
     max_iter: int,
     sums: tuple[str, ...] = (),
+    check: Callable[[int], None] | None = None,
 ) -> tuple[DataFrame, list[dict]]:
     """Level-synchronous BFS over the pinned view ``sym``; returns (state,
     metrics).
@@ -464,10 +476,13 @@ def frontier(
     anti-joins what the state holds and appends the rest at dist l + 1.
     The new frontier's size rides the pin as ``frontier``, and the loop
     stops when it is 0.  Level l is ``state.filter(dist == l)``.  An empty
-    start gives (start, []).
+    start gives (start, []).  ``check``, if given, is called with the
+    start's row count, which its pin observes, before the first superstep.
     """
     k = [*keys, "id"]
     state, n = pin_vertices(start, P, algo, *k)
+    if check is not None:
+        check(n)
     if n == 0:
         return state, []
     dist_t = state.schema["dist"].dataType
@@ -539,6 +554,14 @@ def relax(
 
     return iterate(view, lambda _: state, step, record, algo, P, E, max_iter,
                    output=lambda s: s.select("id", col))
+
+
+def h_index(values: Column) -> Column:
+    """The H-index of the array column ``values``: the largest h such that
+    h of its values are >= h.  Sorted descending, the values above their
+    0-based position are a prefix, and its length is the H-index — one
+    array expression, no window sort."""
+    return F.size(F.filter(F.sort_array(values, asc=False), lambda x, i: x > i))
 
 
 def labels_changed(got: dict) -> tuple[dict, bool]:

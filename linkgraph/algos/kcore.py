@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import gather_edges, iterate, norm_edges, pin_checkpoint, pin_sym
+from .gcommon import gather_edges, h_index, iterate, norm_edges, pin_checkpoint, pin_sym
 
 
 def kcore_vertices(
@@ -83,14 +83,11 @@ def core_numbers(
     )
     if E == 0:
         return core, []
-    # sorted descending, the values above their 0-based position are a
-    # prefix, and its length is the H-index
-    hidx = F.size(F.filter(F.sort_array("nc", asc=False), lambda x, i: x > i))
 
     def step(core: DataFrame, obs, it: int) -> DataFrame:
         return (
             gather_edges(core, sym, F.collect_list, nc=F.col("core"))
-            .select("id", "core", hidx.alias("h"))
+            .select("id", "core", h_index(F.col("nc")).alias("h"))
             .select("id", F.least("core", "h").alias("core"),
                     (F.col("h") < F.col("core")).alias("_drop"))
             .observe(obs, F.coalesce(

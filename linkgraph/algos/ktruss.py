@@ -19,7 +19,14 @@ The edge set only shrinks, so round cost is monotonically decreasing; the
 support join is the engine's triangle plan (shuffle-hash, no sort-merge),
 and the per-round state is the edge list hash-partitioned on ``a``.
 Termination: at most E rounds, in practice a handful (each round removes
-at least one edge or stops).
+at least one edge or stops).  The peel shrinks its edge set every round,
+so it stays off the gcommon superstep kernel.
+
+``truss_numbers`` (every edge's trussness) does not peel: it is an
+edge-H-index fixpoint over one static triangle-edge incidence table,
+pinned once, and runs on ``gcommon.iterate`` — one Spark job per round,
+the H-index one array expression (``gcommon.h_index``, shared with
+``kcore.core_numbers``).
 
 Oracle: unrolled peel SQL (MATERIALIZED per round — each round is
 referenced by the next) in suite.py plus a brute-force pytest oracle.
@@ -36,7 +43,16 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import ckpt
+from .gcommon import ckpt, h_index, iterate, pin_checkpoint, pin_edges
+
+
+def _canonical(edges: DataFrame) -> DataFrame:
+    """(a, b): each undirected simple edge once, id-canonical (a < b)."""
+    return (
+        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .dropDuplicates(["a", "b"])
+    )
 
 
 def _rank_table(e: DataFrame, P: int) -> DataFrame:
@@ -101,15 +117,7 @@ def ktruss_edges(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = ckpt(
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"]),
-        P,
-        "a",
-    )
+    e = ckpt(_canonical(edges), P, "a")
     n = e.count()
     rank = _rank_table(e, P)  # static (degree, id) order, built once
     metrics: list[dict] = []
@@ -143,34 +151,29 @@ def truss_numbers(
     { min(t_i(e'), t_i(e'')) : triangles (e, e', e'') }.  The sequence is
     monotone non-increasing per edge and converges to trussness(e) - 2,
     so no peeling loop nesting: ONE static triangle-edge incidence table
-    (the exact counter's degree-ordered wedge+closure join, built once)
-    and one join + windowed h-index per round.
+    (the exact counter's degree-ordered wedge+closure join), pinned once,
+    and one ``gcommon.iterate`` superstep per round: the state (a, b, t)
+    joins the H-index (``gcommon.h_index``) of each edge's collected
+    ``least(t1, t2)`` values, and the changed count rides the pin as
+    ``changed``.
 
-    Scale: per-round state is one t row per edge, hash-partitioned the
-    same way every round; the h-index window partitions by EDGE, so its
-    group size is that edge's support — bounded by the max hub-pair
-    support, never by |E| (an extreme-hub variant would bucket the
-    support histogram instead; the window form keeps whole-stage codegen).
+    Scale: per-round state is one t row per edge, pinned on (a, b), so the
+    grouped H-index joins it with no exchange; an edge's collected array
+    holds its support — bounded by the max hub-pair support, never by |E|.
     Rounds to fixpoint are small in practice (single digits on web-ish
     fixtures; the unrolled SQL twin's depth is regression-asserted
     against the engine's measured round count).
     """
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    algo = "truss_numbers"
 
-    e = ckpt(
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"]),
-        P,
-        "a",
-    )
+    e, E = pin_edges(edges, lambda e: _canonical(e).repartition(P, "a"), algo)
     tri = _tri_id_sorted(e)
     # one incidence row per (triangle, member edge), carrying the OTHER
-    # two member edges' keys — built once, reused every round
-    inc = ckpt(
+    # two member edges' keys; pinned on the first of them, which the state
+    # (pinned on (a, b)) then joins with no exchange
+    inc = pin_checkpoint(
         tri.select(
             F.col("x").alias("ea"), F.col("y").alias("eb"),
             F.col("x").alias("o1a"), F.col("z").alias("o1b"),
@@ -183,56 +186,46 @@ def truss_numbers(
             F.col("y").alias("ea"), F.col("z").alias("eb"),
             F.col("x").alias("o1a"), F.col("y").alias("o1b"),
             F.col("x").alias("o2a"), F.col("z").alias("o2b"),
-        )),
-        P, "ea",
+        )).repartition(P, "o1a", "o1b")
     )
-    supp = inc.groupBy("ea", "eb").agg(F.count(F.lit(1)).alias("t"))
-    cur = ckpt(
-        e.join(supp.withColumnRenamed("ea", "a").withColumnRenamed("eb", "b"),
-               ["a", "b"], "left")
-        .select("a", "b", F.coalesce(F.col("t"), F.lit(0)).cast("long").alias("t")),
-        P, "a",
+    supp = inc.groupBy(F.col("ea").alias("a"), F.col("eb").alias("b")).agg(
+        F.count(F.lit(1)).alias("t"))
+    start = pin_checkpoint(
+        e.join(supp, ["a", "b"], "left")
+        .select("a", "b", F.coalesce(F.col("t"), F.lit(0)).cast("long").alias("t"))
+        .repartition(P, "a", "b")
     )
+    out = F.col("t") + 2
+    if E == 0:
+        return start.select("a", "b", out.alias("trussness")), []
 
-    from pyspark.sql import Window
+    def other(cur: DataFrame, i: str) -> DataFrame:
+        """(o{i}a, o{i}b, t{i}): the state as the i-th other member edge.
+        (a, b) is unique in the state; the dedup says so to the planner,
+        which otherwise estimates each join as the product of its sides,
+        doubling the state's size estimate (in bits) every round."""
+        return cur.select(F.col("a").alias(f"o{i}a"), F.col("b").alias(f"o{i}b"),
+                          F.col("t").alias(f"t{i}")).dropDuplicates([f"o{i}a", f"o{i}b"])
 
-    metrics: list[dict] = []
-    for rnd in range(max_rounds):
-        t0 = time.time()
-        t1 = cur.select(F.col("a").alias("o1a"), F.col("b").alias("o1b"),
-                        F.col("t").alias("t1"))
-        t2 = cur.select(F.col("a").alias("o2a"), F.col("b").alias("o2b"),
-                        F.col("t").alias("t2"))
+    def step(cur: DataFrame, obs, it: int) -> DataFrame:
         vals = (
-            inc.join(t1.hint("shuffle_hash"), ["o1a", "o1b"])
-            .join(t2.hint("shuffle_hash"), ["o2a", "o2b"])
-            .select("ea", "eb", F.least("t1", "t2").alias("v"))
+            inc.join(other(cur, "1").hint("shuffle_hash"), ["o1a", "o1b"])
+            .join(other(cur, "2").hint("shuffle_hash"), ["o2a", "o2b"])
+            .groupBy(F.col("ea").alias("a"), F.col("eb").alias("b"))
+            .agg(h_index(F.collect_list(F.least("t1", "t2"))).alias("h"))
         )
-        win = Window.partitionBy("ea", "eb").orderBy(F.col("v").desc())
-        h = (
-            vals.withColumn("rn", F.row_number().over(win))
-            .groupBy("ea", "eb")
-            .agg(F.max(F.when(F.col("v") >= F.col("rn"), F.col("rn"))
-                       .otherwise(F.lit(0))).alias("h"))
+        h = F.coalesce(F.col("h"), F.lit(0)).cast("long")
+        return (
+            cur.join(vals.hint("shuffle_hash"), ["a", "b"], "left")
+            .select("a", "b", h.alias("t"), (h != F.col("t")).alias("_chg"))
+            .observe(obs, F.coalesce(
+                F.sum(F.col("_chg").cast("long")), F.lit(0)).alias("c"))
+            .select("a", "b", "t")
+            .repartition(P, "a", "b")
         )
-        nxt = ckpt(
-            cur.join(
-                h.withColumnRenamed("ea", "a").withColumnRenamed("eb", "b")
-                .hint("shuffle_hash"),
-                ["a", "b"], "left",
-            ).select(
-                "a", "b",
-                F.coalesce(F.col("h"), F.lit(0)).cast("long").alias("t"),
-            ),
-            P, "a",
-        )
-        changed = (
-            nxt.alias("n").join(cur.alias("c"), ["a", "b"])
-            .filter(F.col("n.t") != F.col("c.t")).count()
-        )
-        metrics.append({"round": rnd, "changed": changed,
-                        "seconds": time.time() - t0})
-        cur = nxt
-        if changed == 0:
-            break
-    return cur.select("a", "b", (F.col("t") + 2).alias("trussness")), metrics
+
+    return iterate(
+        edges, lambda _: start, step,
+        lambda got: ({"changed": int(got["c"])}, got["c"] == 0),
+        algo, P, E, max_rounds, output=lambda cur: cur.select("a", "b", out.alias("trussness")),
+    )

@@ -57,7 +57,7 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .gcommon import (  # noqa: F401  (adjacency_blocks is re-exported)
@@ -68,6 +68,7 @@ from .gcommon import (  # noqa: F401  (adjacency_blocks is re-exported)
     iterate,
     pin_blocks,
     pin_checkpoint,
+    pin_vertices,
     propagate,
 )
 
@@ -342,23 +343,28 @@ def personalized_pagerank(
 
     Shares the CSR-block superstep with :func:`pagerank`, with the reset
     vector as the teleport term; runs a fixed iteration count (the
-    suite-parity mode).  The reset vector joins the pinned degree table as
-    a broadcast (source sets are tiny relative to V).  An empty
-    ``sources`` raises ``ValueError``; an empty vertex set gives an empty
+    suite-parity mode).  The sources are pinned once, joined with the
+    degree table, and that pin observes the source count and the dangling
+    sources; the reset vector joins the pinned degree table as a broadcast
+    (source sets are tiny relative to V).  An empty ``sources`` or a null
+    source id raises ``ValueError``; an empty vertex set gives an empty
     frame.
     """
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     deg = degree_table(edges, P, "personalized_pagerank", vertices)
-    S = sources.select("id").distinct()
-    # one job: the source count and how many sources are dangling
-    nS, nd = S.join(deg.table, "id", "left").agg(
-        F.count(F.lit(1)), F.count(F.when(F.col("out_degree") == 0, 1))
-    ).collect()[0]
+    # one pin: the source count and how many sources are dangling ride it
+    obs = Observation()
+    S, nS = pin_vertices(
+        sources.select("id").distinct().join(deg.table, "id", "left"), P,
+        "personalized_pagerank", obs=obs,
+        aggs=(F.count(F.when(F.col("out_degree") == 0, 1)).alias("nd"),),
+    )
     if nS == 0:
         raise ValueError("personalized_pagerank: sources is empty (no id rows)")
     if deg.V == 0:
         return deg.table.select("id", F.lit(0.0).alias("rank"))
-    reset = F.broadcast(S.withColumn("_p", F.lit(1.0 / nS)))
+    nd = obs.get["nd"]
+    reset = F.broadcast(S.select("id", F.lit(1.0 / nS).alias("_p")))
     v = deg.table.join(reset, "id", "left").select(
         "id", F.coalesce("_p", F.lit(0.0)).alias("_p"), (F.col("out_degree") == 0).alias("dang"))
     blocks, rep, E = build_blocks(edges, P, deg)

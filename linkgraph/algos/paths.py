@@ -27,6 +27,8 @@ parity gate.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -173,6 +175,7 @@ def _sweep(
     P: int,
     algo: str,
     sums: tuple[str, ...] = (),
+    check: Callable[[int], None] | None = None,
 ) -> tuple[DataFrame, DataFrame, list[dict]]:
     """(sym, state, metrics): the BFS of every source at once, one
     ``gcommon.frontier`` keyed by source over the pinned view ``sym``.
@@ -181,14 +184,15 @@ def _sweep(
     s, bounded by |S|·V rows; the loop ends after the largest
     eccentricity.  With ``sums=("sig",)`` it carries the number of
     shortest paths from s (level-synchronous sum over the frontier — the
-    sigma recurrence of Brandes'01).
+    sigma recurrence of Brandes'01).  ``check`` is run on the source count
+    (``frontier``'s).
     """
     sym, E = pin_sym(edges, P, algo, directed)
     start = sources.select(F.col("id").alias("s")).distinct().select(
         "s", F.col("s").alias("id"), F.lit(0).cast("long").alias("dist"),
         *(F.lit(1).cast("long").alias(c) for c in sums),
     )
-    state, metrics = frontier(sym, E, start, ("s",), algo, P, max_iter, sums)
+    state, metrics = frontier(sym, E, start, ("s",), algo, P, max_iter, sums, check)
     return sym, state, metrics
 
 
@@ -285,21 +289,21 @@ def stress_centrality(
     )
 
 
-def _guard_sources(sources: DataFrame, max_sources: int | None, what: str) -> None:
-    """Refuse to run an exact all-sources O(|S|·E) sweep on a large source
-    set: these are small-graph / sampled-sources diagnostics; the web-scale
-    path for neighbourhood functions is the HyperBall sketch
+def _guard_sources(max_sources: int | None, what: str) -> Callable[[int], None]:
+    """The check ``frontier`` runs on the pinned source count before the
+    first superstep: refuse an exact all-sources O(|S|·E) sweep on a large
+    source set.  These are small-graph / sampled-sources diagnostics; the
+    web-scale path for neighbourhood functions is the HyperBall sketch
     (linkgraph.algos.hyperball).  Pass ``max_sources=None`` to force."""
-    if max_sources is None:
-        return
-    n = sources.select("id").distinct().count()
-    if n > max_sources:
-        raise ValueError(
-            f"{what}: {n} sources exceeds max_sources={max_sources}; exact "
-            "multi-source BFS is O(|S|*E) — sample the sources, raise "
-            "max_sources explicitly, or use algos.hyperball for the sketch "
-            "path at scale"
-        )
+    def check(n: int) -> None:
+        if max_sources is not None and n > max_sources:
+            raise ValueError(
+                f"{what}: {n} sources exceeds max_sources={max_sources}; exact "
+                "multi-source BFS is O(|S|*E) — sample the sources, raise "
+                "max_sources explicitly, or use algos.hyperball for the sketch "
+                "path at scale"
+            )
+    return check
 
 
 def closeness_centrality(
@@ -325,9 +329,9 @@ def closeness_centrality(
     closeness = (reached-1) / total_dist (0 when no vertex is reached),
     e6-quantized from exact integers — engine-independent.
     """
-    _guard_sources(sources, max_sources, "closeness_centrality")
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    _, state, _ = _sweep(edges, sources, directed, max_iter, P, "closeness_centrality")
+    _, state, _ = _sweep(edges, sources, directed, max_iter, P, "closeness_centrality",
+                         check=_guard_sources(max_sources, "closeness_centrality"))
     agg = state.groupBy("s").agg(
         (F.count(F.lit(1)) - 1).alias("reached"),
         F.sum("dist").alias("total_dist"),
@@ -368,9 +372,9 @@ def distance_histogram(
     (``_sweep``): |S|·V bounded state, max-eccentricity supersteps,
     O(frontier) work per superstep.  Self-pairs (d=0) are excluded.
     """
-    _guard_sources(sources, max_sources, "distance_histogram")
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    _, state, _ = _sweep(edges, sources, directed, max_iter, P, "distance_histogram")
+    _, state, _ = _sweep(edges, sources, directed, max_iter, P, "distance_histogram",
+                         check=_guard_sources(max_sources, "distance_histogram"))
     return (
         state.filter(F.col("dist") > 0)
         .groupBy("dist")

@@ -26,10 +26,10 @@ accumulators); the push scheduling is from the public ACL paper.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .gcommon import norm_edges
+from .gcommon import degree_table, iterate, pin_sym, pin_vertices, send
 
 ALPHA_NUM, ALPHA_DEN = 15, 100  # teleport 0.15
 SCALE = 1_000_000_000
@@ -49,54 +49,52 @@ def ppr_push(
     Scale: per round, ONE join of the active-vertex state against the
     src-pinned adjacency (cost ∝ Σ deg(active)) plus a grouped sum on the
     receiving vertex — mass-proportional work, state bounded by the
-    support of the answer (O(1/eps)), lineage truncated per round.
+    support of the answer (O(1/eps)).  The rounds are ``gcommon.iterate``
+    supersteps over the view and degree table pinned once
+    (``gcommon.pin_sym``, ``gcommon.degree_table``): one Spark job a
+    round, the state's size riding the pin as ``size``.
     """
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    algo = "ppr_push"
 
-    adj = norm_edges(edges, P, directed=directed, materialize="none").persist()
-    adj.count()
-    deg = adj.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).repartition(P, "id").persist()
-    deg.count()
+    adj, E = pin_sym(edges, P, algo, directed)
+    # id is unique in the degree table; the dedup says so to the planner,
+    # which otherwise adds the table's size estimate to the state's (in
+    # bits) every round
+    deg = degree_table(adj, P, algo).table.select(
+        "id", F.col("out_degree").alias("deg")).dropDuplicates(["id"])
+    start, _ = pin_vertices(
+        spark.createDataFrame([(seed, 0, SCALE)], "id long, p long, r long"), P, algo)
 
-    state = spark.createDataFrame(
-        [(seed, 0, SCALE)], "id long, p long, r long"
-    ).repartition(P, "id").localCheckpoint(eager=True)
+    d = F.coalesce(F.col("deg"), F.lit(0))
+    active = (d > 0) & (F.col("r") >= d * F.lit(eps_per_edge))
+    a = F.floor(F.col("r") * ALPHA_NUM / ALPHA_DEN).cast("long")
+    rem = F.col("r") - a
+    keep = F.floor(rem / 2).cast("long")
+    per_nb = F.floor((rem - keep) / d).cast("long")
+    dust = rem - keep - per_nb * d
 
-    for _ in range(rounds):
-        s = state.join(deg, "id", "left").fillna({"deg": 0})
-        active = (F.col("deg") > 0) & (
-            F.col("r") >= F.col("deg") * F.lit(eps_per_edge)
-        )
-        a = F.floor(F.col("r") * ALPHA_NUM / ALPHA_DEN).cast("long")
-        rem = F.col("r") - a
-        keep = F.floor(rem / 2).cast("long")
-        per_nb = F.floor((rem - keep) / F.col("deg")).cast("long")
-        dust = rem - keep - per_nb * F.col("deg")
-        upd = s.select(
+    def step(state: DataFrame, obs: Observation, it: int) -> DataFrame:
+        # both sides hash(id): no exchange, and no broadcast job a reference
+        upd = state.join(deg.hint("shuffle_hash"), "id", "left").select(
             "id",
             F.when(active, F.col("p") + a).otherwise(F.col("p")).alias("p"),
             F.when(active, keep + dust).otherwise(F.col("r")).alias("r"),
             F.when(active, per_nb).otherwise(F.lit(0)).alias("per_nb"),
         )
-        pushes = (
-            upd.filter(F.col("per_nb") > 0)
-            .select(F.col("id").alias("src"), "per_nb")
-            .join(adj.hint("shuffle_hash"), "src")
-            .select(F.col("dst").alias("id"), F.col("per_nb").alias("dr"))
-        )
-        state = (
+        pushes = send(upd.filter(F.col("per_nb") > 0), adj, p=F.lit(0).cast("long"),
+                      r=F.col("per_nb"))
+        return (
             upd.select("id", "p", "r")
-            .union(pushes.select("id", F.lit(0).alias("p"), F.col("dr").alias("r")))
+            .unionByName(pushes)
             .groupBy("id")
-            .agg(F.sum("p").cast("long").alias("p"),
-                 F.sum("r").cast("long").alias("r"))
+            .agg(F.sum("p").cast("long").alias("p"), F.sum("r").cast("long").alias("r"))
+            .observe(obs, F.count(F.lit(1)).alias("size"))
             .repartition(P, "id")
-            .localCheckpoint(eager=True)
         )
 
-    adj.unpersist()
-    deg.unpersist()
+    state, _ = iterate(adj, lambda _: start, step,
+                       lambda got: ({"size": int(got["size"])}, False),
+                       algo, P, E, rounds)
     return state.filter((F.col("p") > 0) | (F.col("r") > 0))

@@ -1,8 +1,11 @@
 """The pinned superstep kernel (``gcommon``), checked with the session's AQE
 on: one Spark job per superstep for every vertex program on it (PageRank's
 three variants, connected components, label propagation, Katz,
-eigenvector, SALSA, HITS, HyperBall, core numbers and WL) and every
-frontier program (the BFS family, SSSP, Voronoi, multi-seed PPR); a state
+eigenvector, SALSA, HITS, HyperBall, core numbers and WL), every
+frontier program (the BFS family, SSSP, Voronoi, multi-seed PPR) and
+every static-edge fixpoint on the loop (SCC, condensation levels, truss
+numbers, push PPR, synchronous Louvain), SCC and truss numbers in at
+most half the jobs a call they ran as private loops; a state
 size estimate that grows linearly, not geometrically, over the
 supersteps; one Exchange per PageRank superstep on a hub-free graph and
 two on a salted one, and one, with no sort, per label-propagation
@@ -29,7 +32,9 @@ from linkgraph.algos.hits import hits
 from linkgraph.algos.hyperball import hyperball
 from linkgraph.algos.katz import katz_centrality
 from linkgraph.algos.kcore import core_numbers
+from linkgraph.algos.ktruss import truss_numbers
 from linkgraph.algos.labelprop import label_propagation
+from linkgraph.algos.louvain import louvain_sync
 from linkgraph.algos.paths import (
     betweenness_centrality,
     bfs_distances,
@@ -39,9 +44,12 @@ from linkgraph.algos.paths import (
     stress_centrality,
 )
 from linkgraph.algos.pprmulti import multi_seed_ppr
+from linkgraph.algos.pprpush import ppr_push
 from linkgraph.algos.salsa import salsa
+from linkgraph.algos.scc import condensation_levels, strongly_connected_components
 from linkgraph.algos.voronoi import nearest_seed_partition
 from linkgraph.algos.wl import wl_refinement
+from linkgraph.suite import edges_b
 
 prmod = importlib.import_module("linkgraph.algos.pagerank")
 gcommon = importlib.import_module("linkgraph.algos.gcommon")
@@ -77,6 +85,19 @@ FRONTIER = {
         e, [r["id"] for r in s.collect()], **kw), "num_iters", 1),
 }
 
+# the static-edge fixpoints on the loop: (graph, the call running n
+# supersteps).  On the directed 60-vertex ring SCC's colouring still
+# changes colours after 4 supersteps (the path trims to nothing); its
+# truncated colouring leaves root 0 a singleton, whose removal leaves a
+# path that the trim peels the same way for every n.
+STATIC = {
+    "scc": ("ring", lambda e, n: strongly_connected_components(e, max_iter=n, partitions=8)),
+    "condensation": ("path", lambda e, n: condensation_levels(e, max_rounds=n, partitions=8)),
+    "truss": ("rmat", lambda e, n: truss_numbers(e, max_rounds=n, partitions=8)),
+    "pprpush": ("path", lambda e, n: ppr_push(e, seed=0, rounds=n, partitions=8)),
+    "louvain": ("path", lambda e, n: louvain_sync(e, num_rounds=n, partitions=8)),
+}
+
 
 @pytest.fixture(scope="module")
 def rmat(spark):
@@ -110,6 +131,10 @@ def _run(spark, case, rmat, path, n):
         algo, arg, per = FRONTIER[case]
         source = spark.createDataFrame([(0,)], "id long")
         return algo(path, source, partitions=8, **{arg: n // per})
+    if case in STATIC:
+        graph, call = STATIC[case]
+        ring = path.union(spark.createDataFrame([(59, 0)], "src long, dst long"))
+        return call({"rmat": rmat, "path": path, "ring": ring}[graph], n)
     if case == "cc":
         return connected_components(path, max_iter=n, partitions=8)
     if case == "lp":
@@ -132,13 +157,29 @@ def _jobs(spark, group, fn):
 
 
 @pytest.mark.parametrize(
-    "case", sorted(LAYOUTS) + ["cc", "lp", "ppr", "weighted", *FIXED, *PATH_GATHER, *FRONTIER]
+    "case", sorted(LAYOUTS) + ["cc", "lp", "ppr", "weighted", *FIXED, *PATH_GATHER,
+                               *FRONTIER, *STATIC]
 )
 def test_pagerank_one_job_per_extra_superstep(spark, rmat, path, case):
     assert spark.conf.get(AQE) == "true"
     n2 = _jobs(spark, f"pin2{case}", lambda: _run(spark, case, rmat, path, 2))
     n4 = _jobs(spark, f"pin4{case}", lambda: _run(spark, case, rmat, path, 4))
     assert n4 - n2 == 2
+
+
+# jobs of a warm call on edges_b(sf0.01) (300 vertices, 2,779 edges) when
+# each fixpoint superstep was a checkpoint under AQE, a count and a
+# self-join change count of its own
+STATIC_JOBS_BEFORE = {"scc": 135, "truss": 172}
+
+
+@pytest.mark.parametrize("case", sorted(STATIC_JOBS_BEFORE))
+def test_static_fixpoints_halve_their_jobs(spark, case):
+    edges = edges_b(spark, "/root/testdata/sf0.01")
+    call = STATIC[case][1]
+    call(edges, 200)  # warm: the parquet scan's own jobs
+    n = _jobs(spark, f"static{case}", lambda: call(edges, 200))
+    assert n <= STATIC_JOBS_BEFORE[case] // 2
 
 
 # jobs of a 2-superstep call when each set-up fact was a pass of its own
@@ -179,7 +220,8 @@ def _size_bits(df):
         return float("inf")
 
 
-@pytest.mark.parametrize("case", ["tol", "cc", "lp", *FIXED, *PATH_GATHER, *FRONTIER])
+@pytest.mark.parametrize("case", ["tol", "cc", "lp", *FIXED, *PATH_GATHER, *FRONTIER,
+                                  "pprpush", "louvain"])
 def test_superstep_state_size_estimate_grows_linearly(spark, rmat, path, monkeypatch, case):
     """Each superstep's state keeps its origin plan's size estimate.  When
     tol-mode PageRank joined its update back to the old state, the
@@ -187,7 +229,8 @@ def test_superstep_state_size_estimate_grows_linearly(spark, rmat, path, monkeyp
     spent minutes on BigInteger products.  The kernel's superstep shape,
     the state joined with agg(propagate(blocks, state)), adds a constant
     number of bits a superstep; so does a frontier program's, the union
-    of its state and the new rows."""
+    of its state and the new rows.  Louvain reads its state on both sides
+    of a join, and dedups one side on id to keep the estimate linear."""
     pinned, n = [], 22
     _superstep_plans(monkeypatch, pinned)
     out = _run(spark, case, rmat, path, n)
@@ -304,6 +347,8 @@ def _from_0(algo):
     katz_centrality, eigenvector_centrality, salsa, hits, hyperball,
     core_numbers, wl_refinement,
     *(pytest.param(_from_0(a), id=case) for case, (a, _, _) in FRONTIER.items()),
+    strongly_connected_components, condensation_levels, truss_numbers, louvain_sync,
+    pytest.param(lambda edges, **kw: ppr_push(edges, seed=0, **kw), id="pprpush"),
 ])
 def test_kernel_null_id_raises(spark, algo):
     edges = spark.createDataFrame(
