@@ -20,14 +20,18 @@ Round structure per superstep (all JVM-side, whole-stage codegen):
   4. winners leave the active set (anti-join); active adjacency is
      re-restricted by two semi-joins.
 
-All state (active set, colors, adjacency) stays hash-partitioned on the
-vertex id, so each round is one shuffle for the neighbor-min plus
-co-partitioned joins.  Round depth is O(log V) w.h.p. on bounded-degree
-graphs and bounded by the longest decreasing priority path in general —
-on dense cores (cliques) JP is inherently sequential, so callers cap
-``max_rounds`` and treat the output as a partial coloring of the
-lowest-priority periphery (the suite query does exactly this with an
-unrolled SQL twin; pytest runs to fixpoint on a small graph).
+All state (active set, colors, adjacency) is pinned hash-partitioned on
+the vertex id (``gcommon.pin_vertices``, ``mis.restrict``), so each round
+is one shuffle for the neighbor-min plus co-partitioned joins, and the
+winner and active counts ride the pins.  The winners are Luby MIS's
+local-minimum step (``mis.local_minima``).
+
+Round depth is O(log V) w.h.p. on bounded-degree graphs and bounded by
+the longest decreasing priority path in general — on dense cores
+(cliques) JP is inherently sequential, so callers cap ``max_rounds`` and
+treat the output as a partial coloring of the lowest-priority periphery
+(the suite query does exactly this with an unrolled SQL twin; pytest
+runs to fixpoint on a small graph).
 
 Reference parity: the reference colors vertices only as a by-product of
 its SCC pass (sampling/Graph.cpp forward-coloring); a standalone
@@ -43,11 +47,8 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import ckpt, norm_edges
-
-PRI_A = 1_000_003
-PRI_B = 12345
-PRI_M = (1 << 31) - 1
+from .gcommon import pin_checkpoint, pin_sym, pin_vertices
+from .mis import local_minima, restrict
 
 
 def jones_plassmann_coloring(
@@ -65,28 +66,18 @@ def jones_plassmann_coloring(
     """
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
-
-    pri = lambda c: (F.col(c) * PRI_A + PRI_B) % PRI_M  # noqa: E731
+    algo = "jones_plassmann_coloring"
 
     # full adjacency (never shrinks: colored neighbors feed the mex)
-    full = norm_edges(edges, P, materialize="checkpoint")
-    active = ckpt(full.select(F.col("src").alias("id")).distinct(), P, "id")
+    full, _ = pin_sym(edges, P, algo)
+    active, _ = pin_vertices(full.select(F.col("src").alias("id")).distinct(), P, algo)
     ae = full  # active-only adjacency (shrinks each round)
     colors = spark.createDataFrame([], "id long, color int")
     metrics: list[dict] = []
 
     for rnd in range(max_rounds):
         t0 = time.time()
-        nbr_min = (
-            ae.groupBy(F.col("src").alias("id"))
-            .agg(F.min((F.col("dst") * PRI_A + PRI_B) % PRI_M).alias("nmin"))
-        )
-        winners = ckpt(
-            active.join(nbr_min.hint("shuffle_hash"), "id", "left")
-            .filter(F.col("nmin").isNull() | (pri("id") < F.col("nmin")))
-            .select("id"),
-            P, "id",
-        )
+        winners, n_win = pin_vertices(local_minima(active, ae), P, algo)
         # smallest color unused by already-colored neighbors (mex)
         used = (
             full.join(winners.withColumnRenamed("id", "src").hint("shuffle_hash"),
@@ -106,22 +97,15 @@ def jones_plassmann_coloring(
                 .cast("int").alias("color"),
             )
         )
-        colors = ckpt(colors.union(newc), P, "id")
-        active = ckpt(active.join(winners.hint("shuffle_hash"), "id", "left_anti"),
-                       P, "id")
-        n_active = active.count()
+        colors = pin_checkpoint(colors.union(newc).repartition(P, "id"))
+        active, n_active = pin_vertices(
+            active.join(winners.hint("shuffle_hash"), "id", "left_anti"), P, algo)
         metrics.append(
-            {"round": rnd, "winners": winners.count(), "active": n_active,
+            {"round": rnd, "winners": n_win, "active": n_active,
              "seconds": time.time() - t0}
         )
         if n_active == 0:
             break
-        ae = ckpt(
-            ae.join(active.withColumnRenamed("id", "src").hint("shuffle_hash"),
-                    "src", "left_semi")
-            .join(active.withColumnRenamed("id", "dst").hint("shuffle_hash"),
-                  "dst", "left_semi"),
-            P, "src",
-        )
+        ae = restrict(ae, active, P)
 
     return colors, metrics

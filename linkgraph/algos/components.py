@@ -16,7 +16,7 @@ its naive_implementation/.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .gcommon import (
@@ -24,9 +24,11 @@ from .gcommon import (
     degree_table,
     gather,
     iterate,
+    flip,
     labels_changed,
     norm_edges,
     pin_checkpoint,
+    pin_edges,
     vertex_set,
 )
 
@@ -52,7 +54,7 @@ def connected_components(
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # the symmetric view is pinned once: the degree table and the block build
     # then read it without re-running its dedup and partitioning shuffles
-    sym = pin_checkpoint(norm_edges(edges, P, materialize="none"))
+    sym = pin_checkpoint(norm_edges(edges, P))
     deg = degree_table(sym, P, "connected_components", vertices, edges)
     v = deg.table.select("id")
     if deg.V == 0:
@@ -116,30 +118,24 @@ def connected_components_star(
         then a forest of stars whose centers are the component minima.
 
     Each round is one grouped min + one generate/dedup shuffle over the
-    current edge set (which only SHRINKS toward V−#components rows), with
-    per-round ``localCheckpoint``.  Fixpoint detection: (count,
-    xor-of-hashes) signature equality — one tiny agg per round, no
-    EXCEPT-join.  Returns labels(id, component) identical to
-    :func:`connected_components` (min id in the component); validated
-    against it and the BFS oracle in tests.
+    current edge set (which only SHRINKS toward V−#components rows), each
+    phase's edge set a pin on src.  Fixpoint detection: (count,
+    xor-of-hashes) signature equality — it rides each round's pin as an
+    Observation, no EXCEPT-join and no job of its own.  Returns
+    labels(id, component) identical to :func:`connected_components` (min
+    id in the component); validated against it and the BFS oracle in
+    tests.  A null src or dst raises ``ValueError`` (``pin_edges``).
     """
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    sig = (F.count(F.lit(1)).alias("n"),
+           F.expr("bit_xor(xxhash64(src, dst))").alias("h"))  # overflow-free
 
-    if vertices is None:
-        vertices = vertex_set(edges)
-    v = vertices.select("id").repartition(P, "id").persist()
+    first = Observation()
+    e, _ = pin_edges(edges, lambda x: norm_edges(x, P).observe(first, *sig),
+                     "connected_components_star")
 
-    e = norm_edges(edges, P, materialize="checkpoint")
-
-    def _sig(df: DataFrame) -> tuple:
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.expr("bit_xor(xxhash64(src, dst))").alias("h"),  # overflow-free
-        ).collect()[0]
-        return (r["n"], r["h"])
-
-    def _star(df: DataFrame, large: bool) -> DataFrame:
+    def _star(df: DataFrame, large: bool) -> tuple[DataFrame, Observation]:
         # m(u) over the symmetric neighbor list; u itself enters via least()
         m = (
             df.groupBy("src")
@@ -160,23 +156,19 @@ def connected_components_star(
             .select(F.col("a").alias("src"), F.col("b").alias("dst"))
         )
         # re-symmetrize: both star phases reason over full neighbor lists
-        return (
-            out.union(out.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-            .dropDuplicates(["src", "dst"])
-            .repartition(P, "src")
-            .localCheckpoint(eager=True)
-        )
+        obs = Observation()
+        out = out.union(flip(out)).dropDuplicates(["src", "dst"]).observe(obs, *sig)
+        return pin_checkpoint(out.repartition(P, "src")), obs
 
-    sig = _sig(e)
+    last = first.get
     converged = False
     for _ in range(max_rounds):
-        e = _star(e, large=True)
-        e = _star(e, large=False)
-        new_sig = _sig(e)
-        if new_sig == sig:
+        e, _ = _star(e, large=True)
+        e, obs = _star(e, large=False)
+        if obs.get == last:
             converged = True
             break
-        sig = new_sig
+        last = obs.get
     if not converged:
         # labeling a non-star graph would silently return garbage
         raise RuntimeError(
@@ -189,15 +181,15 @@ def connected_components_star(
         e.groupBy("src").agg(F.min("dst").alias("nb"))
         .select("src", F.least("src", "nb").alias("component"))
     )
+    if vertices is None:
+        vertices = vertex_set(edges)
     labels = (
-        v.join(centers.withColumnRenamed("src", "id").hint("shuffle_hash"),
-               "id", "left")
+        vertices.select("id")
+        .join(centers.withColumnRenamed("src", "id").hint("shuffle_hash"), "id", "left")
         .select("id", F.coalesce("component", F.col("id")).alias("component"))
         .repartition(P, "id")
     )
-    out = labels.localCheckpoint(eager=True)
-    v.unpersist()
-    return out
+    return pin_checkpoint(labels)
 
 
 def bowtie_regions(
@@ -233,7 +225,7 @@ def bowtie_regions(
 
     # pinned, not persisted: the ContextCleaner frees the checkpoints once
     # the call's frames are gone, so a call leaves no cached table behind
-    e = pin_checkpoint(norm_edges(edges, P, directed=True, materialize="none"))
+    e = pin_checkpoint(norm_edges(edges, P, directed=True))
     verts = pin_checkpoint(vertex_set(e).repartition(P, "id"))
 
     labels, _ = strongly_connected_components(e, vertices=verts, partitions=P)

@@ -1,9 +1,10 @@
 """Superstep kernel shared by the iterative graph algorithms.
 
-* ``vertex_set`` / ``norm_edges``: the ``src ∪ dst`` vertex set and the
-  simple-graph (optionally symmetric) edge view.
-* ``pin_checkpoint`` / ``pin_vertices``: lineage-free state that keeps its
-  hash partitioning.
+* ``vertex_set`` / ``norm_edges`` / ``canonical``: the ``src ∪ dst``
+  vertex set, the simple-graph (optionally symmetric) edge view and the
+  id-canonical one (each undirected edge once, a < b).
+* ``pin_checkpoint`` / ``pin_rows`` / ``pin_vertices``: lineage-free
+  state that keeps its hash partitioning, its row count riding the pin.
 * ``degree_table``: a call's set-up, one pinned degree table (below).
 * ``adjacency_blocks`` / ``build_blocks``: CSR-style blocks with hub
   splitting (salting), built on ``hub_split``, the core they share with
@@ -13,8 +14,11 @@
   given as ``rep``: None or (replication map, block key column).
 * ``gather``: the superstep shape built on it (below); ``gather_edges``
   the same shape along a pinned E-row view.
-* ``pin_edges`` / ``pin_sym``: an E-row edge view pinned on src, with
-  its row count and a null-id check riding the pin.
+* ``pin_edges`` / ``pin_sym`` / ``pin_canonical``: an E-row edge view
+  pinned on src (or a), with its row count and a null-id check riding
+  the pin.
+* ``priority``: the injective priority hash of MIS, colouring and
+  matching.
 * ``send`` / ``frontier`` / ``relax``: the sparse-state supersteps on
   that view: a state's rows sent along their out-edges, and the
   level-synchronous BFS and the min-relaxation loops built on it.
@@ -52,10 +56,17 @@ and is one Spark job.
 The other fixpoints over a static edge set run their own step on
 ``iterate``: truss numbers (the edge H-index over a pinned
 triangle-edge incidence table), ACL push PPR and synchronous Louvain
-(both levels).  The peelers (``kcore_vertices``, ``ktruss_edges``, MIS,
-colouring, matching, MSF, densest subgraph, SCC's trim) shrink their
-edge set every round, so they stay off the loop; so does Louvain
-multilevel's one contraction.
+(both levels).
+
+The peelers pin like the kernel: ``kcore_vertices`` prunes the pinned
+symmetric view on ``iterate``, and ``ktruss_edges`` peels an alive flag
+over truss numbers' pinned triangle-edge incidence table on ``iterate``.
+MIS, colouring, matching, MSF and densest subgraph keep their own round
+(a round pins several tables), but each table is a pin that keeps its
+partitioning (``pin_rows``, ``pin_vertices``, ``pin_checkpoint``) and
+every count a round needs rides that pin's Observation.  Only SCC's
+trim and outer round, Louvain multilevel's one contraction, MSF's
+per-round CC call and the walks keep a loop of their own.
 
 Reference parity: the loop replaces ZGraph's OpenMP reduction +
 MPI_Allreduce superstep (ZGraph's src/ZGraphInstance.cpp:257-297);
@@ -90,41 +101,49 @@ def flip(edges: DataFrame) -> DataFrame:
     return edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
 
 
-def norm_edges(
-    edges: DataFrame,
-    partitions: int,
-    directed: bool = False,
-    materialize: str = "persist",
-) -> DataFrame:
-    """Simple-graph view of the edge table, pinned on ``src``.
+def norm_edges(edges: DataFrame, partitions: int, directed: bool = False) -> DataFrame:
+    """Simple-graph view of the edge table, partitioned on ``src``.
 
     Undirected mode unions the reversed edges; self-loops are dropped and
-    duplicates removed, then the result is hash-partitioned on src and
-    materialized (``persist`` + eager count, or ``checkpoint`` for
-    lineage-truncated loops, or ``none``) so every superstep of the caller
-    reuses one pinned edge table.
+    duplicates removed, then the result is hash-partitioned on src.  The
+    caller pins it (``pin_sym``) so every superstep reuses one edge table.
     """
     e = edges.select("src", "dst")
     if not directed:
         e = e.union(flip(edges))
-    e = (
+    return (
         e.filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
         .repartition(partitions, "src")
     )
-    if materialize == "persist":
-        e = e.persist()
-        e.count()
-    elif materialize == "checkpoint":
-        e = e.localCheckpoint(eager=True)
-    return e
 
 
-def ckpt(df: DataFrame, P: int, *keys: str) -> DataFrame:
-    """Eager ``localCheckpoint`` of ``df`` repartitioned on ``keys``: the
-    lineage cut of the loops off the kernel (under AQE it forgets the
-    partitioning; ``pin_checkpoint`` keeps it)."""
-    return df.repartition(P, *keys).localCheckpoint(eager=True)
+def canonical(edges: DataFrame) -> DataFrame:
+    """(a, b): each undirected simple edge once, id-canonical (a < b).
+    It is an edge's identity, not a wedge orientation: id order gives a
+    degree-d hub ~d/2 out-neighbours (``triangles.degree_ranked_oriented``
+    orients by degree)."""
+    return (
+        edges.select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .filter(F.col("a") != F.col("b"))
+        .dropDuplicates(["a", "b"])
+    )
+
+
+# the injective arithmetic priority hash (M = 2^31 - 1 prime, A coprime to
+# M): no RNG, the same order in any engine (MIS, colouring, matching)
+PRI_A, PRI_B, PRI_M = 1_000_003, 12345, (1 << 31) - 1
+
+
+def priority(*cols: str) -> Column:
+    """The priority of the key ``cols``: h = cols[0], each further column
+    folded in as h = (h·A + c) mod M, then p = (h·A + B) mod M."""
+    h = F.col(cols[0])
+    for c in cols[1:]:
+        h = (h * PRI_A + F.col(c)) % PRI_M
+    return (h * PRI_A + PRI_B) % PRI_M
 
 
 def pin_checkpoint(df: DataFrame) -> DataFrame:
@@ -147,6 +166,19 @@ def pin_checkpoint(df: DataFrame) -> DataFrame:
         conf.set(key, old)
 
 
+def pin_rows(
+    df: DataFrame, P: int, *keys: str,
+    obs: Observation | None = None, aggs: tuple[Column, ...] = (),
+) -> tuple[DataFrame, int]:
+    """Pin ``df`` repartitioned on ``keys``; returns (df, its row count).
+    The count, and the caller's ``aggs`` into ``obs``, ride the pin's one
+    job as an Observation."""
+    obs = obs or Observation()
+    df = pin_checkpoint(df.repartition(P, *keys).observe(
+        obs, F.count(F.lit(1)).alias("n"), *aggs))
+    return df, int(obs.get["n"])
+
+
 def pin_vertices(
     v: DataFrame, P: int, algo: str, *keys: str,
     obs: Observation | None = None, aggs: tuple[Column, ...] = (),
@@ -160,20 +192,15 @@ def pin_vertices(
     (its sources or seeds) is pinned here too.
     """
     obs = obs or Observation()
-    v = pin_checkpoint(v.repartition(P, *(keys or ("id",))).observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.count(F.when(F.col("id").isNull(), 1)).alias("nulls"),
-        *aggs,
-    ))
-    got = obs.get
-    if got["nulls"]:
+    v, n = pin_rows(v, P, *(keys or ("id",)), obs=obs, aggs=(
+        F.count(F.when(F.col("id").isNull(), 1)).alias("nulls"), *aggs))
+    if obs.get["nulls"]:
         raise ValueError(
-            f"{algo}: {got['nulls']} null vertex ids in column 'id' "
+            f"{algo}: {obs.get['nulls']} null vertex ids in column 'id' "
             "(of the vertices, sources or seeds given, else of the edges' "
             "src and dst)"
         )
-    return v, int(got["n"])
+    return v, n
 
 
 def pin_edges(
@@ -202,7 +229,12 @@ def pin_sym(
     edges: DataFrame, P: int, algo: str, directed: bool = False
 ) -> tuple[DataFrame, int]:
     """``pin_edges`` of the simple-graph view (``norm_edges``)."""
-    return pin_edges(edges, lambda e: norm_edges(e, P, directed, materialize="none"), algo)
+    return pin_edges(edges, lambda e: norm_edges(e, P, directed), algo)
+
+
+def pin_canonical(edges: DataFrame, P: int, algo: str) -> tuple[DataFrame, int]:
+    """``pin_edges`` of the id-canonical view (``canonical``) on ``a``."""
+    return pin_edges(edges, lambda e: canonical(e).repartition(P, "a"), algo)
 
 
 class Degrees(NamedTuple):

@@ -79,7 +79,7 @@ def hyperball(
     B = NUM_REGISTERS
     # counters flow dst -> src (ball along out-links): the blocks are built
     # on the reversed simple-graph edges, keyed by dst
-    e = pin_checkpoint(norm_edges(edges, P, directed=directed, materialize="none"))
+    e = pin_checkpoint(norm_edges(edges, P, directed=directed))
     deg = degree_table(flip(e), P, "hyperball", vertices, edges)
 
     m = (F.col("id") * HASH_A + HASH_B) % HASH_MOD

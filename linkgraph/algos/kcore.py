@@ -1,11 +1,11 @@
 """k-core decomposition by iterative peeling, and core numbers.
 
 ``kcore_vertices``: repeatedly remove vertices of undirected degree < k
-until none remain; the survivors are the k-core.  Each round is one
-grouped degree count + one broadcast-able semi-join filter (the removed
-set shrinks the edge table, so it stays off the superstep kernel);
-lineage truncated per round.  Converges in O(peeling depth) rounds; early
-exit when a round removes nothing.
+until none remain; the survivors are the k-core.  It peels the pinned
+symmetric view (``pin_sym``) on ``gcommon.iterate``: each round is one
+grouped degree count and two semi-joins, pinned on src, and the view's
+row count rides the pin.  Converges in O(peeling depth) rounds; the loop
+stops when a round removes nothing or nothing is left.
 
 ``core_numbers`` is a ``gather`` program on the gcommon kernel: every
 vertex collects its neighbours' values along the symmetric view pinned
@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import gather_edges, h_index, iterate, norm_edges, pin_checkpoint, pin_sym
+from .gcommon import gather_edges, h_index, iterate, pin_checkpoint, pin_sym
 
 
 def kcore_vertices(
@@ -34,25 +34,28 @@ def kcore_vertices(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    sym = norm_edges(edges, P, materialize="checkpoint")
-    for _ in range(max_rounds):
+    sym, E = pin_sym(edges, P, "kcore_vertices")
+    rows = [E]
+
+    def step(sym: DataFrame, obs, it: int) -> DataFrame:
         keep = (
             sym.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= k)
             .select("src")
         )
-        pruned = (
+        return (
             sym.join(keep.hint("shuffle_hash"), "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst").hint("shuffle_hash"),
                   "dst", "left_semi")
+            .observe(obs, F.count(F.lit(1)).alias("e"))
             .repartition(P, "src")
-            .localCheckpoint(eager=True)
         )
-        before = sym.count()
-        after = pruned.count()
-        sym = pruned
-        if after == before:
-            break
+
+    def record(got: dict) -> tuple[dict, bool]:
+        before, rows[0] = rows[0], int(got["e"])
+        return {"edges": rows[0]}, rows[0] in (before, 0)
+
+    sym, _ = iterate(edges, lambda _: sym, step, record, "kcore", P, E, max_rounds)
     return sym.select(F.col("src").alias("id")).distinct()
 
 

@@ -4,29 +4,25 @@ The k-truss is the maximal subgraph in which every edge participates in at
 least k-2 triangles — the edge-level analogue of the k-core and the
 standard cohesive-subgraph operator for web/community graphs (Cohen 2008).
 
-Iterative support peeling as DataFrame joins:
+Both programs read ONE static triangle-edge incidence table
+(``_incidence``): the triangles of the id-canonical edge set (a < b),
+found once by the exact counter's degree-ordered wedge + closure join
+(``triangles.triangles``: a hub never emits C(d, 2) wedge rows), one row
+per (triangle, member edge) carrying the other two member edges' keys,
+pinned once.  A triangle of a peeled edge set is a triangle of the start
+graph whose three edges are all still there, so no round recounts.
 
-  1. canonicalize edges by id (a < b) for the peel state, but generate
-     wedges under the DEGREE-ordered orientation (triangles.
-     degree_ranked_oriented) — out-degrees bounded by O(√m), so a hub
-     never emits C(d, 2) wedge rows;
-  2. per round, count each edge's triangle support with the degree-ordered
-     two-path + closing-edge join, then project every found triangle back
-     onto its three id-canonical edges and take one grouped count;
-  3. drop edges with support < k-2; repeat until the edge set is stable.
+``ktruss_edges`` peels on ``gcommon.iterate``: the state (a, b, alive)
+is pinned on (a, b); each round an edge's support is the number of its
+incidence rows whose two other edges are alive, and an edge stays alive
+only if its support is at least k - 2.  The alive and removed counts
+ride the pin; the loop stops when a round removes nothing or nothing is
+left.  Triangle-free edges have support 0, so k <= 2 keeps every simple
+edge (the 2-truss).
 
-The edge set only shrinks, so round cost is monotonically decreasing; the
-support join is the engine's triangle plan (shuffle-hash, no sort-merge),
-and the per-round state is the edge list hash-partitioned on ``a``.
-Termination: at most E rounds, in practice a handful (each round removes
-at least one edge or stops).  The peel shrinks its edge set every round,
-so it stays off the gcommon superstep kernel.
-
-``truss_numbers`` (every edge's trussness) does not peel: it is an
-edge-H-index fixpoint over one static triangle-edge incidence table,
-pinned once, and runs on ``gcommon.iterate`` — one Spark job per round,
-the H-index one array expression (``gcommon.h_index``, shared with
-``kcore.core_numbers``).
+``truss_numbers`` (every edge's trussness) is an edge-H-index fixpoint
+over the same table, one Spark job per round, the H-index one array
+expression (``gcommon.h_index``, shared with ``kcore.core_numbers``).
 
 Oracle: unrolled peel SQL (MATERIALIZED per round — each round is
 referenced by the next) in suite.py plus a brute-force pytest oracle.
@@ -38,73 +34,49 @@ TriangleCounting.cpp:44-70 is the exact-count analogue).
 
 from __future__ import annotations
 
-import time
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import ckpt, h_index, iterate, pin_checkpoint, pin_edges
+from .gcommon import canonical, h_index, iterate, pin_canonical, pin_checkpoint, pin_edges
 
 
-def _canonical(edges: DataFrame) -> DataFrame:
-    """(a, b): each undirected simple edge once, id-canonical (a < b)."""
-    return (
-        edges.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
-
-
-def _rank_table(e: DataFrame, P: int) -> DataFrame:
-    """(id, d) degree table of the id-canonical edge set ``e`` — the
-    STATIC (degree, id) total order used to orient wedges.  Computed once
-    on the initial graph and reused across every peel round: any FIXED
-    total order generates each triangle exactly once, and initial-degree
-    rank keeps out-degrees O(√m₀) as the edge set shrinks, so the peel
-    loop pays the ranking's two E-row joins but never re-aggregates
-    degrees per round."""
-    return ckpt(
-        e.select(F.col("a").alias("id"))
-        .union(e.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("d")),
-        P,
-        "id",
-    )
-
-
-def _tri_id_sorted(e: DataFrame, rank: DataFrame | None = None) -> DataFrame:
-    """Triangles (x < y < z BY ID) of the id-canonical edge set ``e``
-    (columns a < b) — delegates to triangles.triangles() (the shared
-    degree-ordered wedge + closure plan: hub-safe O(m^1.5) wedge rows,
-    id-sorted output matching the id-canonical edge keys), renaming the
-    output columns.  ``rank`` (from _rank_table) supplies a precomputed
-    static order; None computes degrees of ``e`` itself."""
+def _incidence(e: DataFrame, P: int) -> DataFrame:
+    """The triangle-edge incidence table of the id-canonical edge set
+    ``e`` (a < b), pinned: one row per (triangle, member edge (ea, eb)),
+    carrying the OTHER two member edges' keys (o1a, o1b) and (o2a, o2b);
+    pinned on the first of them, which a state pinned on (a, b) then
+    joins with no exchange."""
     from .triangles import triangles
 
-    tri = triangles(
-        e.select(F.col("a").alias("src"), F.col("b").alias("dst")), rank=rank
-    )
-    return tri.select(
-        F.col("a").alias("x"), F.col("b").alias("y"), F.col("c").alias("z")
-    )
+    tri = triangles(e.select(F.col("a").alias("src"), F.col("b").alias("dst")))
+    x, y, z = "a", "b", "c"  # x < y < z by id
+    cols = ["ea", "eb", "o1a", "o1b", "o2a", "o2b"]
+    rows = [(x, y, x, z, y, z), (x, z, x, y, y, z), (y, z, x, y, x, z)]
+    return pin_checkpoint(reduce(DataFrame.union, [
+        tri.select(*(F.col(c).alias(n) for c, n in zip(r, cols))) for r in rows
+    ]).repartition(P, "o1a", "o1b"))
 
 
-def _support(e: DataFrame, rank: DataFrame | None = None) -> DataFrame:
-    """Per-edge triangle support over id-canonical edges (a < b).
+def _other(cur: DataFrame, i: str, *vals: str) -> DataFrame:
+    """(o{i}a, o{i}b, vals{i}…): the state as the i-th other member edge.
+    (a, b) is unique in the state; the dedup says so to the planner,
+    which otherwise estimates each join as the product of its sides,
+    doubling the state's size estimate (in bits) every round."""
+    return cur.select(
+        F.col("a").alias(f"o{i}a"), F.col("b").alias(f"o{i}b"),
+        *(F.col(v).alias(f"{v}{i}") for v in vals),
+    ).dropDuplicates([f"o{i}a", f"o{i}b"])
 
-    Triangles found by the degree-ordered wedge + closure join
-    (_tri_id_sorted over the static initial-degree rank); each triangle
-    is projected onto its three member edges, one grouped count gives
-    support.
-    """
-    tri = _tri_id_sorted(e, rank)
-    per_edge = (
-        tri.select(F.col("x").alias("a"), F.col("y").alias("b"))
-        .union(tri.select(F.col("x").alias("a"), F.col("z").alias("b")))
-        .union(tri.select(F.col("y").alias("a"), F.col("z").alias("b")))
+
+def _incident(inc: DataFrame, cur: DataFrame, *vals: str) -> DataFrame:
+    """The incidence rows whose two other edges are in ``cur``, with
+    their ``vals`` suffixed 1 and 2."""
+    return (
+        inc.join(_other(cur, "1", *vals).hint("shuffle_hash"), ["o1a", "o1b"])
+        .join(_other(cur, "2", *vals).hint("shuffle_hash"), ["o2a", "o2b"])
     )
-    return per_edge.groupBy("a", "b").agg(F.count(F.lit(1)).alias("supp"))
 
 
 def ktruss_edges(
@@ -113,27 +85,42 @@ def ktruss_edges(
     max_rounds: int = 50,
     partitions: int | None = None,
 ) -> tuple[DataFrame, list[dict]]:
-    """Edges (a, b) of the k-truss; returns (edge DataFrame, metrics)."""
+    """Edges (a, b) of the k-truss; returns (edge DataFrame, per-round
+    metrics with the surviving ``edges`` and the ``removed`` count)."""
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    algo = "ktruss_edges"
 
-    e = ckpt(_canonical(edges), P, "a")
-    n = e.count()
-    rank = _rank_table(e, P)  # static (degree, id) order, built once
-    metrics: list[dict] = []
-    for rnd in range(max_rounds):
-        t0 = time.time()
-        keep = _support(e, rank).filter(F.col("supp") >= k - 2).select("a", "b")
-        e2 = ckpt(e.join(keep.hint("shuffle_hash"), ["a", "b"], "left_semi"), P, "a")
-        n2 = e2.count()
-        metrics.append(
-            {"round": rnd, "edges": n2, "removed": n - n2, "seconds": time.time() - t0}
+    e, E = pin_edges(edges, lambda e: canonical(e).repartition(P, "a", "b"), algo)
+    if E == 0:
+        return e, []
+    inc = _incidence(e, P)
+
+    def step(cur: DataFrame, obs, it: int) -> DataFrame:
+        # round 0 starts with every edge alive: each incidence row counts
+        rows = inc if it == 0 else _incident(inc, cur.filter("alive"))
+        supp = (
+            rows
+            .groupBy(F.col("ea").alias("a"), F.col("eb").alias("b"))
+            .agg(F.count(F.lit(1)).alias("s"))
         )
-        e, done = e2, n2 == n
-        n = n2
-        if done or n == 0:
-            break
-    return e, metrics
+        keep = F.col("alive") & (F.coalesce(F.col("s"), F.lit(0)) >= k - 2)
+        return (
+            cur.join(supp.hint("shuffle_hash"), ["a", "b"], "left")
+            .select("a", "b", F.col("alive").alias("_was"), keep.alias("alive"))
+            .observe(obs, F.count(F.when(F.col("alive"), 1)).alias("e"),
+                     F.count(F.when(F.col("_was") & ~F.col("alive"), 1)).alias("r"))
+            .select("a", "b", "alive")
+            .repartition(P, "a", "b")
+        )
+
+    def record(got: dict) -> tuple[dict, bool]:
+        return ({"edges": int(got["e"]), "removed": int(got["r"])},
+                got["r"] == 0 or got["e"] == 0)
+
+    return iterate(edges, lambda _: e.withColumn("alive", F.lit(True)), step, record,
+                   algo, P, E, max_rounds,
+                   output=lambda cur: cur.filter("alive").select("a", "b"))
 
 
 def truss_numbers(
@@ -168,26 +155,8 @@ def truss_numbers(
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
     algo = "truss_numbers"
 
-    e, E = pin_edges(edges, lambda e: _canonical(e).repartition(P, "a"), algo)
-    tri = _tri_id_sorted(e)
-    # one incidence row per (triangle, member edge), carrying the OTHER
-    # two member edges' keys; pinned on the first of them, which the state
-    # (pinned on (a, b)) then joins with no exchange
-    inc = pin_checkpoint(
-        tri.select(
-            F.col("x").alias("ea"), F.col("y").alias("eb"),
-            F.col("x").alias("o1a"), F.col("z").alias("o1b"),
-            F.col("y").alias("o2a"), F.col("z").alias("o2b"),
-        ).union(tri.select(
-            F.col("x").alias("ea"), F.col("z").alias("eb"),
-            F.col("x").alias("o1a"), F.col("y").alias("o1b"),
-            F.col("y").alias("o2a"), F.col("z").alias("o2b"),
-        )).union(tri.select(
-            F.col("y").alias("ea"), F.col("z").alias("eb"),
-            F.col("x").alias("o1a"), F.col("y").alias("o1b"),
-            F.col("x").alias("o2a"), F.col("z").alias("o2b"),
-        )).repartition(P, "o1a", "o1b")
-    )
+    e, E = pin_canonical(edges, P, algo)
+    inc = _incidence(e, P)
     supp = inc.groupBy(F.col("ea").alias("a"), F.col("eb").alias("b")).agg(
         F.count(F.lit(1)).alias("t"))
     start = pin_checkpoint(
@@ -199,18 +168,9 @@ def truss_numbers(
     if E == 0:
         return start.select("a", "b", out.alias("trussness")), []
 
-    def other(cur: DataFrame, i: str) -> DataFrame:
-        """(o{i}a, o{i}b, t{i}): the state as the i-th other member edge.
-        (a, b) is unique in the state; the dedup says so to the planner,
-        which otherwise estimates each join as the product of its sides,
-        doubling the state's size estimate (in bits) every round."""
-        return cur.select(F.col("a").alias(f"o{i}a"), F.col("b").alias(f"o{i}b"),
-                          F.col("t").alias(f"t{i}")).dropDuplicates([f"o{i}a", f"o{i}b"])
-
     def step(cur: DataFrame, obs, it: int) -> DataFrame:
         vals = (
-            inc.join(other(cur, "1").hint("shuffle_hash"), ["o1a", "o1b"])
-            .join(other(cur, "2").hint("shuffle_hash"), ["o2a", "o2b"])
+            _incident(inc, cur, "t")
             .groupBy(F.col("ea").alias("a"), F.col("eb").alias("b"))
             .agg(h_index(F.collect_list(F.least("t1", "t2"))).alias("h"))
         )

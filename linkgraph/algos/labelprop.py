@@ -44,7 +44,7 @@ def label_propagation(
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     # the symmetric view is pinned once: the degree table and the block build
     # then read it without re-running its dedup and partitioning shuffles
-    sym = pin_checkpoint(norm_edges(edges, P, materialize="none"))
+    sym = pin_checkpoint(norm_edges(edges, P))
     deg = degree_table(sym, P, "label_propagation", vertices, edges)
     v = deg.table.select("id")
     if deg.V == 0:

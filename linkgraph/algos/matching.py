@@ -6,15 +6,17 @@ endpoint; matched vertices drop out and the loop repeats (the classic
 local-min matching of Israeli & Itai 1986 — expected O(log E) rounds).
 
 The priority key is the struct (p, a, b) with the arithmetic hash
-p = (((a·A + b) mod M)·A + B) mod M — (a, b) embedded in the key makes
-the order TOTAL (no ties ever), and min over a struct is lexicographic
-in both Spark and DuckDB, so the matching is bit-reproducible across
-engines with no RNG (the MIS/hash-walk determinism contract).
+p = (((a·A + b) mod M)·A + B) mod M (``gcommon.priority``) — (a, b)
+embedded in the key makes the order TOTAL (no ties ever), and min over a
+struct is lexicographic in both Spark and DuckDB, so the matching is
+bit-reproducible across engines with no RNG (the MIS/hash-walk
+determinism contract).
 
 Per round: one explode-to-endpoints projection, one grouped struct-min
 (map-side combinable), two equi-joins back to the edge set, two
-anti-joins to drop matched vertices — all ShuffledHashJoin shapes, edge
-state hash-partitioned on the low endpoint, lineage truncated per round.
+anti-joins to drop matched vertices — all ShuffledHashJoin shapes.  The
+edge state and each round's matched edges are pins hash-partitioned on
+the low endpoint (``gcommon.pin_rows``), their counts riding the pins.
 
 Oracle: 14-round unrolled SQL twin (measured 4–8 rounds to fixpoint on
 every derived graph) + a sequential Python reimplementation; validity
@@ -29,16 +31,12 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import ckpt
-
-PRI_A = 1_000_003
-PRI_B = 12345
-PRI_M = (1 << 31) - 1
+from .gcommon import pin_canonical, pin_rows, priority
 
 
 def _key():
-    p = ((F.col("a") * PRI_A + F.col("b")) % PRI_M * PRI_A + PRI_B) % PRI_M
-    return F.struct(p.alias("p"), F.col("a").alias("ka"), F.col("b").alias("kb"))
+    return F.struct(priority("a", "b").alias("p"), F.col("a").alias("ka"),
+                    F.col("b").alias("kb"))
 
 
 def maximal_matching(
@@ -50,14 +48,7 @@ def maximal_matching(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = ckpt(
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"]),
-        P, "a",
-    )
+    e, _ = pin_canonical(edges, P, "maximal_matching")
     parts: list[DataFrame] = []
     metrics: list[dict] = []
     for rnd in range(max_rounds):
@@ -69,7 +60,7 @@ def maximal_matching(
             .groupBy("v")
             .agg(F.min("key").alias("mk"))
         )
-        w = ckpt(
+        w, n_w = pin_rows(
             ke.join(
                 vmin.select(F.col("v").alias("a"), F.col("mk").alias("mka"))
                 .hint("shuffle_hash"), "a")
@@ -80,24 +71,20 @@ def maximal_matching(
             .select("a", "b"),
             P, "a",
         )
-        n_w = w.count()
         metrics.append({"round": rnd, "matched": n_w, "seconds": time.time() - t0})
         if n_w == 0:
             break
         parts.append(w)
-        mv = ckpt(
-            w.select(F.col("a").alias("v")).union(w.select(F.col("b").alias("v")))
-            .distinct(),
-            P, "v",
-        )
-        e = ckpt(
+        # a matching's endpoints are distinct: no dedup
+        mv = w.select(F.col("a").alias("v")).union(w.select(F.col("b").alias("v")))
+        e, n_e = pin_rows(
             e.join(mv.withColumnRenamed("v", "a").hint("shuffle_hash"),
                    "a", "left_anti")
             .join(mv.withColumnRenamed("v", "b").hint("shuffle_hash"),
                   "b", "left_anti"),
             P, "a",
         )
-        if e.count() == 0:
+        if n_e == 0:
             break
 
     if not parts:
@@ -105,4 +92,4 @@ def maximal_matching(
     out = parts[0]
     for p_ in parts[1:]:
         out = out.union(p_)
-    return ckpt(out, P, "a"), metrics
+    return out, metrics

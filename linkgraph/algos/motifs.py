@@ -11,16 +11,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .gcommon import canonical
 from .triangles import (
     triangle_count,
-    _oriented,
     _rank_lt,
     degree_ranked_oriented,
 )
 
 
 def _und_degrees(edges: DataFrame) -> DataFrame:
-    o = _oriented(edges)
+    o = canonical(edges)
     return (
         o.select(F.col("a").alias("id"))
         .union(o.select(F.col("b").alias("id")))
@@ -64,7 +64,7 @@ def three_motif_counts(edges: DataFrame) -> dict[str, int]:
     (/root/reference/applications/ThreeMotif.cpp:42-122); exactly we share
     the oriented edge list via caching.
     """
-    o = _oriented(edges).persist()
+    o = canonical(edges).persist()
     try:
         tri = triangle_count(o.select(F.col("a").alias("src"), F.col("b").alias("dst")))
         chains = three_chain_count(
@@ -83,7 +83,7 @@ def four_chain_count(edges: DataFrame) -> int:
     Chained equi-joins with distinctness theta-filters — the Spark form of
     /root/reference/sampling/Graph.cpp:241-270 (ordered enumeration / 2).
     """
-    o = _oriented(edges)
+    o = canonical(edges)
     sym = o.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
         o.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -107,7 +107,7 @@ def four_clique_count(edges: DataFrame) -> int:
     """
     from .triangles import triangles
 
-    o = _oriented(edges)
+    o = canonical(edges)
     tri = triangles(o.select(F.col("a").alias("src"), F.col("b").alias("dst")))
     ext = o.select(F.col("a").alias("c"), F.col("b").alias("d"))  # d > c adjacency
     cand = tri.join(ext, "c")
@@ -172,7 +172,7 @@ def five_house_count(edges: DataFrame) -> int:
     Counted as injective homomorphisms over a spanning join tree with the
     two remaining edges checked via semi-joins, divided by |Aut|.
     """
-    o = _oriented(edges)
+    o = canonical(edges)
     sym = o.select(F.col("a").alias("u"), F.col("b").alias("v"))
     sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
 
@@ -225,7 +225,7 @@ def k_chain_count(edges: DataFrame, k: int) -> int:
     """
     if k < 2:
         raise ValueError("k >= 2")
-    o = _oriented(edges)
+    o = canonical(edges)
     sym = o.select(F.col("a").alias("u"), F.col("b").alias("v"))
     sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
     cols = [f"v{i}" for i in range(k)]
@@ -258,7 +258,7 @@ def graphlet_orbits(edges: DataFrame, vertices: DataFrame | None = None) -> Data
     """
     from .triangles import per_vertex_triangle_counts
 
-    o = _oriented(edges)
+    o = canonical(edges)
     und = o.select(F.col("a").alias("src"), F.col("b").alias("dst"))
     und = und.union(und.select(F.col("dst").alias("src"),
                                F.col("src").alias("dst")))

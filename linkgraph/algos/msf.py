@@ -14,7 +14,9 @@ grouped struct-min (map-side combinable, no sort, no window), one CC
 run on the component graph — which is at most half the size of the
 previous round's component set, so the contraction input shrinks
 geometrically; at web scale round 1 dominates and is exactly the
-join-agg superstep shape of the PageRank loop.
+join-agg superstep shape of the PageRank loop.  The live edges, the
+chosen edges and the labels are pins that keep their hash partitioning,
+and the live and chosen counts ride those pins.
 
 Reference parity: the reference has no MSF, but this is the standard
 link-graph backbone-extraction companion to its components/clustering
@@ -30,7 +32,7 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import ckpt
+from .gcommon import pin_checkpoint, pin_rows, pin_vertices, vertex_set
 
 
 def boruvka_msf(
@@ -48,16 +50,15 @@ def boruvka_msf(
 
     spark = wedges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    algo = "boruvka_msf"
 
-    we = ckpt(
-        wedges.select("a", "b", "w").dropDuplicates(["a", "b"]), P, "a"
+    we = pin_checkpoint(
+        wedges.select("a", "b", "w").dropDuplicates(["a", "b"]).repartition(P, "a")
     )
-    labels = ckpt(
-        we.select(F.col("a").alias("id"))
-        .union(we.select(F.col("b").alias("id")))
-        .distinct()
+    labels, _ = pin_vertices(
+        vertex_set(we.select(F.col("a").alias("src"), F.col("b").alias("dst")))
         .select("id", F.col("id").alias("comp")),
-        P, "id",
+        P, algo,
     )
     forest_parts: list[DataFrame] = []
     metrics: list[dict] = []
@@ -66,14 +67,13 @@ def boruvka_msf(
         t0 = time.time()
         la = labels.select(F.col("id").alias("a"), F.col("comp").alias("ca"))
         lb = labels.select(F.col("id").alias("b"), F.col("comp").alias("cb"))
-        el = ckpt(
+        el, n_live = pin_rows(
             we.join(la.hint("shuffle_hash"), "a")
             .join(lb.hint("shuffle_hash"), "b")
             .filter(F.col("ca") != F.col("cb"))
             .select("a", "b", "w", "ca", "cb"),
             P, "a",
         )
-        n_live = el.count()
         if n_live == 0:
             metrics.append({"round": rnd, "live": 0, "chosen": 0,
                             "seconds": time.time() - t0})
@@ -82,7 +82,7 @@ def boruvka_msf(
             F.col("w"), F.col("a").alias("ka"), F.col("b").alias("kb"),
             F.col("ca"), F.col("cb"),
         )
-        chosen = ckpt(
+        chosen, n_chosen = pin_rows(
             el.select(F.col("ca").alias("comp"), key.alias("e"))
             .union(el.select(F.col("cb").alias("comp"), key.alias("e")))
             .groupBy("comp").agg(F.min("e").alias("e"))
@@ -99,7 +99,7 @@ def boruvka_msf(
         # re-map vertex labels through it
         cgraph = chosen.select(F.col("ca").alias("src"), F.col("cb").alias("dst"))
         cmap, _ = connected_components(cgraph, partitions=P)
-        labels = ckpt(
+        labels, _ = pin_vertices(
             labels.join(
                 cmap.select(F.col("id").alias("comp"),
                             F.col("component").alias("newc"))
@@ -107,14 +107,14 @@ def boruvka_msf(
                 "comp", "left",
             )
             .select("id", F.coalesce("newc", "comp").alias("comp")),
-            P, "id",
+            P, algo,
         )
-        metrics.append({"round": rnd, "live": n_live,
-                        "chosen": chosen.count(),
+        metrics.append({"round": rnd, "live": n_live, "chosen": n_chosen,
                         "seconds": time.time() - t0})
 
+    # an edge chosen once joins its two components: it is never live again
     out = forest_parts[0] if forest_parts else we.filter(F.lit(False)) \
         .select("a", "b", "w")
     for p_ in forest_parts[1:]:
         out = out.union(p_)
-    return ckpt(out.dropDuplicates(["a", "b"]), P, "a"), metrics
+    return out, metrics

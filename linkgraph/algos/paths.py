@@ -130,7 +130,7 @@ def random_walks(
 
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-    e = norm_edges(edges, P, directed=directed, materialize="none")
+    e = norm_edges(edges, P, directed=directed)
     w = Window.partitionBy("src").orderBy("dst")
     adj = (
         e.select(
@@ -511,7 +511,7 @@ def node2vec_walks(
 
     P = int(partitions or edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-    adj = norm_edges(edges, P, directed=directed, materialize="none").persist()
+    adj = norm_edges(edges, P, directed=directed).persist()
     adj.count()
     nb = adj.select(
         F.col("src").alias("prev"), F.col("dst").alias("dst"),

@@ -36,7 +36,8 @@ from itertools import permutations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .triangles import _indexed, _oriented, _pick_mod, _sym, _u
+from .gcommon import canonical
+from .triangles import _indexed, _pick_mod, _sym, _u
 
 Edge = tuple[int, int]
 
@@ -114,7 +115,7 @@ def pattern_count(edges: DataFrame, pattern: list[Edge]) -> int:
     ``edges`` = injective homomorphisms / |Aut|."""
     aut = automorphisms(pattern)
     steps = plan_pattern(pattern)
-    o = _oriented(edges)
+    o = canonical(edges)
     sym = o.select(F.col("a").alias("u"), F.col("b").alias("v"))
     sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
     try:

@@ -52,7 +52,7 @@ def multi_seed_ppr(
     teleport = int(round((1.0 - damping) * SCALE))
 
     def view(edges: DataFrame) -> DataFrame:
-        e = norm_edges(edges, P, directed=True, materialize="none")
+        e = norm_edges(edges, P, directed=True)
         return e.join(e.groupBy("src").agg(F.count(F.lit(1)).alias("od")), "src")
 
     ed, E = pin_edges(edges, view, "multi_seed_ppr")

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import norm_edges
+from .gcommon import pin_sym
 
 
 def simrank_truncated(
@@ -39,7 +39,7 @@ def simrank_truncated(
     spark = edges.sparkSession
     P = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
 
-    e = norm_edges(edges, P, directed=True, materialize="checkpoint")
+    e, _ = pin_sym(edges, P, "simrank_truncated", directed=True)
     ind = e.groupBy(F.col("dst").alias("v")).agg(F.count(F.lit(1)).alias("n"))
     e1 = e.select(F.col("src").alias("i"), F.col("dst").alias("a"))
     e2 = e.select(F.col("src").alias("j"), F.col("dst").alias("b"))

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import DEFAULT_BLOCK_SIZE, degree_table, hub_split
+from .gcommon import DEFAULT_BLOCK_SIZE, canonical, degree_table, hub_split
 
 _U_DENOM = float(1 << 40)
 
@@ -106,35 +106,19 @@ def conditional_sample_vertex(
     )
 
 
-def _oriented(edges: DataFrame) -> DataFrame:
-    """Canonical undirected edge list, oriented by vertex ID (a < b).
-
-    This is the edge-IDENTITY canonicalization (each undirected edge
-    exactly once) used by the sampled estimators for uniform edge picks
-    and closure probes — NOT the wedge-generation orientation.  Wedge
-    machinery must use :func:`degree_ranked_oriented` instead: id
-    orientation gives a degree-d hub ~d/2 out-neighbors, so wedge
-    generation costs Σ C(d/2, 2) — the classic O(d²) hub blow-up."""
-    return (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
-
-
 def _indexed(
     edges: DataFrame, P: int, seed: int | None = None
 ) -> tuple[DataFrame, int]:
-    """(o, m): the canonical edge list (:func:`_oriented`) with each edge's
+    """(o, m): the id-canonical edge list (``gcommon.canonical``, the edge
+    identity of the uniform edge picks and closure probes; wedges use
+    :func:`degree_ranked_oriented`) with each edge's
     dense index ``id``, persisted, and m its row count; with ``seed`` also
     its hash id ``eid``.  The index ranks the ``a_b`` string key
     (``ingest.dense_ids``, a global rank at any P): the uniform edge picks,
     and with them the estimates, depend on that order."""
     from ..ingest import dense_ids
 
-    o = _oriented(edges)
+    o = canonical(edges)
     if seed is not None:
         o = o.withColumn("eid", F.xxhash64(F.col("a"), F.col("b"), F.lit(seed)))
     o = o.withColumn("_key", F.concat_ws("_", "a", "b"))
@@ -170,18 +154,11 @@ def degree_ranked_oriented(
     combinable) plus two E-row hash joins against it — a one-time linear
     pass, paid before the superlinear wedge stage it bounds.
 
-    ``rank`` (id, d) supplies a precomputed STATIC order (e.g. the k-truss
-    peel computes initial degrees once and reuses them every round — any
-    fixed total order generates each wedge exactly once); None computes
-    the degrees of ``edges`` itself.
+    ``rank`` (id, d) supplies a precomputed STATIC order (any fixed total
+    order generates each wedge exactly once); None computes the degrees of
+    ``edges`` itself.
     """
-    und = (
-        edges.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .dropDuplicates(["a", "b"])
-    )
+    und = canonical(edges)
     deg = rank
     if deg is None:
         deg = (
@@ -343,8 +320,7 @@ def triangles(edges: DataFrame, rank: DataFrame | None = None) -> DataFrame:
     triples are sorted by vertex ID, identical to the previous
     id-oriented plan (/root/reference/naive_implementation/
     TriangleCounting.cpp:44-70 is the semantics oracle).  ``rank``
-    forwards a precomputed static order to degree_ranked_oriented (used
-    by the k-truss peel)."""
+    forwards a precomputed static order to degree_ranked_oriented."""
     # lazy localCheckpoint: the ranking subtree (dedup + degree agg + two
     # E-row joins) feeds THREE join branches below; without it Spark
     # re-evaluates the whole subtree per branch (no common-subplan reuse

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .algos.gcommon import norm_edges, vertex_set
+from .algos.gcommon import canonical, norm_edges, vertex_set
 
 
 class LinkGraph:
@@ -71,18 +71,13 @@ class LinkGraph:
         (/root/reference/src/Graph.cpp:295-310).
         """
         if "und" not in self._cache:
-            self._cache["und"] = norm_edges(self.edges, self.partitions)
+            self._cache["und"] = norm_edges(self.edges, self.partitions).persist()
         return self._cache["und"]
 
     def oriented_edges(self) -> DataFrame:
         """Canonical undirected edge list with src < dst (each edge once)."""
-        return (
-            self.edges.select(
-                F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-            )
-            .filter(F.col("src") != F.col("dst"))
-            .dropDuplicates(["src", "dst"])
-        )
+        return canonical(self.edges).select(
+            F.col("a").alias("src"), F.col("b").alias("dst"))
 
     def out_degrees(self) -> DataFrame:
         """(id, out_degree) over directed edges — groupBy partial-agg."""

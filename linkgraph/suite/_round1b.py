@@ -1321,7 +1321,7 @@ def _luby_sql(rounds: int) -> str:
     # Round budget validated empirically: 3 rounds at sf0.001, 2 at
     # sf0.01/sf0.1; 8 gives margin.  MATERIALIZED: a{i}/u{i} feed three
     # references each in round i+1.
-    from ..algos.mis import PRI_A, PRI_B, PRI_M
+    from ..algos.gcommon import PRI_A, PRI_B, PRI_M
 
     pri = lambda c: f"(({c} * {PRI_A} + {PRI_B}) % {PRI_M})"  # noqa: E731
     parts = [
@@ -1886,7 +1886,7 @@ def _matching_sql(rounds: int) -> str:
     # Measured fixpoint: 4 rounds at sf0.001, 6 at sf0.01, 8 at sf0.1;
     # 14 = margin.  Struct min is lexicographic in DuckDB exactly as in
     # Spark, so the (p, a, b) key gives the identical total order.
-    from ..algos.matching import PRI_A, PRI_B, PRI_M
+    from ..algos.gcommon import PRI_A, PRI_B, PRI_M
 
     key = (f"{{'p': (((a * {PRI_A} + b) % {PRI_M}) * {PRI_A} + {PRI_B}) "
            f"% {PRI_M}, 'ka': a, 'kb': b}}")

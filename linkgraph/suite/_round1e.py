@@ -256,7 +256,7 @@ def _coloring_sql(rounds: int) -> str:
     # Same superstep shape as the Luby unroll plus a mex stage: winners'
     # used neighbor-colors (DISTINCT join vs colored state), candidate
     # colors 0..k from a nums table, smallest candidate not used.
-    from ..algos.coloring import PRI_A, PRI_B, PRI_M
+    from ..algos.gcommon import PRI_A, PRI_B, PRI_M
 
     pri = lambda c: f"(({c} * {PRI_A} + {PRI_B}) % {PRI_M})"  # noqa: E731
     parts = [

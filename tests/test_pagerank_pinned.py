@@ -5,7 +5,8 @@ eigenvector, SALSA, HITS, HyperBall, core numbers and WL), every
 frontier program (the BFS family, SSSP, Voronoi, multi-seed PPR) and
 every static-edge fixpoint on the loop (SCC, condensation levels, truss
 numbers, push PPR, synchronous Louvain), SCC and truss numbers in at
-most half the jobs a call they ran as private loops; a state
+most half the jobs a call they ran as private loops, and so the peelers
+(k-truss, colouring, matching, densest subgraph, MIS); a state
 size estimate that grows linearly, not geometrically, over the
 supersteps; one Exchange per PageRank superstep on a hub-free graph and
 two on a salted one, and one, with no sort, per label-propagation
@@ -25,16 +26,20 @@ import pytest
 from pyspark.sql import functions as F
 
 from linkgraph import datagen
-from linkgraph.algos.components import connected_components
+from linkgraph.algos.coloring import jones_plassmann_coloring
+from linkgraph.algos.components import connected_components, connected_components_star
+from linkgraph.algos.densest import densest_subgraph
 from linkgraph.algos.eigenvector import eigenvector_centrality
 from linkgraph.algos.gcommon import pin_checkpoint
 from linkgraph.algos.hits import hits
 from linkgraph.algos.hyperball import hyperball
 from linkgraph.algos.katz import katz_centrality
-from linkgraph.algos.kcore import core_numbers
-from linkgraph.algos.ktruss import truss_numbers
+from linkgraph.algos.kcore import core_numbers, kcore_vertices
+from linkgraph.algos.ktruss import ktruss_edges, truss_numbers
 from linkgraph.algos.labelprop import label_propagation
 from linkgraph.algos.louvain import louvain_sync
+from linkgraph.algos.matching import maximal_matching
+from linkgraph.algos.mis import maximal_independent_set
 from linkgraph.algos.paths import (
     betweenness_centrality,
     bfs_distances,
@@ -180,6 +185,28 @@ def test_static_fixpoints_halve_their_jobs(spark, case):
     call(edges, 200)  # warm: the parquet scan's own jobs
     n = _jobs(spark, f"static{case}", lambda: call(edges, 200))
     assert n <= STATIC_JOBS_BEFORE[case] // 2
+
+
+# jobs of a warm call on edges_b(sf0.01) when each peel round checkpointed
+# its tables under AQE and counted them in jobs of their own (k-truss also
+# recounted the triangles of its edge set every round)
+PEEL_JOBS_BEFORE = {"ktruss": 203, "coloring": 942, "matching": 106, "densest": 87,
+                    "mis": 37}
+PEEL = {
+    "ktruss": lambda e: ktruss_edges(e, k=5, partitions=8),
+    "coloring": lambda e: jones_plassmann_coloring(e, partitions=8),
+    "matching": lambda e: maximal_matching(e, partitions=8),
+    "densest": lambda e: densest_subgraph(e, partitions=8),
+    "mis": lambda e: maximal_independent_set(e, partitions=8),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PEEL_JOBS_BEFORE))
+def test_peelers_halve_their_jobs(spark, case):
+    edges = edges_b(spark, "/root/testdata/sf0.01")
+    PEEL[case](edges)  # warm: the parquet scan's own jobs
+    n = _jobs(spark, f"peel{case}", lambda: PEEL[case](edges))
+    assert n <= PEEL_JOBS_BEFORE[case] // 2
 
 
 # jobs of a 2-superstep call when each set-up fact was a pass of its own
@@ -349,6 +376,10 @@ def _from_0(algo):
     *(pytest.param(_from_0(a), id=case) for case, (a, _, _) in FRONTIER.items()),
     strongly_connected_components, condensation_levels, truss_numbers, louvain_sync,
     pytest.param(lambda edges, **kw: ppr_push(edges, seed=0, **kw), id="pprpush"),
+    maximal_independent_set, jones_plassmann_coloring, maximal_matching, densest_subgraph,
+    pytest.param(lambda edges, **kw: kcore_vertices(edges, 2, **kw), id="kcore_vertices"),
+    pytest.param(lambda edges, **kw: ktruss_edges(edges, 3, **kw), id="ktruss_edges"),
+    connected_components_star,
 ])
 def test_kernel_null_id_raises(spark, algo):
     edges = spark.createDataFrame(

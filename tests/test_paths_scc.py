@@ -364,6 +364,22 @@ def test_ktruss_hand_case(spark):
     assert got == {(0, 1), (0, 2), (0, 3), (1, 2), (1, 3), (2, 3)}
 
 
+@pytest.mark.parametrize("graph", ["edges30", "pendant"])
+def test_ktruss_edges_is_the_trussness_cut(spark, edges30, graph):
+    """The k-truss is the edges of trussness >= k, for every k: a k <= 2
+    keeps the triangle-free edges (trussness 2) too."""
+    from linkgraph.algos.ktruss import ktruss_edges, truss_numbers
+
+    e = edges30 if graph == "edges30" else spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (2, 3)], "src long, dst long")
+    truss = {(r["a"], r["b"]): r["trussness"]
+             for r in truss_numbers(e, partitions=8)[0].collect()}
+    for k in range(1, 6):
+        got_e, _ = ktruss_edges(e, k=k, partitions=8)
+        assert {(r["a"], r["b"]) for r in got_e.collect()} == \
+            {ab for ab, t in truss.items() if t >= k}, k
+
+
 def test_bowtie_hand_case(spark):
     # in (10) -> core 3-cycle (0,1,2) -> out (20->21); tendril (30) hangs
     # off the in-vertex (10->30: unreachable from core, cannot reach it);
@@ -400,7 +416,8 @@ def test_bowtie_leaves_no_cached_plan(spark):
 
 
 def test_luby_mis_matches_sequential(spark, edges30, edge_rows):
-    from linkgraph.algos.mis import PRI_A, PRI_B, PRI_M, maximal_independent_set
+    from linkgraph.algos.gcommon import PRI_A, PRI_B, PRI_M
+    from linkgraph.algos.mis import maximal_independent_set
 
     mis_df, metrics = maximal_independent_set(edges30)
     got = {r["id"] for r in mis_df.collect()}
@@ -578,9 +595,8 @@ def test_condensation_levels_hand_case(spark):
 
 
 def test_maximal_matching_valid_and_matches_sequential(spark, edges30, edge_rows):
-    from linkgraph.algos.matching import (
-        PRI_A, PRI_B, PRI_M, maximal_matching,
-    )
+    from linkgraph.algos.gcommon import PRI_A, PRI_B, PRI_M
+    from linkgraph.algos.matching import maximal_matching
 
     m, metrics = maximal_matching(edges30)
     got = {(r["a"], r["b"]) for r in m.collect()}

@@ -143,9 +143,10 @@ def test_blocked_adjacency_bounded_and_complete(spark, hub_edges):
     """_blocked_adjacency never materializes a hub's adjacency in one row:
     max per-row array size stays ~block_size, block multiset == full
     neighbor multiset, and non-hub vertices keep one block."""
-    from linkgraph.algos.triangles import _blocked_adjacency, _oriented
+    from linkgraph.algos.gcommon import canonical
+    from linkgraph.algos.triangles import _blocked_adjacency
 
-    o = _oriented(hub_edges)
+    o = canonical(hub_edges)
     bs = 1024
     adj = _blocked_adjacency(o, block_size=bs).persist()
     sizes = adj.select(F.size("nbrs").alias("s"), "x").persist()
@@ -172,15 +173,11 @@ def test_blocked_pick_uniform_and_deterministic(spark):
     """The two-level pick is (a) deterministic across partition layouts and
     (b) uniform over candidates: picking from a 50-neighbor vertex with
     2000 hash-distinct draws covers all candidates roughly evenly."""
-    from linkgraph.algos.triangles import (
-        _blocked_adjacency,
-        _blocked_uniform_pick,
-        _oriented,
-        _u,
-    )
+    from linkgraph.algos.gcommon import canonical
+    from linkgraph.algos.triangles import _blocked_adjacency, _blocked_uniform_pick, _u
 
     edges = [(100, i) for i in range(50)]
-    o = _oriented(spark.createDataFrame(edges, "src long, dst long"))
+    o = canonical(spark.createDataFrame(edges, "src long, dst long"))
     adj = _blocked_adjacency(o, block_size=8).persist()  # forces 7 blocks
 
     st = spark.range(2000).select(
