@@ -40,7 +40,8 @@ def densest_subgraph(
     algo = "densest_subgraph"
 
     cur, _ = pin_canonical(edges, P, algo)
-    best_key, best_v = -1, None
+    # no edges: the first round sees V = 0, and the answer is empty
+    best_key, best_v = -1, cur.select(F.col("a").alias("id")).limit(0)
     metrics: list[dict] = []
 
     for rnd in range(max_rounds):

@@ -30,7 +30,14 @@ Set-up: every vertex program on the kernel (below) prepares its graph
 once, in one ``degree_table`` job.  Its start state, hub set (``Degrees.hubs``),
 PageRank's dangling flag (``out_degree == 0``) and mass (dangling / V)
 and its empty-graph test (V == 0) read that table or its pin's
-Observation; so does the sampled estimators' hub set.
+Observation; so does the sampled estimators' hub set.  The triangle
+family (exact triangles and their chain, star, cycle, clique, motif,
+graphlet and truss kin) prepares its graph once per call too: one
+``pin_canonical``, the call's only dedup, which also checks for null ids,
+and one ``degree_table`` over that pin with ``in_degree``, whose
+out_degree + in_degree is the undirected degree that ranks the wedge
+orientation (``triangles._pin`` and ``triangles._degrees``).  The
+sampled estimators index that same pin.
 
 Every vertex program on the kernel has one superstep shape: its pinned
 state joins ``agg(propagate(blocks, rep, state))``, and that is its only

@@ -48,9 +48,9 @@ def _incidence(e: DataFrame, P: int) -> DataFrame:
     carrying the OTHER two member edges' keys (o1a, o1b) and (o2a, o2b);
     pinned on the first of them, which a state pinned on (a, b) then
     joins with no exchange."""
-    from .triangles import triangles
+    from .triangles import _closed, _degrees, _orient
 
-    tri = triangles(e.select(F.col("a").alias("src"), F.col("b").alias("dst")))
+    tri = _closed(_orient(e, _degrees(e, P, "k-truss incidence")))
     x, y, z = "a", "b", "c"  # x < y < z by id
     cols = ["ea", "eb", "o1a", "o1b", "o2a", "o2b"]
     rows = [(x, y, x, z, y, z), (x, z, x, y, y, z), (y, z, x, y, x, z)]

@@ -11,22 +11,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import canonical
-from .triangles import (
-    triangle_count,
-    _rank_lt,
-    degree_ranked_oriented,
-)
+from .triangles import (_closed, _degrees, _orient, _per_vertex, _pin, _rank_lt, _sym,
+                        degree_ranked_oriented, triangle_count)
 
 
-def _und_degrees(edges: DataFrame) -> DataFrame:
-    o = canonical(edges)
-    return (
-        o.select(F.col("a").alias("id"))
-        .union(o.select(F.col("b").alias("id")))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
+def _pairs(deg: DataFrame) -> int:
+    """Σ_v C(d_v, 2) over the degree table ``deg`` (id, d)."""
+    row = deg.agg(F.sum(F.col("d") * (F.col("d") - 1) / 2).alias("n")).collect()[0]
+    return int(row["n"] or 0)
 
 
 def three_chain_count(edges: DataFrame) -> int:
@@ -35,24 +27,21 @@ def three_chain_count(edges: DataFrame) -> int:
     (/root/reference/sampling/Graph.cpp:212-239 counts the same quantity by
     enumeration; the closed form is one grouped agg + one scalar agg.)
     """
-    row = (
-        _und_degrees(edges)
-        .agg(F.sum(F.col("degree") * (F.col("degree") - 1) / 2).alias("n"))
-        .collect()[0]
-    )
-    return int(row["n"] or 0)
+    o, P = _pin(edges, "three_chain_count")
+    return _pairs(_degrees(o, P, "three_chain_count"))
 
 
 def k_star_count(edges: DataFrame, k: int = 5) -> int:
     """k-stars = sum_v C(deg_v, k) (5-star: /root/reference/sampling/Graph.cpp:281-291)."""
-    deg = _und_degrees(edges)
+    o, P = _pin(edges, "k_star_count")
+    deg = _degrees(o, P, "k_star_count")
     # C(d, k) computed in-column to stay JVM-side
     num = F.lit(1.0)
     for i in range(k):
-        num = num * (F.col("degree") - i)
+        num = num * (F.col("d") - i)
     import math
 
-    expr = F.when(F.col("degree") >= k, num / math.factorial(k)).otherwise(F.lit(0.0))
+    expr = F.when(F.col("d") >= k, num / math.factorial(k)).otherwise(F.lit(0.0))
     row = deg.agg(F.sum(expr).alias("n")).collect()[0]
     return int(round(row["n"] or 0))
 
@@ -62,19 +51,15 @@ def three_motif_counts(edges: DataFrame) -> dict[str, int]:
 
     The reference computes these together sharing the 2-edge partial sample
     (/root/reference/applications/ThreeMotif.cpp:42-122); exactly we share
-    the oriented edge list via caching.
+    one pinned edge table and its degree table.
     """
-    o = canonical(edges).persist()
-    try:
-        tri = triangle_count(o.select(F.col("a").alias("src"), F.col("b").alias("dst")))
-        chains = three_chain_count(
-            o.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        )
-        # a 3-chain that closes is a triangle; open chains = chains - 3*tri
-        return {"triangle": tri, "three_chain_open": chains - 3 * tri,
-                "three_chain_total": chains}
-    finally:
-        o.unpersist()
+    o, P = _pin(edges, "three_motif_counts")
+    deg = _degrees(o, P, "three_motif_counts")
+    tri = _closed(_orient(o, deg)).count()
+    chains = _pairs(deg)
+    # a 3-chain that closes is a triangle; open chains = chains - 3*tri
+    return {"triangle": tri, "three_chain_open": chains - 3 * tri,
+            "three_chain_total": chains}
 
 
 def four_chain_count(edges: DataFrame) -> int:
@@ -83,13 +68,10 @@ def four_chain_count(edges: DataFrame) -> int:
     Chained equi-joins with distinctness theta-filters — the Spark form of
     /root/reference/sampling/Graph.cpp:241-270 (ordered enumeration / 2).
     """
-    o = canonical(edges)
-    sym = o.select(F.col("a").alias("u"), F.col("b").alias("v")).union(
-        o.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    e1 = sym.select(F.col("u").alias("a"), F.col("v").alias("b"))
-    e2 = sym.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    e3 = sym.select(F.col("u").alias("c"), F.col("v").alias("d"))
+    sym = _sym(_pin(edges, "four_chain_count")[0])
+    e1 = sym.select(F.col("x").alias("a"), F.col("w").alias("b"))
+    e2 = sym.select(F.col("x").alias("b"), F.col("w").alias("c"))
+    e3 = sym.select(F.col("x").alias("c"), F.col("w").alias("d"))
     paths = (
         e1.join(e2, "b")
         .filter(F.col("a") != F.col("c"))
@@ -105,10 +87,8 @@ def four_clique_count(edges: DataFrame) -> int:
     Join-shape analogue of /root/reference/applications/FourClique.cpp:17-77
     (sample 3 edges, close the other 3) — exactly, via three closure joins.
     """
-    from .triangles import triangles
-
-    o = canonical(edges)
-    tri = triangles(o.select(F.col("a").alias("src"), F.col("b").alias("dst")))
+    o, P = _pin(edges, "four_clique_count")
+    tri = _closed(_orient(o, _degrees(o, P, "four_clique_count")))
     ext = o.select(F.col("a").alias("c"), F.col("b").alias("d"))  # d > c adjacency
     cand = tri.join(ext, "c")
     close_ab = o.select(F.col("a"), F.col("b").alias("d"))
@@ -172,16 +152,14 @@ def five_house_count(edges: DataFrame) -> int:
     Counted as injective homomorphisms over a spanning join tree with the
     two remaining edges checked via semi-joins, divided by |Aut|.
     """
-    o = canonical(edges)
-    sym = o.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    sym = _sym(_pin(edges, "five_house_count")[0])
 
-    e01 = sym.select(F.col("u").alias("v0"), F.col("v").alias("v1"))
-    e02 = sym.select(F.col("u").alias("v0"), F.col("v").alias("v2"))
-    e12 = sym.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    e13 = sym.select(F.col("u").alias("v1"), F.col("v").alias("v3"))
-    e24 = sym.select(F.col("u").alias("v2"), F.col("v").alias("v4"))
-    e34 = sym.select(F.col("u").alias("v3"), F.col("v").alias("v4"))
+    e01 = sym.select(F.col("x").alias("v0"), F.col("w").alias("v1"))
+    e02 = sym.select(F.col("x").alias("v0"), F.col("w").alias("v2"))
+    e12 = sym.select(F.col("x").alias("v1"), F.col("w").alias("v2"))
+    e13 = sym.select(F.col("x").alias("v1"), F.col("w").alias("v3"))
+    e24 = sym.select(F.col("x").alias("v2"), F.col("w").alias("v4"))
+    e34 = sym.select(F.col("x").alias("v3"), F.col("w").alias("v4"))
     # close the roof triangle FIRST (semi-join) so the walls only extend
     # triangle-anchored tuples — the intermediate is O(#triangles), not
     # O(sum deg^2): the selective predicate runs earliest (scale-critical)
@@ -225,18 +203,14 @@ def k_chain_count(edges: DataFrame, k: int) -> int:
     """
     if k < 2:
         raise ValueError("k >= 2")
-    o = canonical(edges)
-    sym = o.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    sym = _sym(_pin(edges, "k_chain_count")[0])
     cols = [f"v{i}" for i in range(k)]
-    cur = sym.select(F.col("u").alias(cols[0]), F.col("v").alias(cols[1]))
+    cur = sym.select(F.col("x").alias(cols[0]), F.col("w").alias(cols[1]))
     for i in range(2, k):
-        step = sym.select(F.col("u").alias(cols[i - 1]), F.col("v").alias(cols[i]))
+        step = sym.select(F.col("x").alias(cols[i - 1]), F.col("w").alias(cols[i]))
         cur = cur.join(step, cols[i - 1])
         for j in range(i - 1):
             cur = cur.filter(F.col(cols[i]) != F.col(cols[j]))
-    if k == 2:
-        return int(cur.count() // 2)
     return int(cur.count() // 2)
 
 
@@ -251,35 +225,30 @@ def graphlet_orbits(edges: DataFrame, vertices: DataFrame | None = None) -> Data
       o2 = C(deg(v), 2) - o3
       o1 = sum_{u in N(v)} (deg(u) - 1) - 2*o3
     (each triangle at v closes exactly one wedge centered at v and two
-    2-paths ending at v).  Cost: one degree groupBy, one neighbor-degree
-    join re-using the same src-hash shuffle key, plus
-    per_vertex_triangle_counts — all map-side combinable; scales with
-    edges + triangles, not with the (quadratic) wedge mass.
+    2-paths ending at v).  Cost: the family's one pinned edge table and
+    its degree table (``triangles._degrees``), one neighbor-degree join,
+    plus the per-vertex triangle counts over the same two tables — all
+    map-side combinable; scales with edges + triangles, not with the
+    (quadratic) wedge mass.
     """
-    from .triangles import per_vertex_triangle_counts
-
-    o = canonical(edges)
-    und = o.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    und = und.union(und.select(F.col("dst").alias("src"),
-                               F.col("src").alias("dst")))
-    deg = und.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    o, P = _pin(edges, "graphlet_orbits")
+    deg = _degrees(o, P, "graphlet_orbits")
     nbr_deg = (
-        und.join(deg.select(F.col("src").alias("dst"),
-                            F.col("deg").alias("ddeg")), "dst")
-        .groupBy("src")
-        .agg(F.sum(F.col("ddeg") - 1).alias("nd1"))
+        _sym(o).join(deg.select(F.col("id").alias("w"), "d"), "w")
+        .groupBy(F.col("x").alias("id"))
+        .agg(F.sum(F.col("d") - 1).alias("nd1"))
     )
-    tri = per_vertex_triangle_counts(edges).withColumnRenamed("id", "src")
+    tri = _per_vertex(_closed(_orient(o, deg)))
     base = (
-        deg.join(nbr_deg, "src", "left")
-        .join(tri, "src", "left")
+        deg.join(nbr_deg, "id", "left")
+        .join(tri, "id", "left")
         .select(
-            F.col("src").alias("id"),
-            F.col("deg").cast("long").alias("o0_degree"),
+            "id",
+            F.col("d").cast("long").alias("o0_degree"),
             (F.coalesce(F.col("nd1"), F.lit(0))
              - 2 * F.coalesce(F.col("triangles"), F.lit(0)))
             .cast("long").alias("o1_path_end"),
-            ((F.col("deg") * (F.col("deg") - 1) / 2).cast("long")
+            ((F.col("d") * (F.col("d") - 1) / 2).cast("long")
              - F.coalesce(F.col("triangles"), F.lit(0)))
             .cast("long").alias("o2_path_center"),
             F.coalesce(F.col("triangles"), F.lit(0))

@@ -25,8 +25,9 @@ Here the same declarative input compiles to an EXACT distributed count:
     EXISTS + pairwise distinctness) for the DuckDB parity oracle.
 
 Scale notes: every join keys on a single vertex column of the symmetric
-edge view (persisted once); Spark's map-side partial agg absorbs the final
-count; AQE handles skewed hub vertices for the extension joins.
+view of one pinned canonical edge table; Spark's map-side partial agg
+absorbs the final count; AQE handles skewed hub vertices for the
+extension joins.
 """
 
 from __future__ import annotations
@@ -36,8 +37,7 @@ from itertools import permutations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import canonical
-from .triangles import _indexed, _pick_mod, _sym, _u
+from .triangles import _indexed, _pick_mod, _pin, _sym, _u
 
 Edge = tuple[int, int]
 
@@ -115,27 +115,21 @@ def pattern_count(edges: DataFrame, pattern: list[Edge]) -> int:
     ``edges`` = injective homomorphisms / |Aut|."""
     aut = automorphisms(pattern)
     steps = plan_pattern(pattern)
-    o = canonical(edges)
-    sym = o.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    sym = sym.union(sym.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
-    try:
-        kind, u0, v0 = steps[0]
-        cur = sym.select(F.col("u").alias(f"v{u0}"), F.col("v").alias(f"v{v0}"))
-        bound = [u0, v0]
-        for kind, a, b in steps[1:]:
-            if kind == "close":
-                probe = sym.select(F.col("u").alias(f"v{a}"), F.col("v").alias(f"v{b}"))
-                cur = cur.join(probe, [f"v{a}", f"v{b}"], "left_semi")
-            else:  # extend: a bound, b new
-                step_df = sym.select(F.col("u").alias(f"v{a}"), F.col("v").alias(f"v{b}"))
-                cur = cur.join(step_df, f"v{a}")
-                for x in bound:
-                    if x != a:
-                        cur = cur.filter(F.col(f"v{b}") != F.col(f"v{x}"))
-                bound.append(b)
-        homs = cur.count()
-    finally:
-        sym.unpersist()
+    sym = _sym(_pin(edges, "pattern_count")[0])
+    kind, u0, v0 = steps[0]
+    cur = sym.select(F.col("x").alias(f"v{u0}"), F.col("w").alias(f"v{v0}"))
+    bound = [u0, v0]
+    for kind, a, b in steps[1:]:
+        step_df = sym.select(F.col("x").alias(f"v{a}"), F.col("w").alias(f"v{b}"))
+        if kind == "close":
+            cur = cur.join(step_df, [f"v{a}", f"v{b}"], "left_semi")
+        else:  # extend: a bound, b new
+            cur = cur.join(step_df, f"v{a}")
+            for x in bound:
+                if x != a:
+                    cur = cur.filter(F.col(f"v{b}") != F.col(f"v{x}"))
+            bound.append(b)
+    homs = cur.count()
     assert homs % aut == 0, (homs, aut)
     return homs // aut
 
@@ -402,7 +396,6 @@ def pattern_count_sampled(
     ).collect()[0]["t"]
     for df in cached:
         df.unpersist()
-    o.unpersist()
     return float(m) * float(total) / float(num_estimators)
 
 

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .gcommon import DEFAULT_BLOCK_SIZE, canonical, degree_table, hub_split
+from .gcommon import DEFAULT_BLOCK_SIZE, degree_table, hub_split, pin_canonical, pin_checkpoint
 
 _U_DENOM = float(1 << 40)
 
@@ -52,8 +52,9 @@ def _u(*cols: Column | str, seed: int) -> Column:
 
 def _pick_mod(col: Column | str, m: int, seed: int) -> Column:
     """Deterministic uniform integer in [0, m): xxhash64 mod m (modulo bias
-    ~m/2^64 — immaterial)."""
-    return F.pmod(F.xxhash64(col, F.lit(seed)), F.lit(int(m))).cast("long")
+    ~m/2^64 — immaterial).  m = 0 (an edge-free graph) picks 0, which
+    indexes no edge, so every trial has weight 0."""
+    return F.pmod(F.xxhash64(col, F.lit(seed)), F.lit(max(int(m), 1))).cast("long")
 
 
 def conditional_sample_vertex(
@@ -106,24 +107,45 @@ def conditional_sample_vertex(
     )
 
 
+def _pin(edges: DataFrame, algo: str) -> tuple[DataFrame, int]:
+    """(o, P): the id-canonical edges pinned on ``a`` at the session's P
+    (``gcommon.pin_canonical``): a call's one dedup, with a null id
+    raising ``ValueError`` where ``canonical``'s ``a != b`` filter would
+    drop the edge silently."""
+    P = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return pin_canonical(edges, P, algo)[0], P
+
+
+def _degrees(o: DataFrame, P: int, algo: str) -> DataFrame:
+    """(id, d): each vertex's degree in the pinned canonical edges ``o``,
+    that of the undirected simple graph: one ``gcommon.degree_table`` pin,
+    d = out_degree + in_degree.  The dedup costs no exchange (the table is
+    pinned on id) and tells the planner that ids are unique: otherwise it
+    estimates each join with the table as the product of its sides, and
+    plans the wedge joins downstream as sort-merge joins."""
+    view = o.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    t = degree_table(view, P, algo, in_degree=True).table
+    return t.select("id", (F.col("out_degree") + F.col("in_degree")).alias("d")) \
+        .dropDuplicates(["id"])
+
+
 def _indexed(
     edges: DataFrame, P: int, seed: int | None = None
 ) -> tuple[DataFrame, int]:
-    """(o, m): the id-canonical edge list (``gcommon.canonical``, the edge
-    identity of the uniform edge picks and closure probes; wedges use
-    :func:`degree_ranked_oriented`) with each edge's
-    dense index ``id``, persisted, and m its row count; with ``seed`` also
-    its hash id ``eid``.  The index ranks the ``a_b`` string key
+    """(o, m): the id-canonical edge list pinned (``gcommon.pin_canonical``,
+    the edge identity of the uniform edge picks and closure probes; wedges
+    use :func:`degree_ranked_oriented`) with each edge's dense index
+    ``id``, pinned again, and m its row count; with ``seed`` also its hash
+    id ``eid``.  The index ranks the ``a_b`` string key
     (``ingest.dense_ids``, a global rank at any P): the uniform edge picks,
     and with them the estimates, depend on that order."""
     from ..ingest import dense_ids
 
-    o = canonical(edges)
+    o, m = pin_canonical(edges, P, "sampled estimator")
     if seed is not None:
         o = o.withColumn("eid", F.xxhash64(F.col("a"), F.col("b"), F.lit(seed)))
     o = o.withColumn("_key", F.concat_ws("_", "a", "b"))
-    o = o.join(dense_ids(o.select("_key"), "_key", P), "_key").drop("_key").persist()
-    return o, o.count()
+    return pin_checkpoint(o.join(dense_ids(o.select("_key"), "_key", P), "_key").drop("_key")), m
 
 
 def _sym(o: DataFrame, *payload: Column | str) -> DataFrame:
@@ -150,47 +172,35 @@ def degree_ranked_oriented(
     task's join key).  Same counting semantics: (degree, id) is a total
     order, so every triangle/wedge is still generated exactly once.
 
-    Cost of the ranking itself: one V-row degree aggregation (map-side
-    combinable) plus two E-row hash joins against it — a one-time linear
-    pass, paid before the superlinear wedge stage it bounds.
+    Set-up (the triangle family's one preparation pass): the canonical
+    edges pinned once (:func:`_pin`) and their degree table pinned once
+    (:func:`_degrees`), then two E-row hash joins against it — a one-time
+    linear pass, paid before the superlinear wedge stage it bounds.
 
     ``rank`` (id, d) supplies a precomputed STATIC order (any fixed total
     order generates each wedge exactly once); None computes the degrees of
     ``edges`` itself.
     """
-    und = canonical(edges)
-    deg = rank
-    if deg is None:
-        deg = (
-            und.select(F.col("a").alias("id"))
-            .union(und.select(F.col("b").alias("id")))
-            .groupBy("id")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
+    o, P = _pin(edges, "degree_ranked_oriented")
+    return _orient(o, _degrees(o, P, "degree_ranked_oriented") if rank is None else rank)
+
+
+def _orient(o: DataFrame, deg: DataFrame) -> DataFrame:
+    """:func:`degree_ranked_oriented` of the pinned canonical edges ``o``
+    ranked by ``deg`` (id, d)."""
     # shuffle-hash hints: measured faster than letting the planner choose
     # (interleaved A/B at sf0.1: ~5.1s vs ~6.9s per triangle count), and
     # at web scale they keep the two one-time E-row joins off the
-    # sort-merge path; the build side is the V-row degree table
-    j = und.join(
-        deg.select(F.col("id").alias("a"), F.col("d").alias("da")).hint(
-            "shuffle_hash"
-        ),
-        "a",
-    ).join(
-        deg.select(F.col("id").alias("b"), F.col("d").alias("db")).hint(
-            "shuffle_hash"
-        ),
-        "b",
-    )
-    a_low = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    return j.select(
-        F.when(a_low, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(a_low, F.col("b")).otherwise(F.col("a")).alias("hi"),
-        F.when(a_low, F.col("da")).otherwise(F.col("db")).alias("dlo"),
-        F.when(a_low, F.col("db")).otherwise(F.col("da")).alias("dhi"),
-    )
+    # sort-merge path; the build side is the V-row degree table, pinned
+    # on id like ``o`` on a, so the join on a needs no exchange
+    def end(k: str) -> DataFrame:
+        return deg.select(F.col("id").alias(k), F.col("d").alias("d" + k)).hint("shuffle_hash")
+
+    j = o.join(end("a"), "a").join(end("b"), "b")
+    a_low = _rank_lt(F.col("da"), F.col("a"), F.col("db"), F.col("b"))
+    pairs = [("a", "b", "lo"), ("b", "a", "hi"), ("da", "db", "dlo"), ("db", "da", "dhi")]
+    return j.select(*(F.when(a_low, F.col(x)).otherwise(F.col(y)).alias(n)
+                      for x, y, n in pairs))
 
 
 def _rank_lt(d1: Column, v1: Column, d2: Column, v2: Column) -> Column:
@@ -321,17 +331,19 @@ def triangles(edges: DataFrame, rank: DataFrame | None = None) -> DataFrame:
     id-oriented plan (/root/reference/naive_implementation/
     TriangleCounting.cpp:44-70 is the semantics oracle).  ``rank``
     forwards a precomputed static order to degree_ranked_oriented."""
-    # lazy localCheckpoint: the ranking subtree (dedup + degree agg + two
-    # E-row joins) feeds THREE join branches below; without it Spark
-    # re-evaluates the whole subtree per branch (no common-subplan reuse
-    # across joins), tripling the linear pre-pass.  Materializes once on
-    # the first action, reused by all branches, freed by the
-    # ContextCleaner when the result goes out of scope.
-    o = (
-        degree_ranked_oriented(edges, rank)
-        .select("lo", "hi", "dhi")
-        .localCheckpoint(eager=False)
-    )
+    return _closed(degree_ranked_oriented(edges, rank))
+
+
+def _closed(oriented: DataFrame) -> DataFrame:
+    """:func:`triangles` of a ranked orientation (lo, hi, dlo, dhi)."""
+    # lazy localCheckpoint: the orientation (two E-row joins over the
+    # pinned edges and degrees) feeds THREE join branches below; without
+    # it Spark re-evaluates it per branch.  Materializes once on the
+    # first action, reused by all branches, freed by the ContextCleaner
+    # when the result goes out of scope.  On hub-rmat both the wedge join
+    # and the closing probe then run as broadcast joins: no stage shuffles
+    # the wedge rows.
+    o = oriented.select("lo", "hi", "dhi").localCheckpoint(eager=False)
     w1 = o.select("lo", F.col("hi").alias("p"), F.col("dhi").alias("dp"))
     w2 = o.select("lo", F.col("hi").alias("q"), F.col("dhi").alias("dq"))
     wedges = (
@@ -352,9 +364,13 @@ def triangles(edges: DataFrame, rank: DataFrame | None = None) -> DataFrame:
 
 def per_vertex_triangle_counts(edges: DataFrame) -> DataFrame:
     """(id, triangles) — number of triangles each vertex participates in."""
-    t = triangles(edges)
+    return _per_vertex(triangles(edges))
+
+
+def _per_vertex(tri: DataFrame) -> DataFrame:
+    """(id, triangles) of the triangle triples ``tri`` (a, b, c)."""
     return (
-        t.select(F.explode(F.array("a", "b", "c")).alias("id"))
+        tri.select(F.explode(F.array("a", "b", "c")).alias("id"))
         .groupBy("id")
         .agg(F.count(F.lit(1)).alias("triangles"))
     )
@@ -399,7 +415,6 @@ def three_chain_count_sampled(
     total_c = c_per_est.agg(
         F.coalesce(F.sum(F.col("c").cast("double")), F.lit(0.0))
     ).collect()[0][0]
-    o.unpersist()
     return float(m) * float(total_c) / float(num_estimators)
 
 
@@ -456,7 +471,6 @@ def four_chain_count_sampled(
         F.col("a3") != F.col("d"), F.col("cu").cast("double") * F.col("cv")
     ).otherwise(F.lit(0.0))
     total = both.agg(F.coalesce(F.sum(w), F.lit(0.0)).alias("s")).collect()[0]["s"]
-    ok.unpersist()
     adj.unpersist()
     return float(m) * float(total) / float(num_estimators)
 
@@ -611,7 +625,6 @@ def four_chain_count_sampled_multiplan(
     total = picked2.agg(
         F.coalesce(F.sum(w), F.lit(0.0)).alias("s")
     ).collect()[0]["s"]
-    ok.unpersist()
     adj.unpersist()
     return float(mix) * float(m) * float(total) / float(num_estimators)
 
@@ -678,7 +691,6 @@ def k_chain_count_sampled(
     total = cur.agg(
         F.coalesce(F.sum("wprod"), F.lit(0.0)).alias("s")
     ).collect()[0]["s"]
-    ok.unpersist()
     adj.unpersist()
     # weight 2m*prod(c) for an ordered path, / 2 for unordered: the twos
     # cancel to m * mean(prod(c))
@@ -742,7 +754,6 @@ def three_motif_sampled(
     )
     tri_matches = closed.count()
     cand.unpersist()
-    o.unpersist()
     return (
         float(m) * float(tri_matches) / float(num_estimators),
         float(m) * float(chain_total) / float(num_estimators),
@@ -812,7 +823,6 @@ def triangle_count_sampled(
             o.select("a", "b", F.col("eid").alias("eid3")), ["a", "b"]
         ).filter(F.col("eid3") > F.col("eid2"))
         matches = closed_rb.count()
-        o.unpersist()
         return float(m) * float(matches) / float(num_estimators)
     # uniform pick per estimator via max over a random key (one grouped agg,
     # map-side partial) — replaces the reference's per-thread RNG choice
@@ -856,6 +866,5 @@ def triangle_count_sampled(
     total_success = closed.agg(
         F.coalesce(F.sum(F.col("c").cast("double")), F.lit(0.0)).alias("s")
     ).collect()[0]["s"]
-    o.unpersist()
     # mean over ALL estimators (failures contribute 0), scaled by m
     return float(m) * float(total_success) / float(num_estimators)

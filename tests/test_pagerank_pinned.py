@@ -40,6 +40,19 @@ from linkgraph.algos.labelprop import label_propagation
 from linkgraph.algos.louvain import louvain_sync
 from linkgraph.algos.matching import maximal_matching
 from linkgraph.algos.mis import maximal_independent_set
+from linkgraph.algos.motifs import (
+    four_chain_count,
+    four_clique_count,
+    four_cycle_count,
+    five_house_count,
+    graphlet_orbits,
+    k_chain_count,
+    k_star_count,
+    three_chain_count,
+    three_motif_counts,
+)
+from linkgraph.algos.msf import boruvka_msf
+from linkgraph.algos.patterns import PATTERNS, pattern_count
 from linkgraph.algos.paths import (
     betweenness_centrality,
     bfs_distances,
@@ -52,6 +65,12 @@ from linkgraph.algos.pprmulti import multi_seed_ppr
 from linkgraph.algos.pprpush import ppr_push
 from linkgraph.algos.salsa import salsa
 from linkgraph.algos.scc import condensation_levels, strongly_connected_components
+from linkgraph.algos.triangles import (
+    per_vertex_triangle_counts,
+    three_motif_sampled,
+    triangle_count,
+    triangle_count_sampled,
+)
 from linkgraph.algos.voronoi import nearest_seed_partition
 from linkgraph.algos.wl import wl_refinement
 from linkgraph.suite import edges_b
@@ -352,6 +371,7 @@ def _no_metrics(algo):
     (_no_metrics(hyperball), {}, ["sum_int", "ball_e6"]),
     (core_numbers, {}, ["core"]),
     (_no_metrics(wl_refinement), {}, ["color"]),
+    (densest_subgraph, {}, ["density_e9"]),
 ])
 def test_pagerank_empty_edges(spark, mode):
     algo, kw, cols = mode
@@ -360,6 +380,59 @@ def test_pagerank_empty_edges(spark, mode):
     assert metrics == []
     assert ranks.columns == ["id", *cols]
     assert ranks.count() == 0
+
+
+def _whole(algo):
+    """``algo``, which takes no ``partitions``, called on the edges alone."""
+    return lambda edges, **kw: algo(edges)
+
+
+# the triangle family on a graph with no simple edge: each count is 0 and
+# each frame empty
+TRIANGLE_FAMILY = {
+    "triangle_count": (triangle_count, 0),
+    "per_vertex_triangle_counts": (per_vertex_triangle_counts, None),
+    "four_cycle_count": (four_cycle_count, 0),
+    "three_motif_counts": (three_motif_counts, {
+        "triangle": 0, "three_chain_open": 0, "three_chain_total": 0}),
+    "three_chain_count": (three_chain_count, 0),
+    "k_star_count": (k_star_count, 0),
+    "graphlet_orbits": (graphlet_orbits, None),
+    "four_chain_count": (four_chain_count, 0),
+    "four_clique_count": (four_clique_count, 0),
+    "five_house_count": (five_house_count, 0),
+    "k_chain_count": (lambda e: k_chain_count(e, 4), 0),
+    "pattern_count": (lambda e: pattern_count(e, PATTERNS["four_cycle"]), 0),
+    "triangle_count_sampled": (lambda e: triangle_count_sampled(e, 64, partitions=8), 0.0),
+    "three_motif_sampled": (lambda e: three_motif_sampled(e, 64, partitions=8), (0.0, 0.0)),
+    "truss_numbers": (lambda e: truss_numbers(e, partitions=8)[0], None),
+}
+
+
+@pytest.mark.parametrize("rows", [[], [(1, 1), (1, 1), (2, 2)]], ids=["empty", "loops"])
+@pytest.mark.parametrize("case", sorted(TRIANGLE_FAMILY))
+def test_triangle_family_degenerate_inputs(spark, case, rows):
+    """An empty edge table, and one of only self-loops and their
+    duplicates, have no simple edge: 0, all-zero counts or an empty frame."""
+    algo, want = TRIANGLE_FAMILY[case]
+    got = algo(spark.createDataFrame(rows, "src long, dst long"))
+    if want is None:
+        assert got.count() == 0
+    else:
+        assert got == want
+
+
+# jobs of triangle_count on the rmat fixture when the degree aggregation
+# and the join base each re-read an unpinned canonical dedup
+TRIANGLE_JOBS_BEFORE = 13
+
+
+def test_triangle_count_prepares_once(spark, rmat):
+    """One pinned canonical edge table and one degree table per call: at
+    least 2 jobs fewer than the separate passes."""
+    assert spark.conf.get(AQE) == "true"
+    n = _jobs(spark, "triangles", lambda: triangle_count(rmat))
+    assert n <= TRIANGLE_JOBS_BEFORE - 2
 
 
 def _from_0(algo):
@@ -380,6 +453,18 @@ def _from_0(algo):
     pytest.param(lambda edges, **kw: kcore_vertices(edges, 2, **kw), id="kcore_vertices"),
     pytest.param(lambda edges, **kw: ktruss_edges(edges, 3, **kw), id="ktruss_edges"),
     connected_components_star,
+    *(pytest.param(_whole(a), id=case) for case, a in [
+        ("triangle_count", triangle_count),
+        ("per_vertex_triangle_counts", per_vertex_triangle_counts),
+        ("four_cycle_count", four_cycle_count),
+        ("three_motif_counts", three_motif_counts),
+        ("graphlet_orbits", graphlet_orbits),
+    ]),
+    pytest.param(lambda edges, **kw: triangle_count_sampled(edges, 64, **kw),
+                 id="triangle_count_sampled"),
+    pytest.param(lambda edges, **kw: boruvka_msf(
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"),
+                     F.col("weight").alias("w")), **kw), id="boruvka_msf"),
 ])
 def test_kernel_null_id_raises(spark, algo):
     edges = spark.createDataFrame(
